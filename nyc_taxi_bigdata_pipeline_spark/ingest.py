@@ -12,7 +12,7 @@ overwrite) so Catalyst prunes partitions from filters automatically
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .functions.datetime_parity import month_window
 from .schema import TRIPS_RAW_COLUMNS
@@ -104,15 +104,13 @@ def ingest_month(
     """One month of ex02: clean + write + retention counts.
 
     Returns {'rows_in', 'rows_out'} for the quality layer's retention
-    gate (full_pipeline_dag.py:130-181). The cleaned frame is persisted
-    before the count+write fan-out, mirroring the reference's
-    persist-before-dual-write (Ex02DataIngestion.scala:111).
+    gate (full_pipeline_dag.py:130-181). Both counts are observed on
+    the single silver write, so the raw rows are read once; the
+    reference instead persists the cleaned frame and counts it before
+    writing (Ex02DataIngestion.scala:111).
     """
-    rows_in = raw_df.count()
-    cleaned = clean_month(raw_df, year, month).persist()
-    try:
-        rows_out = cleaned.count()
-        write_silver(cleaned, silver_path, year, month)
-    finally:
-        cleaned.unpersist()
-    return {"rows_in": rows_in, "rows_out": rows_out}
+    seen_in, seen_out = Observation(), Observation()
+    rows = F.count(F.lit(1)).alias("n")
+    cleaned = clean_month(raw_df.observe(seen_in, rows), year, month)
+    write_silver(cleaned.observe(seen_out, rows), silver_path, year, month)
+    return {"rows_in": seen_in.get["n"], "rows_out": seen_out.get["n"]}

@@ -1,10 +1,14 @@
 """GBT fare-prediction pipeline (ex05 parity, ``trainer.py:78-152``).
 
-M1-M8: 6× StringIndexer → 6× OneHotEncoder → VectorAssembler →
+M1-M8: StringIndexer → OneHotEncoder → VectorAssembler →
 GBTRegressor(maxDepth=6, maxIter=50, seed=42), evaluated with
-RMSE/MAE/R². The encoder stack sits behind ``build_pipeline`` so a
-hash/target encoder can replace OHE at 100-TB cardinalities
-(SURVEY §7.4).
+RMSE/MAE/R². The reference's per-column indexer/encoder pairs are one
+multi-column StringIndexer and one multi-column OneHotEncoder here: the
+same ``<col>_idx``/``<col>_ohe`` columns and labels, but one label-count
+pass at fit time instead of one per column, and a 4-stage model for the
+registry to save instead of 14. The encoder stack sits behind
+``build_pipeline`` so a hash/target encoder can replace OHE at 100-TB
+cardinalities (SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -32,13 +36,15 @@ def build_pipeline(
     max_depth: int = GBT_MAX_DEPTH,
     max_iter: int = GBT_MAX_ITER,
 ) -> Pipeline:
-    indexers = [
-        StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
-        for c in categorical
-    ]
-    encoders = [
-        OneHotEncoder(inputCol=f"{c}_idx", outputCol=f"{c}_ohe") for c in categorical
-    ]
+    indexer = StringIndexer(
+        inputCols=list(categorical),
+        outputCols=[f"{c}_idx" for c in categorical],
+        handleInvalid="keep",
+    )
+    encoder = OneHotEncoder(
+        inputCols=[f"{c}_idx" for c in categorical],
+        outputCols=[f"{c}_ohe" for c in categorical],
+    )
     assembler = VectorAssembler(
         inputCols=[f"{c}_ohe" for c in categorical] + list(numeric),
         outputCol="features",
@@ -51,7 +57,7 @@ def build_pipeline(
         maxIter=max_iter,
         seed=SEED,
     )
-    return Pipeline(stages=[*indexers, *encoders, assembler, gbt])
+    return Pipeline(stages=[indexer, encoder, assembler, gbt])
 
 
 @dataclass

@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from . import ingest, quality, warehouse
-from .functions.datetime_parity import sliding_months
+from .functions.datetime_parity import month_window, sliding_months
 from .sources.fs import hadoop_path_exists
 from .ml.features import build_feature_table
 from .ml.registry import ModelRegistry
@@ -65,7 +65,13 @@ def run_month(
     # driver's local disk
     existing = None
     if hadoop_path_exists(spark, fact_path):
-        existing = spark.read.parquet(fact_path)
+        # clean_month keeps only in-month pickups and pickup_date is part
+        # of the natural key, so no other month's row can match
+        start, end = month_window(year, month)
+        existing = spark.read.parquet(fact_path).filter(
+            (F.col("pickup_date") >= F.lit(start).cast("date"))
+            & (F.col("pickup_date") < F.lit(end).cast("date"))
+        )
     new_rows = warehouse.load_fact_idempotent(fact_incoming, existing)
     new_rows.write.mode("append").parquet(fact_path)
 
@@ -98,16 +104,15 @@ def _merge_existing_dim(
     spark: SparkSession, new_dim: DataFrame, path: str, key: str
 ) -> DataFrame:
     """Insert-if-absent dim merge: carry forward existing dim rows whose
-    key the new build didn't observe. The carried rows are collected
-    (dims are bounded by design — zone count / calendar days), which
-    also breaks the read-from-path → overwrite-same-path cycle."""
+    key the new build didn't observe. The eager local checkpoint
+    materializes the merge (dims are bounded by design — zone count /
+    calendar days) and cuts its lineage, which breaks the
+    read-from-path → overwrite-same-path cycle."""
     if not hadoop_path_exists(spark, path):
         return new_dim
     old = spark.read.parquet(path)
-    carried = old.join(new_dim.select(key), [key], "left_anti").collect()
-    if not carried:
-        return new_dim
-    return new_dim.unionByName(spark.createDataFrame(carried, old.schema))
+    carried = old.join(new_dim.select(key), [key], "left_anti")
+    return new_dim.unionByName(carried).localCheckpoint(eager=True)
 
 
 def backfill(

@@ -58,8 +58,40 @@ BUILD_CONFS: dict[str, str] = {
 }
 
 
+DEFAULT_HEAP_GB = 32
+# share of the host's memory the driver heap may take; the JVM needs
+# off-heap room too (metaspace, direct buffers, Arrow/Python workers)
+HOST_HEAP_FRACTION = 0.6
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def driver_heap_mb(requested_gb: str | None, meminfo: str | None, cgroup_max: str | None) -> int:
+    """Driver heap in MB: ``requested_gb`` (default 32) capped at 60 % of
+    the smaller of ``/proc/meminfo``'s MemTotal and the cgroup v2
+    ``memory.max`` limit, given as those files' text (None when
+    unreadable; a ``max`` limit means none)."""
+    heap_mb = float(requested_gb or DEFAULT_HEAP_GB) * 1024
+    limits = [
+        int(line.split()[1]) * 1024
+        for line in (meminfo or "").splitlines()
+        if line.startswith("MemTotal:")
+    ]
+    if cgroup_max and cgroup_max.strip() != "max":
+        limits.append(int(cgroup_max))
+    if limits:
+        heap_mb = min(heap_mb, HOST_HEAP_FRACTION * min(limits) / 2**20)
+    return int(heap_mb)
+
+
+def _read_text(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
 
 
 def get_spark(
@@ -75,12 +107,17 @@ def get_spark(
 
     Driver memory: in local mode the driver JVM IS every executor, and
     Spark's 1g default chokes a 32-thread run (GCLocker stalls, codegen
-    compiler failures) long before data size is the problem. Sized from
-    SPARK_GRAFT_MEM_GB (default 32g, only applied when this process is
-    about to launch the JVM — existing sessions can't be resized).
+    compiler failures) long before data size is the problem. Sized by
+    ``driver_heap_mb`` from SPARK_GRAFT_MEM_GB (default 32g), capped to
+    what the host can hold; only applied when this process is about to
+    launch the JVM — existing sessions can't be resized.
     """
     cpus = default_parallelism()
-    mem_gb = os.environ.get("SPARK_GRAFT_MEM_GB", "32")
+    heap_mb = driver_heap_mb(
+        os.environ.get("SPARK_GRAFT_MEM_GB"),
+        _read_text("/proc/meminfo"),
+        _read_text("/sys/fs/cgroup/memory.max"),
+    )
     # the preload daemon module (BUILD_CONFS) must be importable by the
     # worker daemon, whose PYTHONPATH comes from the JVM's environment —
     # which inherits THIS process's env at gateway launch. sys.path
@@ -95,7 +132,7 @@ def get_spark(
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.driver.memory", f"{mem_gb}g")
+        .config("spark.driver.memory", f"{heap_mb}m")
         .config("spark.driver.maxResultSize", "4g")
     )
     for k, v in {**BUILD_CONFS, **(extra_confs or {})}.items():

@@ -21,6 +21,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import anti_dup_append
+from ..sources.fs import hadoop_path_exists
 
 
 def enrich_stream(events: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
@@ -51,14 +52,15 @@ def foreach_batch_upsert(
     """Write a stream into a parquet gold table idempotently: every
     micro-batch is left-anti-joined against the current table on the
     natural key before appending — re-delivered batches (failure/retry)
-    insert nothing the second time."""
+    insert nothing the second time. Only an absent table counts as the
+    first batch: a read error on an existing table fails the batch
+    rather than appending it without the anti-dup join."""
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        try:
+        existing = None
+        if hadoop_path_exists(spark, gold_path):
             existing = spark.read.parquet(gold_path)
-        except Exception:  # first batch: table does not exist yet
-            existing = None
         fresh = anti_dup_append(batch, existing, natural_key)
         fresh.write.mode("append").parquet(gold_path)
 

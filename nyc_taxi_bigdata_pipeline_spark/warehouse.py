@@ -12,6 +12,7 @@ dim_time ≤ 1440) — every fact→dim join in analytics broadcasts.
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,15 +32,19 @@ PICKUP = "tpep_pickup_datetime"
 
 
 def seed_enum_dims(spark: SparkSession) -> dict[str, DataFrame]:
-    """Reference enum dimensions (dw_load_reference.sql:1-29)."""
+    """Reference enum dimensions (dw_load_reference.sql:1-29). Built from
+    pandas so the rows travel as Arrow: a ``createDataFrame(list)`` runs
+    through a Python RDD and forks the Python worker pool."""
     return {
         "dim_payment_type": spark.createDataFrame(
-            PAYMENT_TYPES, "payment_type_id int, payment_description string"
+            pd.DataFrame(PAYMENT_TYPES), "payment_type_id int, payment_description string"
         ),
         "dim_ratecode": spark.createDataFrame(
-            RATECODES, "ratecode_id int, ratecode_description string"
+            pd.DataFrame(RATECODES), "ratecode_id int, ratecode_description string"
         ),
-        "dim_vendor": spark.createDataFrame(VENDORS, "vendor_id int, vendor_name string"),
+        "dim_vendor": spark.createDataFrame(
+            pd.DataFrame(VENDORS), "vendor_id int, vendor_name string"
+        ),
     }
 
 
@@ -134,8 +139,11 @@ def load_fact_idempotent(incoming_fact: DataFrame, existing_fact: DataFrame | No
     """J6: ON CONFLICT DO NOTHING on the composite natural key
     (indexes.sql:30-37). Returns only the NEW rows to append.
 
-    At scale: callers should prune ``existing_fact`` to the loaded
-    month's partitions before passing it here, so the anti join's
-    build side stays month-sized.
+    ``existing_fact`` may be pruned to the loaded month: the natural
+    key holds ``pickup_date``, so rows of other months never match.
+    ``pipeline.run_month`` passes the fact filtered to the month's
+    ``pickup_date`` range, which lets parquet min/max statistics skip
+    other months' files and keeps the anti join O(month), not
+    O(history).
     """
     return anti_dup_append(incoming_fact, existing_fact, FACT_NATURAL_KEY)

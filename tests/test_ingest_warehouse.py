@@ -122,6 +122,28 @@ def test_clean_month_wrong_month_window(spark, raw_month):
     assert ingest.clean_month(raw_month, 2024, 6).count() == 0
 
 
+def test_ingest_month_observed_counts_with_no_rows_out(spark, raw_month, tmp_path):
+    """The counts are observed on the silver write, so they must still
+    arrive when the write has no rows: an empty raw frame, and a month
+    window nowhere near the data."""
+    import threading
+
+    def ingest_within(raw, year, month, seconds=120):
+        out = {}
+        t = threading.Thread(
+            target=lambda: out.update(r=ingest.ingest_month(
+                spark, raw, str(tmp_path / f"silver{year}"), year, month)),
+            daemon=True,
+        )
+        t.start()
+        t.join(seconds)
+        assert not t.is_alive(), "ingest_month did not return"
+        return out["r"]
+
+    assert ingest_within(raw_month.limit(0), 2023, 1) == {"rows_in": 0, "rows_out": 0}
+    assert ingest_within(raw_month, 2024, 6) == {"rows_in": raw_month.count(), "rows_out": 0}
+
+
 def test_fact_load_with_duplicated_raw(spark, raw_month):
     """At-least-once upstream delivery: doubling the raw feed must not
     double the fact table (NK dedup inside the batch)."""

@@ -49,6 +49,34 @@ def test_train_and_evaluate(trained):
     assert trained.train_rows > 0 and trained.test_rows > 0
 
 
+def test_multi_column_encoders_match_per_column_stack(feature_frames):
+    """build_pipeline's one multi-column StringIndexer + OneHotEncoder
+    must give the labels and model metrics of the reference's per-column
+    stack (6× StringIndexer → 6× OneHotEncoder)."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import OneHotEncoder, StringIndexer
+
+    from nyc_taxi_bigdata_pipeline_spark.schema import ML_CATEGORICAL
+
+    tr, te = feature_frames
+    new = train.build_pipeline(max_iter=2)
+    assert len(new.getStages()) == 4
+    assembler, gbt = new.getStages()[2:]
+    per_column = Pipeline(stages=[
+        *[StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
+          for c in ML_CATEGORICAL],
+        *[OneHotEncoder(inputCol=f"{c}_idx", outputCol=f"{c}_ohe") for c in ML_CATEGORICAL],
+        assembler,
+        gbt,
+    ])
+    new_model, old_model = new.fit(tr), per_column.fit(tr)
+    n = len(ML_CATEGORICAL)
+    assert [list(a) for a in new_model.stages[0].labelsArray] == [
+        old_model.stages[i].labels for i in range(n)
+    ]
+    assert train.evaluate(new_model, te) == train.evaluate(old_model, te)
+
+
 def test_predictions_plausible(trained, feature_frames):
     _, te = feature_frames
     preds = trained.model.transform(te)

@@ -48,7 +48,9 @@ def test_run_month_and_backfill(spark, tmp_path):
 def test_dims_keep_prior_month_keys(spark, tmp_path):
     """Rebuilding dims on month N must not drop 'Unknown' location ids
     (or dates) that only month N-1 observed — otherwise prior facts
-    vanish from inner-join analytics."""
+    vanish from inner-join analytics. Re-running month N-1 afterwards
+    (its fact load sees only its own month of the fact) adds no fact
+    rows, and every merge keeps the first build's exact dim schema."""
     import pyspark.sql.functions as F
 
     silver = str(tmp_path / "silver")
@@ -57,15 +59,34 @@ def test_dims_keep_prior_month_keys(spark, tmp_path):
     jan = make_trips_month(spark, 2023, 1, n=800).withColumn(
         "PULocationID", F.lit(9999)  # id absent from the zone CSV
     )
+    keys = {"dim_location": "location_id", "dim_date": "date_id"}
+
+    def dims():
+        out = {}
+        for name, key in keys.items():
+            df = spark.read.parquet(str(tmp_path / "gold" / name))
+            out[name] = (df.schema, {r[0] for r in df.select(key).collect()})
+        return out
+
     pipeline.run_month(spark, jan, zones, silver, gold, 2023, 1, min_rows=100)
-    pipeline.run_month(
+    after_jan = dims()
+    feb = pipeline.run_month(
         spark, make_trips_month(spark, 2023, 2, n=800), zones, silver, gold, 2023, 2,
         min_rows=100,
     )
+    after_feb = dims()
     dim_loc = spark.read.parquet(str(tmp_path / "gold" / "dim_location"))
     assert dim_loc.filter(F.col("location_id") == 9999).count() == 1
     dim_date = spark.read.parquet(str(tmp_path / "gold" / "dim_date"))
     assert dim_date.filter(F.month("date_id") == 1).count() > 0
+
+    jan_again = pipeline.run_month(spark, jan, zones, silver, gold, 2023, 1, min_rows=100)
+    assert jan_again.counts["fact_rows"] == feb.counts["fact_rows"]
+    after_jan_again = dims()
+    for name in keys:
+        schema, first_keys = after_jan[name]
+        assert after_feb[name][0] == after_jan_again[name][0] == schema
+        assert first_keys <= after_feb[name][1] <= after_jan_again[name][1]
 
 
 @pytest.mark.slow

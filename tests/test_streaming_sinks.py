@@ -74,6 +74,27 @@ def test_foreach_batch_upsert_idempotent(spark, events_df, tmp_path):
     assert n2 == n1
 
 
+def test_foreach_batch_upsert_unreadable_table_raises(spark, events_df, tmp_path):
+    """An existing gold path that cannot be read as parquet is not a
+    first batch: the batch must fail instead of appending with no
+    anti-dup join."""
+    from pyspark.errors import StreamingQueryException
+
+    gold = tmp_path / "gold_events"
+    gold.mkdir()
+    (gold / "junk.txt").write_text("not a parquet file")
+    src = str(tmp_path / "bad_src")
+    events_df.limit(50).write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(ev.EVENT_SCHEMA).parquet(src)
+    q = sinks.foreach_batch_upsert(stream, str(gold), ["event_id"], str(tmp_path / "cp"))
+    try:
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination(180)
+    finally:
+        q.stop()
+    assert sorted(p.name for p in gold.iterdir()) == ["junk.txt"]
+
+
 def test_foreach_batch_agg_maintain(spark, tmp_path):
     """Streamed incremental agg view must equal the batch groupBy over
     everything that flowed through, across multiple runs (new files
