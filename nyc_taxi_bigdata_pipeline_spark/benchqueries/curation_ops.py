@@ -220,7 +220,7 @@ def curation_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- domain-mixture sampling
 
 
-def _domain_mixture(engine: str, table: str, n_rel: str | None = None) -> str:
+def _domain_mixture(engine: str, table: str) -> str:
     # Target weight per domain: proportional to the numeric source
     # suffix + 1 (src0 lightest … src19 heaviest, summing to 1 over the
     # 20 sources) — a deterministic stand-in for a configured mixture.
@@ -228,22 +228,11 @@ def _domain_mixture(engine: str, table: str, n_rel: str | None = None) -> str:
     # division truncates scale) but double-ish in DuckDB's division
     w_s = "(CAST(substring(source, 4) AS INT) + 1) / CAST(210 AS DOUBLE)"
     keep = D.h64("concat('mix#', doc_id)", engine)
-    # n_rel substitutes a pre-staged per-source count frame (Spark side):
-    # th is referenced by k AND the final select, and n/tot each re-inline
-    # the corpus scan per consumer (r12 plan audit: 5 documents scans) —
-    # with n staged, tot derives from it (SUM of group counts ≡ COUNT(*))
-    # and only k touches the corpus. The oracle keeps the one-shot text.
-    if n_rel:
-        head = (
-            f"WITH n AS (SELECT * FROM {n_rel}),\n"
-            f"    tot AS (SELECT CAST(SUM(n_s) AS DOUBLE) AS t FROM n),"
-        )
-    else:
-        head = (
-            f"WITH n AS (SELECT source, COUNT(*) AS n_s FROM {table} "
-            f"GROUP BY source),\n"
-            f"    tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM {table}),"
-        )
+    head = (
+        f"WITH n AS (SELECT source, COUNT(*) AS n_s FROM {table} "
+        f"GROUP BY source),\n"
+        f"    tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM {table}),"
+    )
     return f"""
     {head}
     th AS (SELECT source, n_s, {w_s} AS w_s,

@@ -492,9 +492,7 @@ _TMIX_SEED = 29
 _TMIX_BUDGET_DIV = 2  # target doc budget = total DIV 2
 
 
-def _temperature_mixture(
-    engine: str, table: str, n_rel: str | None = None
-) -> str:
+def _temperature_mixture(engine: str, table: str) -> str:
     """Temperature-scaled domain mixture at alpha = 0.5 (the
     multilingual-LM standard: target share p_d ∝ n_d^alpha, flattening
     the head and boosting the tail vs proportional sampling). Keep
@@ -512,19 +510,9 @@ def _temperature_mixture(
     h = D.seeded_h64("CAST(doc_id AS STRING)", _TMIX_SEED, engine)
     budget = D.idiv("total", str(_TMIX_BUDGET_DIV), engine)
     thr = D.idiv(f"{budget} * sqm * 1048576", "(nd * ssq)", engine)
-    # n_rel substitutes a pre-staged per-language count frame (Spark
-    # side): sq/tot/th/the final select each re-inline the corpus scan
-    # under CTE inlining (r12 plan audit: 6 documents scans, 0 reuse) —
-    # with n staged, only `kept` touches the corpus. Oracle keeps the
-    # one-shot WITH text (n_rel=None).
-    n_cte = (
-        f"WITH n AS (SELECT * FROM {n_rel}),"
-        if n_rel
-        else f"""WITH n AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS nd
-               FROM {table} GROUP BY lang),"""
-    )
     return f"""
-    {n_cte}
+    WITH n AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS nd
+               FROM {table} GROUP BY lang),
     sq AS (SELECT lang, nd,
                   CAST(FLOOR(SQRT(CAST(nd AS DOUBLE)) * 1000000.0 + 0.5)
                        AS BIGINT) AS sqm

@@ -816,7 +816,7 @@ def _ssjoin_oracle(table: str, n: int = 14) -> str:
     Shingles compared as raw strings here vs xxhash64 identities on the
     Spark side: distinct counts agree unless 64-bit hashes collide
     (~1e-10 at fixture vocabulary). n=14 since r10: the r10 accounting
-    probe (scripts/bench_r10_saturation.py) measured the saturated n=5
+    probe (RESULTS.md, Round 10) measured the saturated n=5
     tier at 1,529,321 candidates for 256 true pairs (5,974x, 12.2% of
     all-pairs, 85 s) vs 461 candidates for the SAME 256 true pairs at
     n=14 (1.8x, 6 s) — the 31-word fixture vocabulary saturates 5-gram

@@ -94,26 +94,15 @@ def _triplet_scored_sql(engine: str, table: str) -> str:
       WHERE q.vec_id < {_TRIP_ANCHORS}"""
 
 
-def _triplet_sql(engine: str, table: str, scored_rel: str | None = None) -> str:
+def _triplet_sql(engine: str, table: str) -> str:
     """Per anchor: hardest positive (max same-label cosine) and top-k
     hardest different-label negatives, each flagged semi-hard per the
     FaceNet criterion cos_pos − margin ≤ cos_neg < cos_pos. Cosines are
     fp6 integers (round-6 + snap, the proven knn idiom) so every
-    comparison and the margin test are exact cross-engine.
-
-    ``scored_rel`` substitutes a pre-staged scored relation: the scored
-    CTE is referenced by BOTH pos and neg, and Spark inlines
-    non-recursive CTEs, so the anchor×corpus cosine pass would run once
-    per consumer (r12 plan audit: 4 embeddings scans, 0 reuse). The
-    oracle keeps the one-shot WITH text (scored_rel=None)."""
-    scored = (
-        f"SELECT * FROM {scored_rel}"
-        if scored_rel
-        else _triplet_scored_sql(engine, table)
-    )
+    comparison and the margin test are exact cross-engine."""
     return f"""
     WITH scored AS (
-      {scored}
+      {_triplet_scored_sql(engine, table)}
     ),
     pos AS (SELECT a, CAST(MAX(cos_fp) AS BIGINT) AS pos_fp
             FROM scored WHERE la = lb GROUP BY a),

@@ -387,53 +387,20 @@ def _hll_est_expr(used: str, sum_present: str) -> str:
     )
 
 
-def _hll_overlap_regs_sql(engine: str, table: str) -> str:
-    """The one corpus register-build pass (≤2×{_M} output rows)."""
-    str_t = "STRING" if engine == D.SPARK else "VARCHAR"
-    h = D.h64(f"CAST(o_custkey AS {str_t})", engine)
-    w = D.idiv("h", str(_M), engine)
-    return f"""WITH src AS (
-      SELECT CASE WHEN year(o_orderdate) = 1995 THEN 'a' ELSE 'b' END AS seg,
-             {h} AS h
-      FROM {table} WHERE year(o_orderdate) IN (1995, 1996)
-    )
-    SELECT seg, h % {_M} AS bucket, MAX({_rho_case(w)}) AS rho
-    FROM src GROUP BY seg, h % {_M}"""
-
-
-def _hll_overlap_sql(engine: str, table: str, regs_rel: str | None = None) -> str:
+def _hll_overlap_sql(engine: str, table: str) -> str:
     """Sketch set algebra: |A∩B| without ever joining A and B. Registers
     for segment A (1995 buyers) and B (1996 buyers) build in ONE pass;
     the union sketch is just MAX over the two register sets (HLL merge),
     and the intersection falls out by inclusion-exclusion
     |A|+|B|-|A∪B|. At 100 TB the segments never meet in a join — only
     2×256 register rows cross the wire. The exact INTERSECT count rides
-    along as the error exhibit (production drops it).
-
-    ``regs_rel`` substitutes a pre-staged register frame (Spark side):
-    regs is referenced by per AND uni, per by pa AND pb — under CTE
-    inlining the register-build corpus pass re-ran once per chain (r12
-    plan audit: 5 orders scans, 0 reuse). With it set, the exact-check
-    CTE also collapses its two-scan INTERSECT into the set-identical
-    one-pass both-years HAVING form (custkeys with both years present),
-    so the whole query is 2 corpus passes. The oracle keeps the
-    one-shot WITH text (regs_rel=None)."""
+    along as the error exhibit (production drops it)."""
     str_t = "STRING" if engine == D.SPARK else "VARCHAR"
     h = D.h64(f"CAST(o_custkey AS {str_t})", engine)
     w = D.idiv("h", str(_M), engine)
     weight = D.shl("1", f"({_WBITS + 1} - rho)", engine)
     est = _hll_est_expr("used", "sum_present")
-    if regs_rel:
-        head = f"WITH regs AS (SELECT * FROM {regs_rel}),"
-        x_cte = f"""x AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS exact_overlap FROM (
-        SELECT o_custkey FROM {table}
-        WHERE year(o_orderdate) IN (1995, 1996)
-        GROUP BY o_custkey
-        HAVING COUNT(DISTINCT year(o_orderdate)) = 2) t
-    )"""
-    else:
-        head = f"""WITH src AS (
+    head = f"""WITH src AS (
       SELECT CASE WHEN year(o_orderdate) = 1995 THEN 'a' ELSE 'b' END AS seg,
              {h} AS h
       FROM {table} WHERE year(o_orderdate) IN (1995, 1996)
@@ -442,7 +409,7 @@ def _hll_overlap_sql(engine: str, table: str, regs_rel: str | None = None) -> st
       SELECT seg, h % {_M} AS bucket, MAX({_rho_case(w)}) AS rho
       FROM src GROUP BY seg, h % {_M}
     ),"""
-        x_cte = f"""x AS (
+    x_cte = f"""x AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS exact_overlap FROM (
         SELECT o_custkey FROM {table} WHERE year(o_orderdate) = 1995
         INTERSECT
@@ -484,9 +451,8 @@ def hll_segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-shot WITH deliberately (r12 register staging REVERTED r13):
     # the register consumers sit above the same aggregate exchange
     # (runtime-reused) and the staged checkpoint measured 0.77×/0.96×
-    # at the 100×/10× salted tiers (bench_r13_scale_receipts.py). The
-    # r12 one-pass both-years INTERSECT exhibit (inside _hll_overlap_sql)
-    # is kept — that part is a genuine pass cut, not a checkpoint.
+    # at the 100×/10× salted tiers (bench_r13_scale_receipts.py). Both
+    # engines run the same two-scan INTERSECT exhibit.
     return spark.sql(_hll_overlap_sql(D.SPARK, "bq_hllov_orders"))
 
 

@@ -557,7 +557,7 @@ def _psi_counts_ctes(engine: str, table: str) -> str:
     """The corpus-touching prefix of the PSI chain: events → global-range
     anchor → equal-width buckets → per-(type, arm, bkt) counts. Everything
     downstream is arithmetic over the bounded ≤|event_type|·2·10-row count
-    frame, so this is the natural staging frontier."""
+    frame."""
     day = D.epoch_day("ts", engine)
     b = "10"
     return f"""WITH e AS (
@@ -581,7 +581,7 @@ def _psi_counts_ctes(engine: str, table: str) -> str:
           FROM bkts GROUP BY event_type, arm, bkt)"""
 
 
-def _psi_sql(engine: str, table: str, counts_rel: str | None = None) -> str:
+def _psi_sql(engine: str, table: str) -> str:
     b = "10"
     lnr = (
         f"{_ln_micro('cc + 1')} - {_ln_micro(f'nc + {b}')}"
@@ -591,18 +591,8 @@ def _psi_sql(engine: str, table: str, counts_rel: str | None = None) -> str:
         f"(CAST(cc + 1 AS DOUBLE) / CAST(nc + {b} AS DOUBLE)"
         f" - CAST(cb + 1 AS DOUBLE) / CAST(nb + {b} AS DOUBLE))"
     )
-    # counts_rel substitutes a pre-staged count frame on the Spark side:
-    # c's downstream consumers (n ×2 via grid's n0/n1, terms' c0/c1) each
-    # re-inline the whole events chain under CTE inlining (r12 plan
-    # audit: 8 events scans, 0 reuse). The oracle keeps the one-shot
-    # WITH text (counts_rel=None).
-    head = (
-        f"WITH c AS (SELECT * FROM {counts_rel})"
-        if counts_rel
-        else _psi_counts_ctes(engine, table)
-    )
     return f"""
-    {head},
+    {_psi_counts_ctes(engine, table)},
     n AS (SELECT event_type, arm, CAST(SUM(cnt) AS BIGINT) AS n
           FROM c GROUP BY event_type, arm),
     grid AS (

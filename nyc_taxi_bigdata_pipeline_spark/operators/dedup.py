@@ -298,8 +298,8 @@ def minhash_estimate_filter(
     E[matches/num_hashes] = true Jaccard; with 32 hashes σ ≈ 0.07 at
     j=0.8, so ``min_estimate=0.55`` (≈ threshold − 3.5σ) loses a true
     j≥0.8 pair with probability ~2e-4 while discarding the ~0.3-Jaccard
-    band-collision bulk. Pairs that pass still go through exact
-    :func:`jaccard_verify` — estimates never appear in results.
+    band-collision bulk. Pairs that pass still go through the exact
+    :func:`verify_sets` — estimates never appear in results.
 
     Shuffle shape: the pair table joins the signature table TWICE, so
     signature width is the shuffle bill (93M pairs × 2×32 longs ≈ 48 GB
@@ -384,7 +384,6 @@ def jaccard_verify(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    materialize_shingles: bool = False,
     shingle_n: int = 5,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -396,17 +395,14 @@ def jaccard_verify(
     to the minhash banding error). Pairs sharing zero shingles drop out
     of the inner join — correct for any threshold > 0.
 
-    ``materialize_shingles``: the shingle frame is referenced three
-    times under DIFFERENT join keys (per-doc sizes, id_a side,
-    (id_b, hash) side), so exchange reuse cannot dedup them and the
-    explode+hash runs three times. The flag eagerly localCheckpoints
-    the candidate-doc shingles once — results identical; turn it on
-    when candidates × shingles is the dominant cost (the 1000×-tier
-    probe's long pole). Default off so registry/bench query BUILDERS
-    stay side-effect-free (eager work belongs inside the timed
-    action, not query construction)."""
-    # pairs fans into ids (×2) + the inter join — same recompute class
-    # as the Arrow twin; lazy in-operator checkpoint (honest)
+    This is the independent REFERENCE for :func:`verify_sets`: no
+    production path calls it, and it shares no code with the Arrow
+    kernel, so tests compare the kernel's confirmed set (scores
+    included) against it. The shingle frame is referenced under three
+    different join keys (per-doc sizes, id_a side, (id_b, hash) side),
+    so the explode+hash runs once per reference — fine at test sizes."""
+    # pairs fans into ids (×2) + the inter join — lazy in-operator
+    # checkpoint (honest)
     pairs = pairs.localCheckpoint(eager=False)
     ids = (
         pairs.select(F.col("id_a").alias(id_col))
@@ -417,8 +413,6 @@ def jaccard_verify(
         docs.join(ids, id_col, "left_semi"), id_col, text_col,
         n=shingle_n, hash_family=hash_family,
     )
-    if materialize_shingles:
-        sh = sh.localCheckpoint(eager=True)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "__h")
     b = sh.select(F.col(id_col).alias("id_b"), "__h")
@@ -446,14 +440,24 @@ def jaccard_verify(
 # pair it appears in, through the pair-join shuffle AND the Python
 # boundary (measured 2.3 GB for ~73.5k containment candidates at sf0.1
 # whose distinct arrays total ~80 MB — a ~29× amplification at ~29
-# pairs/doc). 256 MB is far inside the 32 GB local driver heap and any
-# prod executor's broadcast budget; past the cap the operator falls
-# back to the join shape with identical results (the graph.py
-# broadcast_nodes_max discipline — fallback is test-pinned via cap=0).
+# pairs/doc). The collected dict lives in the Python driver; the JVM
+# holds only the broadcast's serialized blocks, and its heap is
+# host-sized (session.driver_heap_mb; perfbench runs 1–2 GB) — 256 MB
+# fits the ~1 GB unified memory region of a 2 GB heap at Spark's
+# default spark.memory.fraction. Past the cap the operator falls back
+# to the join shape with identical results (the graph.py
+# broadcast_nodes_max discipline). verify_sets reads the constant at
+# call time, so tests pin the fallback by monkeypatching it to 0.
 BROADCAST_ARRAYS_MAX_BYTES = 256 << 20
 
+# metric → (pair id column a, pair id column b, score column)
+_VERIFY_METRICS = {
+    "jaccard": ("id_a", "id_b", "jaccard"),
+    "containment": ("src_id", "dst_id", "containment"),
+}
 
-def _arrays_map_or_none(arrays: DataFrame, id_col: str, cap_bytes: int):
+
+def _arrays_map_or_none(arrays: DataFrame, cap_bytes: int):
     """Collect ``(id, sorted hash array)`` into a driver dict when the
     total element payload fits ``cap_bytes``; None → caller uses the
     join shape. One SUM(size) job decides (it also materializes the
@@ -470,31 +474,35 @@ def _arrays_map_or_none(arrays: DataFrame, id_col: str, cap_bytes: int):
     }
 
 
-def jaccard_verify_arrow(
+def verify_sets(
     pairs: DataFrame,
     docs: DataFrame,
+    metric: str = "jaccard",
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_n: int = 5,
     hash_family: str = "xxhash64",
     shingles: DataFrame | None = None,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
 ) -> DataFrame:
-    """Exact shingle-Jaccard on candidates via an Arrow kernel — the
-    scale path twin of :func:`jaccard_verify` (same shingle hashes,
-    same output set; equivalence pinned by test).
+    """Exact shingle-set similarity on candidate pairs via an Arrow
+    kernel — the verify stage of every set-similarity operator here.
+    ``metric`` (``_VERIFY_METRICS``): ``"jaccard"`` scores pairs
+    (id_a, id_b) by |A∩B| / |A∪B|; ``"containment"`` scores directed
+    pairs (src_id, dst_id) by |S_src ∩ S_dst| / |S_src|. Output: the
+    pair columns plus a double score column named after the metric.
 
-    Shape: each candidate doc's distinct shingle hashes are collected
-    ONCE into a sorted array (one aggregate over the explode — vs the
-    relational form's three differently-keyed joins over the exploded
-    rows), the pair table equi-joins the two arrays in, and a
-    mapInPandas kernel intersects the sorted arrays per pair
-    (np.intersect1d on presorted uniques). Per-pair work is
-    O(|A|+|B|); the shuffle carries each doc's array once per side it
-    appears on. At the 1000x tier (726k pairs, ~60 shingles/doc) the
-    kernel itself is seconds — the join is the cost, and it is 2 joins
-    instead of 3 with no exploded-row fan-out.
+    Each candidate doc's distinct shingle hashes are collected ONCE
+    into a sorted array (one aggregate over the explode); a mapInPandas
+    kernel intersects the two sorted arrays per pair. Under
+    ``BROADCAST_ARRAYS_MAX_BYTES`` the array dictionary is collected
+    and broadcast and the kernel reads pair IDS only; past the cap the
+    pair table equi-joins the two arrays in (the join shape). Both
+    shapes call the same scoring function, so they return the same
+    rows; a pair whose id has no shingle set drops in both. Scores are
+    one int/int double division — IEEE-identical to the oracles'
+    ``CAST(i AS DOUBLE) / n``. Exactness against the independent
+    relational :func:`jaccard_verify` is pinned by test.
 
     ``shingles``: caller-precomputed distinct hashed-shingle frame
     ``(id_col, __h)`` with the SAME n / hash_family (the
@@ -504,24 +512,44 @@ def jaccard_verify_arrow(
     arrays from the checkpointed frame 0.9 s vs 3.3 s rebuilt, 73.5k
     candidates at sf0.1). Collecting the arrays from a SUPERSET frame
     is safe: the semi-join to candidate ids bounds what aggregates."""
-    from collections.abc import Iterator
-
     import numpy as np
     import pandas as pd
 
+    col_a, col_b, score_col = _VERIFY_METRICS[metric]
+    containment = metric == "containment"
+
+    def score(pdf, sets_a, sets_b):
+        # |A∩B| by a merge of presorted uniques (O(|A|+|B|)), then
+        # |A∩B|/|A| (containment, A = source) or |A∩B|/|A∪B|, then the
+        # threshold; None = id without a shingle set → pair drops
+        sc = np.full(len(pdf), np.nan)  # NaN never passes the filter
+        for i, (a, b) in enumerate(zip(sets_a, sets_b)):
+            if a is None or b is None:
+                continue
+            inter = np.intersect1d(a, b, assume_unique=True).size
+            sc[i] = (
+                inter / len(a) if containment
+                else inter / (len(a) + len(b) - inter)
+            )
+        keep = sc >= threshold
+        return pd.DataFrame({
+            col_a: pdf[col_a].to_numpy()[keep],
+            col_b: pdf[col_b].to_numpy()[keep],
+            score_col: sc[keep],
+        })
+
     # ``pairs`` is referenced THREE times below (both arms of the ids
-    # union + the join input) and ``arrays`` TWICE under different join
-    # keys (id_a / id_b) — exchange reuse cannot dedup differently-keyed
-    # consumers, and statically-planned broadcasts leave no shuffle
-    # boundary to reuse at all (CLAUDE.md recompute class; the r12 probe
-    # measured the candidate chain re-running once per reference: 125
-    # parquet scans / 0 ReusedExchange in dedup_minhash_pipeline's
-    # plan). Lazy localCheckpoints inside the operator are honest — the
+    # union + the kernel input) and ``arrays`` TWICE under different
+    # join keys in the join shape — exchange reuse cannot dedup
+    # differently-keyed consumers (the multi-reference recompute class;
+    # the r12 probe measured the candidate chain re-running once per
+    # reference: 125 parquet scans / 0 ReusedExchange in
+    # dedup_minhash_pipeline's plan). Lazy localCheckpoints inside the operator are honest — the
     # first caller action materializes them inside its own timing.
     pairs = pairs.localCheckpoint(eager=False)
     ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
+        pairs.select(F.col(col_a).alias(id_col))
+        .union(pairs.select(F.col(col_b).alias(id_col)))
         .distinct()
     )
     if shingles is None:
@@ -536,64 +564,41 @@ def jaccard_verify_arrow(
     ).localCheckpoint(eager=False)
 
     pair_types = dict(pairs.dtypes)
-    id_a_t, id_b_t = pair_types["id_a"], pair_types["id_b"]
-    out_schema = f"id_a {id_a_t}, id_b {id_b_t}, jaccard double"
+    out_schema = (
+        f"{col_a} {pair_types[col_a]}, {col_b} {pair_types[col_b]},"
+        f" {score_col} double"
+    )
 
-    amap = _arrays_map_or_none(arrays, id_col, broadcast_arrays_max_bytes)
+    amap = _arrays_map_or_none(arrays, BROADCAST_ARRAYS_MAX_BYTES)
     if amap is not None:
         bc = pairs.sparkSession.sparkContext.broadcast(amap)
 
-        def bkernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            m = bc.value  # once per task (guide §4.5)
+        def bkernel(batches):
+            m = bc.value  # once per task
             for pdf in batches:
-                if not len(pdf):
-                    continue
-                ida, idb = pdf["id_a"].tolist(), pdf["id_b"].tolist()
-                keep_a, keep_b, jac_l = [], [], []
-                for i in range(len(pdf)):
-                    a = m.get(ida[i])
-                    b = m.get(idb[i])
-                    if a is None or b is None:  # ≡ the inner-join drop
-                        continue
-                    inter = np.intersect1d(a, b, assume_unique=True).size
-                    j = inter / (len(a) + len(b) - inter)
-                    if j >= threshold:
-                        keep_a.append(ida[i])
-                        keep_b.append(idb[i])
-                        jac_l.append(j)
-                yield pd.DataFrame(
-                    {"id_a": keep_a, "id_b": keep_b, "jaccard": jac_l}
-                )
+                if len(pdf):
+                    yield score(
+                        pdf,
+                        [m.get(k) for k in pdf[col_a].tolist()],
+                        [m.get(k) for k in pdf[col_b].tolist()],
+                    )
 
-        return pairs.select("id_a", "id_b").mapInPandas(bkernel, out_schema)
+        return pairs.select(col_a, col_b).mapInPandas(bkernel, out_schema)
 
-    cand = (
-        pairs.join(
-            arrays.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sa")),
-            "id_a",
-        )
-        .join(
-            arrays.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sb")),
-            "id_b",
-        )
+    cand = pairs.join(
+        arrays.select(F.col(id_col).alias(col_a), F.col("__sh").alias("__sa")),
+        col_a,
+    ).join(
+        arrays.select(F.col(id_col).alias(col_b), F.col("__sh").alias("__sb")),
+        col_b,
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def jkernel(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            jac = np.empty(len(pdf), dtype=np.float64)
-            sa_l, sb_l = pdf["__sa"].tolist(), pdf["__sb"].tolist()
-            for i in range(len(pdf)):
-                a, b = sa_l[i], sb_l[i]
-                inter = np.intersect1d(a, b, assume_unique=True).size
-                jac[i] = inter / (len(a) + len(b) - inter)
-            out = pd.DataFrame(
-                {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "jaccard": jac}
-            )
-            yield out[out["jaccard"] >= threshold]
+            if len(pdf):
+                yield score(pdf, pdf["__sa"].tolist(), pdf["__sb"].tolist())
 
-    return cand.mapInPandas(kernel, out_schema)
+    return cand.mapInPandas(jkernel, out_schema)
 
 
 def jaccard_join_prefix(
@@ -602,7 +607,6 @@ def jaccard_join_prefix(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_n: int = 5,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
 ) -> DataFrame:
     """EXACT set-similarity self-join at a Jaccard threshold via prefix
     filtering (SSJoin/All-Pairs class — Chaudhuri et al. ICDE'06,
@@ -625,9 +629,9 @@ def jaccard_join_prefix(
     WHERE in the prefix the collision happened — measured at sf0.1:
     candidates drop to 52% on the saturated n=5 tier and to 3.1% on
     the long-tail n=14 tier (14,786 → 461 for 256 true pairs).
-    Candidates then go through the exact Arrow verify kernel — same
-    shingle hashes, so the result equals brute-force all-pairs
-    verification (equivalence pinned by test).
+    Candidates then go through the exact Arrow verify
+    (:func:`verify_sets`) — same shingle hashes, so the result equals
+    brute-force all-pairs verification (equivalence pinned by test).
 
     No bucket cap, deliberately: capping would reintroduce false
     negatives and void the exactness contract. A mass-duplicated
@@ -678,9 +682,9 @@ def jaccard_join_prefix(
     cand = prefix_filter_candidates(
         docs, id_col, text_col, threshold, shingle_n, shingles=sh
     )
-    return jaccard_verify_arrow(
-        cand, docs, id_col, text_col, threshold, shingle_n=shingle_n, shingles=sh,
-        broadcast_arrays_max_bytes=broadcast_arrays_max_bytes,
+    return verify_sets(
+        cand, docs, "jaccard", id_col, text_col, threshold,
+        shingle_n=shingle_n, shingles=sh,
     )
 
 
@@ -778,7 +782,6 @@ def containment_join_prefix(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_n: int = 5,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
 ) -> DataFrame:
     """EXACT directed set-CONTAINMENT self-join: all ordered pairs
     (src, dst), src ≠ dst, with |S_src ∩ S_dst| / |S_src| ≥ threshold
@@ -800,10 +803,10 @@ def containment_join_prefix(
     collision at ranks (p_s, p_d) of the shared frequency order bounds
     the remaining overlap by 1 + min(|S_src|−p_s, |S_dst|−p_d) ≥ α —
     lossless as an OR over a pair's collisions (the first common token
-    satisfies it). Candidates then get the exact relational verify
-    (pair × shingle equi-join count), so the output equals brute force:
-    the registry oracle brute-forces ALL shared-shingle pairs and
-    hash-equality proves the pruning dropped nothing.
+    satisfies it). Candidates then get the exact Arrow verify
+    (:func:`verify_sets`, containment metric), so the output equals
+    brute force: the registry oracle brute-forces ALL shared-shingle
+    pairs and hash-equality proves the pruning dropped nothing.
 
     Scale shape mirrors jaccard_join_prefix: one shingle build (lazily
     checkpointed — freq / prefix / postings / sizes all re-reference
@@ -879,115 +882,10 @@ def containment_join_prefix(
     # sh is the checkpointed corpus shingle frame built above — pass it
     # through so the verify's array build reads the checkpoint instead
     # of re-running the corpus explode+hash+distinct pass (r12)
-    return containment_verify_arrow(
-        cand, docs, id_col, text_col, threshold, shingle_n=shingle_n,
-        shingles=sh, broadcast_arrays_max_bytes=broadcast_arrays_max_bytes,
+    return verify_sets(
+        cand, docs, "containment", id_col, text_col, threshold,
+        shingle_n=shingle_n, shingles=sh,
     )
-
-
-def containment_verify_arrow(
-    pairs: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 5,
-    shingles: DataFrame | None = None,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
-) -> DataFrame:
-    """Exact directed shingle-containment on candidate pairs — the
-    :func:`jaccard_verify_arrow` shape with the source-normalized
-    metric: |S_src ∩ S_dst| / |S_src| per (src_id, dst_id). Each
-    candidate doc's distinct shingle hashes are collected once into a
-    sorted array; a mapInPandas kernel intersects per pair
-    (np.intersect1d on presorted uniques, O(|A|+|B|)). ``shingles`` as
-    in :func:`jaccard_verify_arrow` (precomputed (id, __h) frame —
-    skips the re-shingle pass). Under ``broadcast_arrays_max_bytes``
-    the array dictionary is broadcast and the kernel reads pair IDS
-    only (see the cap constant's comment); past it, the join shape."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    # same recompute class as jaccard_verify_arrow: pairs ×3, arrays ×2
-    # under different keys — lazy in-operator checkpoints (honest)
-    pairs = pairs.localCheckpoint(eager=False)
-    ids = (
-        pairs.select(F.col("src_id").alias(id_col))
-        .union(pairs.select(F.col("dst_id").alias(id_col)))
-        .distinct()
-    )
-    if shingles is None:
-        sh = hashed_shingles(
-            docs.join(ids, id_col, "left_semi"), id_col, text_col, n=shingle_n
-        )
-    else:
-        sh = shingles.join(ids, id_col, "left_semi")
-    arrays = sh.groupBy(id_col).agg(
-        F.sort_array(F.collect_set("__h")).alias("__sh")
-    ).localCheckpoint(eager=False)
-
-    pair_types = dict(pairs.dtypes)
-    src_t, dst_t = pair_types["src_id"], pair_types["dst_id"]
-    out_schema = f"src_id {src_t}, dst_id {dst_t}, containment double"
-
-    amap = _arrays_map_or_none(arrays, id_col, broadcast_arrays_max_bytes)
-    if amap is not None:
-        bc = pairs.sparkSession.sparkContext.broadcast(amap)
-
-        def bkernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            m = bc.value  # once per task (guide §4.5)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, idd = pdf["src_id"].tolist(), pdf["dst_id"].tolist()
-                keep_s, keep_d, con_l = [], [], []
-                for i in range(len(pdf)):
-                    s = m.get(ids[i])
-                    d = m.get(idd[i])
-                    if s is None or d is None:  # ≡ the inner-join drop
-                        continue
-                    inter = np.intersect1d(s, d, assume_unique=True).size
-                    c = inter / len(s)
-                    if c >= threshold:
-                        keep_s.append(ids[i])
-                        keep_d.append(idd[i])
-                        con_l.append(c)
-                yield pd.DataFrame(
-                    {"src_id": keep_s, "dst_id": keep_d, "containment": con_l}
-                )
-
-        return pairs.select("src_id", "dst_id").mapInPandas(bkernel, out_schema)
-
-    cand = pairs.join(
-        arrays.select(F.col(id_col).alias("src_id"), F.col("__sh").alias("__ss")),
-        "src_id",
-    ).join(
-        arrays.select(F.col(id_col).alias("dst_id"), F.col("__sh").alias("__sd")),
-        "dst_id",
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            con = np.empty(len(pdf), dtype=np.float64)
-            ss_l, sd_l = pdf["__ss"].tolist(), pdf["__sd"].tolist()
-            for i in range(len(pdf)):
-                s, d = ss_l[i], sd_l[i]
-                inter = np.intersect1d(s, d, assume_unique=True).size
-                con[i] = inter / len(s)
-            out = pd.DataFrame(
-                {
-                    "src_id": pdf["src_id"],
-                    "dst_id": pdf["dst_id"],
-                    "containment": con,
-                }
-            )
-            yield out[out["containment"] >= threshold]
-
-    return cand.mapInPandas(kernel, out_schema)
 
 
 def minhash_dedup(
@@ -999,8 +897,6 @@ def minhash_dedup(
     threshold: float = 0.8,
     bucket_cap: int = 256,
     estimate_prefilter: bool = False,
-    materialize_shingles: bool = True,
-    kernel: str = "arrow",
     sigs: DataFrame | None = None,
     hash_family: str = "xxhash64",
     shingles: DataFrame | None = None,
@@ -1012,21 +908,8 @@ def minhash_dedup(
     ``estimate_prefilter`` inserts :func:`minhash_estimate_filter`
     (cut at threshold − 3.5σ of the 32-hash estimator) — the scale path
     for corpora whose band collisions outnumber true near-dups; exact
-    verification still decides every returned pair.
-
-    ``kernel`` picks the verify implementation: ``"arrow"`` (default)
-    collects each candidate doc's sorted shingle array once and
-    intersects per pair in a vectorized Pandas kernel — measured 4-5×
-    the relational form at the 100× tier (13.8 vs 69.5 s), identical
-    output (equivalence-pinned); ``"relational"`` keeps the all-codegen
-    3-join form for environments where Arrow workers are unwelcome.
-
-    ``materialize_shingles`` (relational kernel only) defaults ON here
-    (unlike bare :func:`jaccard_verify`): the verify stage re-derives the candidate
-    docs' shingles under three different join keys, and the eager
-    checkpoint that deduplicates that work (measured 2.2× at the
-    100×-tier) lands inside the OPERATOR — callers time the whole
-    chain, so there's no builder-side-effect honesty concern.
+    verification still decides every returned pair. The verify is
+    :func:`verify_sets` (Jaccard metric).
 
     ``sigs``: caller-precomputed minhash signatures (same ``num_hashes``
     and shingle scheme as :func:`add_minhash`) — avoids re-shingling
@@ -1061,12 +944,8 @@ def minhash_dedup(
             pairs, sigs, id_col, num_hashes,
             min_estimate=max(threshold - 3.5 * sigma, 0.0),
         )
-    if kernel == "arrow":
-        return jaccard_verify_arrow(pairs, docs, id_col, text_col, threshold,
-                                    hash_family=hash_family, shingles=shingles)
-    return jaccard_verify(pairs, docs, id_col, text_col, threshold,
-                          materialize_shingles=materialize_shingles,
-                          hash_family=hash_family)
+    return verify_sets(pairs, docs, "jaccard", id_col, text_col, threshold,
+                       hash_family=hash_family, shingles=shingles)
 
 
 # ------------------------------------------------- near-dup clustering
@@ -1295,8 +1174,8 @@ def dedup_incremental(
     sh_both = sh_batch.unionByName(
         hashed_shingles(cand_corpus, id_col, text_col)
     )
-    confirmed = jaccard_verify_arrow(
-        cross, docs_both, id_col, text_col, threshold, shingles=sh_both
+    confirmed = verify_sets(
+        cross, docs_both, "jaccard", id_col, text_col, threshold, shingles=sh_both
     )
     contaminated = confirmed.select(F.col("id_a").alias(id_col)).distinct()
     # same lazy-cut reasoning: minhash_dedup fans the survivor frame

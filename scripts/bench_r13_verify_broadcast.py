@@ -1,15 +1,15 @@
-"""r13 stage probe: containment/jaccard VERIFY stage, broadcast-dictionary
-vs join-shape Arrow transfer (VERDICT r12 item 3).
+"""Stage probe: the containment VERIFY stage (``dedup.verify_sets``),
+broadcast-dictionary vs join-shape Arrow transfer.
 
 Isolates the verify: candidates + the shared shingle frame are built and
 EAGERLY checkpointed outside timing, then each arm times
-``*_verify_arrow(...).write.format("noop")`` (guide §1.4) best-of-N
-ROUND-ROBIN (CLAUDE.md JIT-order rule):
+``verify_sets(...).write.format("noop")`` best-of-N ROUND-ROBIN (the
+first arm to run pays codegen compilation):
 
-- arm A (join):      broadcast_arrays_max_bytes=0  → the r12 shape that
-                     physically duplicates each doc's sorted hash array
-                     once per pair through the pair join AND the Arrow
-                     boundary (~2.3 GB at sf0.1 containment)
+- arm A (join):      ``dedup.BROADCAST_ARRAYS_MAX_BYTES = 0`` → the shape
+                     that physically duplicates each doc's sorted hash
+                     array once per pair through the pair join AND the
+                     Arrow boundary (~2.3 GB at sf0.1 containment)
 - arm B (broadcast): default cap → arrays collected once (~80 MB),
                      kernel reads pair ids only
 
@@ -93,17 +93,16 @@ def main() -> None:
     n_docs = docs.count()
     print(f"containment: {n_docs} docs, {n_cand} candidate pairs")
 
-    arms = {
-        "join": dict(broadcast_arrays_max_bytes=0),
-        "bcast": dict(),
-    }
+    arms = {"join": 0, "bcast": dedup.BROADCAST_ARRAYS_MAX_BYTES}
     best: dict[str, float] = {}
     for p in range(args.passes):
-        for arm, kw in arms.items():
+        for arm, cap in arms.items():
             sc.setJobDescription(f"verify:{arm} pass{p}")
+            dedup.BROADCAST_ARRAYS_MAX_BYTES = cap
             dt = _noop(
-                dedup.containment_verify_arrow(
-                    cand, docs, threshold=thr, shingle_n=14, shingles=sh14, **kw
+                dedup.verify_sets(
+                    cand, docs, "containment", threshold=thr, shingle_n=14,
+                    shingles=sh14,
                 )
             )
             best[arm] = min(best.get(arm, float("inf")), dt)

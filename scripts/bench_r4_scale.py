@@ -111,21 +111,13 @@ def probe_tier(spark, docs_path: str, reps: int) -> None:
           f"({n_kept} survive, {100.0*n_kept/max(n_pairs,1):.2f}%)")
 
     dt, verified = timed(
-        "jaccard",
-        lambda: dedup.jaccard_verify(
-            kept_pairs, docs, materialize_shingles=True
-        ).localCheckpoint(eager=True),
+        "verify",
+        lambda: dedup.verify_sets(kept_pairs, docs, "jaccard").localCheckpoint(
+            eager=True
+        ),
     )
     n_ver = verified.count()
-    print(f"reps={reps} jaccard_verify: {dt:.1f} s  {max(n_kept,1)/dt:,.0f} pairs/s  ({n_ver} near-dups)")
-
-    dt, verified_a = timed(
-        "jaccard_arrow",
-        lambda: dedup.jaccard_verify_arrow(kept_pairs, docs).localCheckpoint(eager=True),
-    )
-    n_ver_a = verified_a.count()
-    print(f"reps={reps} jaccard_arrow: {dt:.1f} s  {max(n_kept,1)/dt:,.0f} pairs/s  "
-          f"({n_ver_a} near-dups{'' if n_ver_a == n_ver else ' MISMATCH'})")
+    print(f"reps={reps} verify_sets: {dt:.1f} s  {max(n_kept,1)/dt:,.0f} pairs/s  ({n_ver} near-dups)")
 
     dt, clusters = timed("clusters", lambda: dedup.dedup_clusters(verified))
     n_cl = clusters.select("cluster").distinct().count()

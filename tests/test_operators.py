@@ -1596,11 +1596,10 @@ def test_bucketed_write_elides_join_shuffle(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_jaccard_verify_arrow_matches_relational(spark, sf_dir):
+def test_verify_sets_matches_relational(spark, sf_dir, monkeypatch):
     """The Arrow verify kernel (sorted-array intersection per pair) must
-    produce EXACTLY the relational 3-join form's confirmed set, jaccard
-    values included."""
-    from nyc_taxi_bigdata_pipeline_spark.operators import dedup
+    produce EXACTLY the relational 3-join reference's confirmed set,
+    jaccard values included, in both of its shapes."""
     from nyc_taxi_bigdata_pipeline_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1614,33 +1613,35 @@ def test_jaccard_verify_arrow_matches_relational(spark, sf_dir):
     sigs = dedup.add_minhash(corpus, num_hashes=16)
     pairs = dedup.lsh_candidate_pairs(sigs, num_hashes=16, bands=4)
     pairs = pairs.localCheckpoint(eager=True)
-    rel = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dedup.jaccard_verify(
-            pairs, corpus, threshold=0.5, materialize_shingles=True
-        ).collect()
-    }
-    arw = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dedup.jaccard_verify_arrow(pairs, corpus, threshold=0.5).collect()
-    }
+
+    def verified(frame):
+        return {
+            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+            for r in frame.collect()
+        }
+
+    rel = verified(dedup.jaccard_verify(pairs, corpus, threshold=0.5))
+    arw = verified(dedup.verify_sets(pairs, corpus, "jaccard", threshold=0.5))
     assert rel == arw and len(rel) > 100
-    # broadcast_arrays_max_bytes=0 forces the join-shape fallback (the
-    # over-cap path a corpus-scale candidate set takes) — must be
-    # bit-identical to the broadcast-dictionary path used above
-    fb = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dedup.jaccard_verify_arrow(
-            pairs, corpus, threshold=0.5, broadcast_arrays_max_bytes=0
-        ).collect()
-    }
+    # a zero cap forces the join-shape fallback (the over-cap path a
+    # corpus-scale candidate set takes) — must be bit-identical to the
+    # broadcast-dictionary path used above
+    monkeypatch.setattr(dedup, "BROADCAST_ARRAYS_MAX_BYTES", 0)
+    fb = verified(dedup.verify_sets(pairs, corpus, "jaccard", threshold=0.5))
     assert fb == arw
 
 
-def test_containment_verify_broadcast_matches_join_fallback(spark):
-    """containment_verify_arrow's broadcast-dictionary path (arrays
-    collected once, kernel reads pair ids only) must equal the join
-    shape it replaces under the byte cap, containment values included."""
+@pytest.mark.parametrize("metric", ["jaccard", "containment"])
+def test_verify_sets_broadcast_matches_join_fallback(spark, monkeypatch, metric):
+    """verify_sets' broadcast-dictionary path (arrays collected once,
+    kernel reads pair ids only) must equal the join shape it replaces
+    under the byte cap, scores included, for both metrics — and both
+    shapes must drop a pair whose id has no row in ``docs``."""
+    col_a, col_b, score_col = dedup._VERIFY_METRICS[metric]
+    self_join = {
+        "jaccard": dedup.jaccard_join_prefix,
+        "containment": dedup.containment_join_prefix,
+    }[metric]
     long_text = " ".join(f"tok{i:03d}" for i in range(80))
     short_text = " ".join(f"tok{i:03d}" for i in range(20))
     mid_text = " ".join(f"tok{i:03d}" for i in range(10, 55))
@@ -1648,33 +1649,30 @@ def test_containment_verify_broadcast_matches_join_fallback(spark):
         [(1, short_text), (2, long_text), (3, mid_text)],
         "doc_id long, text string",
     )
-    bcast = {
-        (r.src_id, r.dst_id, round(r.containment, 9))
-        for r in dedup.containment_join_prefix(
-            df, threshold=0.4, shingle_n=14
-        ).collect()
-    }
+
+    def verified(frame):
+        return {
+            (r[col_a], r[col_b], round(r[score_col], 9)) for r in frame.collect()
+        }
+
+    chain = verified(self_join(df, threshold=0.4, shingle_n=14))
+    # every ordered pair, plus pairs with id 99, which has no document
     pairs_all = spark.createDataFrame(
-        [(a, b) for a in (1, 2, 3) for b in (1, 2, 3) if a != b],
-        "src_id long, dst_id long",
+        [(a, b) for a in (1, 2, 3, 99) for b in (1, 2, 3, 99) if a != b],
+        f"{col_a} long, {col_b} long",
     )
-    join_shape = {
-        (r.src_id, r.dst_id, round(r.containment, 9))
-        for r in dedup.containment_verify_arrow(
-            pairs_all, df, threshold=0.4, shingle_n=14,
-            broadcast_arrays_max_bytes=0,
-        ).collect()
-    }
-    bcast_all = {
-        (r.src_id, r.dst_id, round(r.containment, 9))
-        for r in dedup.containment_verify_arrow(
-            pairs_all, df, threshold=0.4, shingle_n=14
-        ).collect()
-    }
-    assert bcast_all == join_shape and len(join_shape) >= 2
+    bcast = verified(
+        dedup.verify_sets(pairs_all, df, metric, threshold=0.4, shingle_n=14)
+    )
+    monkeypatch.setattr(dedup, "BROADCAST_ARRAYS_MAX_BYTES", 0)
+    join_shape = verified(
+        dedup.verify_sets(pairs_all, df, metric, threshold=0.4, shingle_n=14)
+    )
+    assert bcast == join_shape and len(join_shape) >= 2
+    assert all(99 not in (a, b) for a, b, _ in bcast)
     # the prefix-filter chain's confirmed set is a subset decided by the
     # same verify — consistent across paths
-    assert bcast <= bcast_all
+    assert chain <= bcast
 
 
 def test_duplicated_spans_matches_sql_twin(spark, sf_dir):

@@ -139,7 +139,7 @@ def test_fuzzy_join_no_theta_nested_loop(spark, sf_dir):
     assert "NestedLoop" not in plan and "Cartesian" not in plan
 
 
-def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir):
+def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir, monkeypatch):
     """jaccard_join_prefix's freq/sizes/candidate joins must plan
     SortMergeJoin, never broadcast: every one of those frames scales
     with the corpus, and Spark's static estimator under-reads
@@ -149,9 +149,7 @@ def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir):
     broadcast). The merge hints pin the honest large-large strategy."""
     import pyspark.sql.functions as F
 
-    from nyc_taxi_bigdata_pipeline_spark.operators.dedup import (
-        jaccard_join_prefix,
-    )
+    from nyc_taxi_bigdata_pipeline_spark.operators import dedup
     from nyc_taxi_bigdata_pipeline_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -159,14 +157,13 @@ def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir):
     )
     # the checkpointed-source shape that mis-estimates: same as the
     # probe corpora and any iterative pipeline handing over a frame.
-    # broadcast_arrays_max_bytes=0 pins the JOIN-shape verify (the
-    # over-cap corpus path whose joins this test exists to guard); the
-    # under-cap broadcast-dictionary path has no corpus-scale join to
-    # mis-broadcast (arrays collected once, kernel reads pair ids).
+    # A zero broadcast cap pins verify_sets' JOIN shape (the over-cap
+    # corpus path whose joins this test exists to guard); the under-cap
+    # broadcast-dictionary path has no corpus-scale join to mis-broadcast
+    # (arrays collected once, kernel reads pair ids).
     docs = spark.createDataFrame(docs.limit(50).collect(), docs.schema)
-    plan = physical_plan(
-        jaccard_join_prefix(docs, threshold=0.8, broadcast_arrays_max_bytes=0)
-    )
+    monkeypatch.setattr(dedup, "BROADCAST_ARRAYS_MAX_BYTES", 0)
+    plan = physical_plan(dedup.jaccard_join_prefix(docs, threshold=0.8))
     assert plan.count("SortMergeJoin") >= 3, plan[:2000]
 
 
