@@ -33,12 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 # (name, java-regex, replacement token). ASCII-only classes so behavior
 # is predictable across regex engines; extend per-deployment.
-# span_dedup_remove: suggested occurrences-per-window-hash cap for the
-# OPT-IN broadcast skew branch (hot_window_cap param; the broadcast
-# side is bounded by |win|/cap rows — see the operator docstring for
-# the measurement that made plain-merge the default)
-_HOT_WINDOW_CAP = 100_000
-
 DEFAULT_PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
     ("email", r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}", "<EMAIL>"),
     ("phone", r"\b\d{3}[-.]\d{3,4}[-.]?\d{0,4}\b", "<PHONE>"),
@@ -421,7 +415,6 @@ def span_dedup_remove(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
-    hot_window_cap: int | None = None,
 ) -> DataFrame:
     """Cross-document repeated-substring REMOVAL (Lee et al. 2022
     ExactSubstr class), scale path — the removal counterpart of
@@ -456,29 +449,16 @@ def span_dedup_remove(
     duplicated window hash regardless of virality, where the window
     shape buffers the hot key's full row set to rank it).
 
-    The join BACK defaults to one merge-hinted join (the dup-window
-    table scales with the corpus: the static-broadcast OOM class).
-    ``hot_window_cap`` opts into a broadcast SKEW SPLIT: window hashes
-    above the cap route through an explicit broadcast hash join — no
-    probe-side shuffle or sort, the hot key stays split across win's
-    existing partitions — while cold keys keep the merge join; the hot
-    side is PROVABLY bounded (Σc = |win| ⇒ at most |win|/cap hashes
-    exceed the cap). CLAIM CORRECTED BY MEASUREMENT twice over: r10's
-    single-shot probe read the plain shape as a 49 s tie with the
-    rank-window, and r11's first single-shot read the split 2× ahead —
-    both were JIT-order artifacts (whichever shape runs first pays
-    codegen compilation). The honest best-of-2 round-robin at 1M docs /
-    500k occurrences per hot hash: plain merge 6.8 s, skew split 8.1 s,
-    rank-window 15.2 s — the hot key's single-task sort (~4.5M longs)
-    overlaps the other partitions' work, while the split always pays a
-    SECOND full probe scan, so plain is the right DEFAULT at every
-    scale (at petabyte probe sizes the extra scan is the dominant cost,
-    and AQE's skew-join splits SMJ partitions past its 256 MB threshold
-    anyway). Set the cap only when one window hash's occurrence mass
-    alone exceeds a task's comfortable sort budget while staying under
-    AQE's threshold. Only marked positions reach the per-doc islands
-    window; reconstruction is a JVM higher-order filter (spans per doc
-    are few — no Python in the row path).
+    The join BACK is one merge-hinted join, not a broadcast: the
+    dup-window table scales with the corpus (the static-broadcast OOM
+    class). A hot window hash needs no path of its own: best-of-2
+    round-robin at 1M docs / 500k occurrences per hot hash measured the
+    plain merge at 6.8 s against 8.1 s for a broadcast skew split
+    (which pays a second full probe scan), and AQE's skew join already
+    splits SMJ partitions past its 256 MB threshold. Only marked
+    positions reach the per-doc islands window; reconstruction is a JVM
+    higher-order filter (spans per doc are few — no Python in the row
+    path).
     """
     from pyspark.sql import Window
 
@@ -501,22 +481,10 @@ def span_dedup_remove(
         win.groupBy("wh")
         .agg(F.min(F.struct(id_col, "pos")).alias("first"), F.count("*").alias("c"))
         .filter(F.col("c") > 1)
-        .select("wh", "first", "c")
+        .select("wh", "first")
     )
-    # Join-back: plain merge join by default; hot_window_cap opts into
-    # the broadcast skew split (see docstring — measured slower at the
-    # 1M/500k-occurrence tier because it re-scans win, kept for corpora
-    # whose single hottest hash exceeds a task's sort budget).
-    if hot_window_cap is None:
-        joined_marks = win.join(dup_first.select("wh", "first").hint("merge"), "wh")
-    else:
-        cold = dup_first.filter(F.col("c") <= hot_window_cap).select("wh", "first")
-        hot = dup_first.filter(F.col("c") > hot_window_cap).select("wh", "first")
-        joined_marks = win.join(cold.hint("merge"), "wh").unionByName(
-            win.join(F.broadcast(hot), "wh")
-        )
     marks = (
-        joined_marks
+        win.join(dup_first.hint("merge"), "wh")
         .filter(F.struct(id_col, "pos") != F.col("first"))
         .select(id_col, "pos")  # (doc, pos) unique: wh is unique in dup_first
     )

@@ -84,21 +84,6 @@ def _portable_member(h: F.Column, a: int, b: int) -> F.Column:
     return F.pmod(F.lit(a).cast("long") * h31 + F.lit(b), F.lit(_PORTABLE_P))
 
 
-def _legacy_char_shingles(col: str, n: int = 5) -> F.Column:
-    """Distinct char n-gram ARRAY build — the pre-round-2 formulation,
-    kept ONLY as the measured-slower baseline for
-    scripts/bench_minhash_scale.py. ``transform()`` is an interpreted
-    higher-order function (never codegen'd); every hot path instead
-    explodes shingle POSITIONS and hashes inline (see
-    :func:`add_minhash`). Not exported; do not add new callers."""
-    return F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(length({col}) - {n - 1}, 1)),"
-            f" i -> substring({col}, i, {n}))"
-        )
-    )
-
-
 def add_minhash(
     df: DataFrame,
     text_col: str = "text",
@@ -116,9 +101,10 @@ def add_minhash(
     The previous formulation ran N interpreted ``transform()`` lambdas
     over the shingle array per row (higher-order functions never enter
     whole-stage codegen) — the same footgun class as the pre-round-2
-    simhash64; measured 8× faster at 125k docs
-    (scripts/bench_minhash_scale.py). Duplicate shingles don't need
-    dedup before MIN (min of a multiset == min of its support).
+    simhash64; measured 8× faster at 125k docs (the probe script is
+    deleted; RESULTS.md Round 2 keeps its numbers). Duplicate shingles
+    don't need dedup before MIN (min of a multiset == min of its
+    support).
 
     Shingles never materialize as an array: the POSITION sequence is
     exploded (Generate supports whole-stage codegen) and the 5-char

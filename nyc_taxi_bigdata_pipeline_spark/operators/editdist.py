@@ -107,9 +107,7 @@ def levenshtein_candidates(
     id_col: str = "id",
     str_col: str = "s",
     k: int = 1,
-    pieces: str = "k+1",
     strip_affixes: bool = True,
-    verified: bool = False,
 ) -> DataFrame:
     """Candidate pair frame ``(pid_a, pid_b, ps_a, ps_b)`` before the
     exact verify — a superset of the true <=k result (pigeonhole).
@@ -123,47 +121,22 @@ def levenshtein_candidates(
     ``levenshtein(ps_a, ps_b)`` verify is exact for the original pair
     while running on the short residue.
 
-    ``pieces`` selects the blocking pigeonhole:
-
-    - ``"k+1"`` (classic PassJoin): k+1 segments, >=1 survives k edits;
-      candidates join on ONE segment match. Cheapest on selective
-      corpora, but a corpus-wide CONSTANT segment (zero-padded ids,
-      shared prefixes) turns its bucket into the full length band —
-      measured 547 s at 15k TPC-H customer names (one hot bucket, one
-      task, ~n²/2 candidates).
-    - ``"k+2"`` (multi-piece): k+2 segments, >=2 survive k edits (each
-      edit destroys at most one piece); candidates join on a PAIR of
-      segment matches, so a constant piece alone generates nothing —
-      a pair must ALSO agree on a second, selective piece. Index emits
-      C(k+2, 2) rows/string and the probe (2k+1)² position combos per
-      piece pair; worth it exactly when some piece saturates.
-
-    ``verified`` applies the exact ``levenshtein(ps_a, ps_b) <= k``
-    verify BEFORE the pair-dedup ``distinct()`` instead of after it —
-    the returned SET is identical either way (distinct commutes with a
-    deterministic per-row filter). Worth it only when candidates carry
-    a high duplication factor (many colliding segments per true pair):
-    on TPC-H names at sf0.1 the raw candidate rows are ~1.14× their
-    distinct count, so cutting the distinct's shuffle bought nothing
-    (best-of-3 round-robin 1.79 s unverified vs 2.04 s verified — r13
-    measured rejection; the self-join keeps the post-distinct verify).
-    Exposed for corpora where segment collisions fan out per pair."""
+    Blocking is classic PassJoin: k+1 segments, >=1 survives k edits,
+    and candidates join on ONE segment match. A corpus-wide CONSTANT
+    segment (zero-padded ids, shared prefixes) would turn its bucket
+    into the full length band — measured 547 s at 15k TPC-H customer
+    names (one hot bucket, one task, ~n²/2 candidates); the affix strip
+    removes exactly that constant. The verify stays downstream of the
+    pair-dedup ``distinct()``: raw candidate rows on TPC-H names at
+    sf0.1 are only ~1.14× their distinct count, so verifying first
+    measured slower (2.04 s vs 1.79 s, r13)."""
     if k < 1:
         raise ValueError("k must be >= 1 (use exact_dedup for k=0)")
-    if pieces not in ("k+1", "k+2"):
-        raise ValueError("pieces must be 'k+1' or 'k+2'")
     if strip_affixes:
         df = _strip_common_affixes(
             df.select(F.col(id_col).alias(id_col), F.col(str_col).alias(str_col)),
             str_col,
         )
-    verify = (
-        (lambda c: c.filter(F.levenshtein("ps_a", "ps_b") <= k))
-        if verified
-        else (lambda c: c)
-    )
-    if pieces == "k+2":
-        return _candidates_two_piece(df, id_col, str_col, k, verify)
     m = k + 1
     start, slen = _seg_bounds(m)
 
@@ -241,7 +214,7 @@ def levenshtein_candidates(
         .withColumn("__seg", F.expr("substring(s_b, __p + 1, __sl)"))
     )
 
-    cand = verify(
+    cand = (
         index.join(probe, ["__Lx", "__i", "__seg"])
         .filter(F.col("id_a") != F.col("id_b"))
         .select(
@@ -252,7 +225,7 @@ def levenshtein_candidates(
         )
     ).distinct()
 
-    return cand.union(verify(_short_candidates(base, k, m))).distinct()
+    return cand.union(_short_candidates(base, k, m)).distinct()
 
 
 def _short_candidates(base: DataFrame, k: int, m: int) -> DataFrame:
@@ -336,157 +309,11 @@ def _short_candidates(base: DataFrame, k: int, m: int) -> DataFrame:
     )
 
 
-def _candidates_two_piece(
-    df: DataFrame, id_col: str, str_col: str, k: int, verify=lambda c: c
-) -> DataFrame:
-    """Multi-piece pigeonhole blocking: split indexed strings into
-    m = k+2 pieces; k edits destroy at most k pieces, so at least TWO
-    survive untouched and appear in the other string as exact
-    substrings shifted by at most k. Candidates therefore join on a
-    PAIR of piece matches ``(Lx, i, j, seg_i, seg_j)`` — a single
-    corpus-wide constant piece (the `Customer#` prefix pathology that
-    put ~n²/2 candidates in one task for the k+1 scheme, measured
-    547 s at 15k names) generates nothing by itself.
-
-    Index: C(m, 2) rows per string. Probe: for each assumed length and
-    (i, j) piece pair, the (2k+1)² combinations of both pieces' shifted
-    positions. Lossless by the pigeonhole above; verified downstream
-    like every other candidate."""
-    m = k + 2
-    start, slen = _seg_bounds(m)
-
-    # same fan-out as the k+1 path: stage base once (see note there)
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(str_col).alias("__s"),
-        F.length(str_col).cast("int").alias("__L"),
-    ).localCheckpoint(eager=False)
-
-    # all (i < j) piece index pairs, as a literal inline relation
-    pairs_expr = ", ".join(
-        f"struct({i} AS i, {j} AS j)" for i in range(m) for j in range(i + 1, m)
-    )
-
-    index = (
-        base.filter(F.col("__L") >= m)
-        .select(
-            F.col("__id").alias("id_a"),
-            F.col("__s").alias("s_a"),
-            F.col("__L").alias("__Lx"),
-            F.explode(F.expr(f"array({pairs_expr})")).alias("__ij"),
-        )
-        .select(
-            "id_a",
-            "s_a",
-            "__Lx",
-            F.col("__ij.i").alias("__i"),
-            F.col("__ij.j").alias("__j"),
-        )
-        .withColumn(
-            "__seg_i",
-            F.expr(f"substring(s_a, {start('__i', '__Lx')} + 1, {slen('__i', '__Lx')})"),
-        )
-        .withColumn(
-            "__seg_j",
-            F.expr(f"substring(s_a, {start('__j', '__Lx')} + 1, {slen('__j', '__Lx')})"),
-        )
-        .filter((F.length("__seg_i") >= 1) & (F.length("__seg_j") >= 1))
-    )
-
-    probe = (
-        base.select(
-            F.col("__id").alias("id_b"),
-            F.col("__s").alias("s_b"),
-            F.col("__L").alias("__Lt"),
-        )
-        .select(
-            "id_b",
-            "s_b",
-            "__Lt",
-            F.explode(
-                F.expr(_guarded_seq(f"greatest(__Lt - {k}, {m})", f"__Lt + {k}"))
-            ).alias("__Lx"),
-        )
-        .select(
-            "id_b",
-            "s_b",
-            "__Lt",
-            "__Lx",
-            F.explode(F.expr(f"array({pairs_expr})")).alias("__ij"),
-        )
-        .select(
-            "id_b",
-            "s_b",
-            "__Lt",
-            "__Lx",
-            F.col("__ij.i").alias("__i"),
-            F.col("__ij.j").alias("__j"),
-        )
-        .withColumn("__pi0", F.expr(start("__i", "__Lx")))
-        .withColumn("__sli", F.expr(slen("__i", "__Lx")))
-        .withColumn("__pj0", F.expr(start("__j", "__Lx")))
-        .withColumn("__slj", F.expr(slen("__j", "__Lx")))
-        .filter((F.col("__sli") >= 1) & (F.col("__slj") >= 1))
-        .select(
-            "id_b",
-            "s_b",
-            "__Lx",
-            "__i",
-            "__j",
-            "__sli",
-            "__slj",
-            F.explode(
-                F.expr(
-                    _guarded_seq(
-                        f"greatest(__pi0 - {k}, 0)",
-                        f"least(__pi0 + {k}, __Lt - __sli)",
-                    )
-                )
-            ).alias("__pi"),
-            F.col("__pj0"),
-            F.col("__Lt"),
-        )
-        .select(
-            "id_b",
-            "s_b",
-            "__Lx",
-            "__i",
-            "__j",
-            "__sli",
-            "__slj",
-            "__pi",
-            F.explode(
-                F.expr(
-                    _guarded_seq(
-                        f"greatest(__pj0 - {k}, 0)",
-                        f"least(__pj0 + {k}, __Lt - __slj)",
-                    )
-                )
-            ).alias("__pj"),
-        )
-        .withColumn("__seg_i", F.expr("substring(s_b, __pi + 1, __sli)"))
-        .withColumn("__seg_j", F.expr("substring(s_b, __pj + 1, __slj)"))
-    )
-
-    cand = verify(
-        index.join(probe, ["__Lx", "__i", "__j", "__seg_i", "__seg_j"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("pid_a"),
-            F.greatest("id_a", "id_b").alias("pid_b"),
-            F.when(F.col("id_a") < F.col("id_b"), F.col("s_a")).otherwise(F.col("s_b")).alias("ps_a"),
-            F.when(F.col("id_a") < F.col("id_b"), F.col("s_b")).otherwise(F.col("s_a")).alias("ps_b"),
-        )
-    ).distinct()
-    return cand.union(verify(_short_candidates(base, k, m))).distinct()
-
-
 def levenshtein_self_join(
     df: DataFrame,
     id_col: str = "id",
     str_col: str = "s",
     k: int = 1,
-    pieces: str = "k+1",
     strip_affixes: bool = True,
 ) -> DataFrame:
     """All unordered pairs with ``levenshtein(s_a, s_b) <= k`` as
@@ -495,20 +322,13 @@ def levenshtein_self_join(
     Lossless: segment blocking only ever *adds* candidates beyond the
     true result (pigeonhole guarantees no true pair is missed), and the
     exact verify removes the rest — pinned against a DuckDB brute-force
-    oracle by `benchqueries/fuzzy_ops`. ``pieces`` picks the blocking
-    scheme (see :func:`levenshtein_candidates`): ``"k+2"`` for corpora
-    with a constant piece (shared prefixes, zero-padded ids);
-    ``strip_affixes`` (default on) removes the corpus-wide common
-    prefix/suffix first, which both preserves every distance exactly
-    and de-saturates template corpora (r7 verdict task: 112.5M -> ~4M
-    candidates on TPC-H names, verify DP 18x18 -> 5x5).
+    oracle by `benchqueries/fuzzy_ops`. ``strip_affixes`` (default on)
+    removes the corpus-wide common prefix/suffix first, which both
+    preserves every distance exactly and de-saturates template corpora
+    (r7 verdict task: 112.5M -> ~4M candidates on TPC-H names, verify
+    DP 18x18 -> 5x5).
     """
-    # verified=False deliberately: pushing the DP below the candidate
-    # distinct() measured FLAT-to-worse at sf0.1 (~1.14× duplication
-    # factor — see the ``verified`` param doc; r13 measured rejection)
-    cand = levenshtein_candidates(
-        df, id_col, str_col, k, pieces=pieces, strip_affixes=strip_affixes
-    )
+    cand = levenshtein_candidates(df, id_col, str_col, k, strip_affixes=strip_affixes)
     return (
         cand.withColumn("dist", F.levenshtein("ps_a", "ps_b"))
         .filter(F.col("dist") <= k)

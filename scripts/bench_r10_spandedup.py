@@ -163,12 +163,11 @@ def viral_probe(spark, n_docs: int = 1_000_000) -> None:
         )
         return occ.filter((F.col("c") > 1) & (F.col("rk") > 1)).count()
 
-    # r11 skew split (the shipped shape): hot window hashes (> cap
-    # occurrences, provably <= |win|/cap of them) join via explicit
-    # broadcast -- no probe-side sort -- cold keys keep the merge join
-    from nyc_taxi_bigdata_pipeline_spark.operators.curation import (
-        _HOT_WINDOW_CAP,
-    )
+    # r11 skew split (measured slower than shape_agg, so the operator
+    # no longer carries it): hot window hashes (> cap occurrences,
+    # provably <= |win|/cap of them) join via explicit broadcast -- no
+    # probe-side sort -- cold keys keep the merge join
+    hot_cap = 100_000
 
     def shape_split():
         df2 = (
@@ -177,8 +176,8 @@ def viral_probe(spark, n_docs: int = 1_000_000) -> None:
                  F.count("*").alias("c"))
             .filter(F.col("c") > 1)
         )
-        cold = df2.filter(F.col("c") <= _HOT_WINDOW_CAP).select("wh", "first")
-        hot = df2.filter(F.col("c") > _HOT_WINDOW_CAP).select("wh", "first")
+        cold = df2.filter(F.col("c") <= hot_cap).select("wh", "first")
+        hot = df2.filter(F.col("c") > hot_cap).select("wh", "first")
         return (
             win.join(cold.hint("merge"), "wh")
             .unionByName(win.join(F.broadcast(hot), "wh"))

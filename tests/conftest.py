@@ -9,18 +9,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nyc_taxi_bigdata_pipeline_spark.session import get_spark  # noqa: E402
 
-TEST_CPUS = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
-
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="tests",
-        master=f"local[{TEST_CPUS}]",
-        shuffle_partitions=int(TEST_CPUS),
-        extra_confs={"spark.ui.enabled": "false"},
-    )
-    yield s
+    yield get_spark(app_name="tests", extra_confs={"spark.ui.enabled": "false"})
 
 
 @pytest.fixture(scope="session")

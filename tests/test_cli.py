@@ -69,7 +69,6 @@ def test_cli_ml_subcommand(staged, capsys, tmp_path, monkeypatch):
     # stage 4 silver months so April is ML-eligible
     silver = str(tmp_path / "ml_silver")
     from nyc_taxi_bigdata_pipeline_spark import ingest
-    from .conftest import TEST_CPUS  # noqa: F401  (session fixture already built)
     import nyc_taxi_bigdata_pipeline_spark.session as sess
 
     spark = sess.get_spark()  # getOrCreate → the test session

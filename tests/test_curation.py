@@ -136,48 +136,37 @@ def test_span_dedup_remove_first_occurrence_survives(spark):
     again = curation.span_dedup_remove(cleaned, k=8).collect()
     assert all(r.tokens_removed == 0 for r in again)
     assert_no_python_udf(curation.span_dedup_remove(df, k=8))
+    # one hot window: 40 docs share the same 8-token window; doc 0's
+    # copy is canonical, every other doc loses exactly that window
+    hot = spark.createDataFrame(
+        [(i, "h1 h2 h3 h4 h5 h6 h7 h8 u%d" % i) for i in range(40)],
+        "doc_id long, text string",
+    )
+    got = {
+        r.doc_id: (r.tokens_removed, r.clean_text)
+        for r in curation.span_dedup_remove(hot, k=8).collect()
+    }
+    assert got == {
+        0: (0, "h1 h2 h3 h4 h5 h6 h7 h8 u0"),
+        **{i: (8, f"u{i}") for i in range(1, 40)},
+    }
 
 
 def test_span_dedup_join_back_plan_shapes(spark):
-    """Default join-back is ONE merge-hinted join (best-of-2 round-robin
-    measured it fastest even at 500k occurrences per hot hash — the
-    r11 skew split re-scans the probe side and is opt-in). With
-    hot_window_cap set, BOTH branches must plan: broadcast hash join
-    for hot hashes (bounded by |win|/cap), merge join for the cold
-    bulk. Neither shape may degrade to BNLJ/cartesian."""
+    """The join-back is ONE merge-hinted join: dup_first scales with the
+    corpus, so it must not broadcast, and it may never degrade to
+    BNLJ/cartesian."""
     from nyc_taxi_bigdata_pipeline_spark.plans.explain import physical_plan
 
     df = spark.createDataFrame(
         [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j k")],
         "doc_id long, text string",
     )
-    plain = physical_plan(curation.span_dedup_remove(df, k=8))
-    assert "BroadcastHashJoin" not in plain  # dup_first is corpus-scaled
-    assert "SortMergeJoin" in plain
-    split = physical_plan(
-        curation.span_dedup_remove(df, k=8, hot_window_cap=100_000)
-    )
-    assert "BroadcastHashJoin" in split  # hot branch (bounded by |win|/cap)
-    assert "SortMergeJoin" in split      # cold branch keeps the merge hint
-    for plan in (plain, split):
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-
-def test_span_dedup_skew_split_same_output(spark):
-    """The opt-in skew split must be output-identical to the default
-    join-back on a corpus whose hot window crosses the cap."""
-    rows = [(i, "h1 h2 h3 h4 h5 h6 h7 h8 u%d" % i) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    base = {
-        (r.doc_id, r.tokens_removed, r.clean_text)
-        for r in curation.span_dedup_remove(df, k=8).collect()
-    }
-    split = {
-        (r.doc_id, r.tokens_removed, r.clean_text)
-        for r in curation.span_dedup_remove(df, k=8, hot_window_cap=10).collect()
-    }
-    assert base == split
+    plan = physical_plan(curation.span_dedup_remove(df, k=8))
+    assert "SortMergeJoin" in plan
+    assert "BroadcastHashJoin" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_span_dedup_operator_matches_sql_twin(spark, sf_dir, docs):

@@ -2399,33 +2399,6 @@ def test_levenshtein_self_join_matches_bruteforce(spark):
         assert expected, f"fixture must contain pairs within k={k}"
 
 
-def test_levenshtein_candidates_verified_param_exact(spark):
-    """``verified=True`` (DP pushed below the pair distinct) must yield
-    the same candidate SET as the default post-distinct shape, minus
-    only the >k rows the verify removes — i.e. filtering the default's
-    output equals the verified output (distinct commutes with the
-    deterministic per-row filter)."""
-    from nyc_taxi_bigdata_pipeline_spark.operators.editdist import (
-        levenshtein_candidates,
-    )
-
-    rows = [(i, f"token{i % 40:02d}x{i % 7}") for i in range(200)]
-    df = spark.createDataFrame(rows, "id long, s string")
-    import pyspark.sql.functions as F2
-    default_filtered = {
-        (r.pid_a, r.pid_b)
-        for r in levenshtein_candidates(df, "id", "s", k=1)
-        .filter(F2.levenshtein("ps_a", "ps_b") <= 1)
-        .collect()
-    }
-    verified = {
-        (r.pid_a, r.pid_b)
-        for r in levenshtein_candidates(df, "id", "s", k=1, verified=True)
-        .collect()
-    }
-    assert verified == default_filtered and verified
-
-
 def test_levenshtein_self_join_partition_invariant(spark):
     from nyc_taxi_bigdata_pipeline_spark.operators.editdist import (
         levenshtein_self_join,
@@ -2648,36 +2621,6 @@ def test_audio_spectrograms_dataframe_roundtrip(spark):
         assert r["dominant_band"] == int(np.argmax(ref[4:]))
     # expected dominant bands for 500/2500/6500 Hz at 1 kHz bands
     assert [got[k]["dominant_band"] for k in ["0", "1", "2"]] == [0, 2, 6]
-
-
-def test_levenshtein_two_piece_matches_bruteforce(spark):
-    """The m=k+2 / >=2-surviving-pieces blocking must equal brute force
-    on the same mixed fixture as the k+1 scheme (shorts and empties
-    route through the shared deletion-neighborhood path)."""
-    from nyc_taxi_bigdata_pipeline_spark.operators.editdist import (
-        levenshtein_self_join,
-    )
-
-    words = [
-        "spark", "sparks", "spork", "shark", "sharp", "spar", "scar",
-        "analytics", "analytic", "analytcs", "anaiytics",
-        "pipeline", "pipelines", "pipelin", "pupeline",
-        "a", "b", "ab", "ba", "", "x", "xy", "abc", "abd", "acb",
-        "levenshtein", "levenstein", "levenshtien",
-        "deduplicate", "deduplicates", "reduplicate",
-    ]
-    rows = [(i, w) for i, w in enumerate(words)]
-    df = spark.createDataFrame(rows, "id long, s string")
-    for k in (1, 2):
-        expected = _lev_bruteforce(spark, rows, k)
-        got = {
-            (r["id_a"], r["id_b"], r["dist"])
-            for r in levenshtein_self_join(
-                df, "id", "s", k=k, pieces="k+2"
-            ).collect()
-        }
-        assert got == expected
-        assert expected
 
 
 def test_grouped_quantile_null_group_keys_dropped(spark):
