@@ -202,34 +202,6 @@ def main() -> None:
     _calibration(spark)  # warm the probes' codegen like the queries
     _calibration_seq(spark)
     _calibration_par(spark)
-    # SPARK_GRAFT_BENCH_TRACE=1: per-pass per-query timings + coarse
-    # host telemetry to STDERR (stdout stays the one-line JSON contract)
-    # — the r13 sweep-outlier investigation needed pass-level visibility
-    # that min-of-passes hides.
-    trace = os.environ.get("SPARK_GRAFT_BENCH_TRACE") == "1"
-
-    def _trace(p: int, name: str, dt: float) -> None:
-        if not trace:
-            return
-        import subprocess
-
-        try:
-            mem = next(
-                ln.split()[1]
-                for ln in open("/proc/meminfo")
-                if ln.startswith("MemAvailable")
-            )
-            npy = subprocess.run(
-                ["sh", "-c", "ps -e -o comm= | grep -c ^python"],
-                capture_output=True, text=True,
-            ).stdout.strip()
-        except Exception:
-            mem = npy = "?"
-        print(
-            f"TRACE pass{p} {name} {dt:.3f}s mem_avail_kb={mem} pyprocs={npy}",
-            file=sys.stderr, flush=True,
-        )
-
     for rep in range(args.repeat):
         calib = min(calib, _calibration(spark))
         calib_seq = min(calib_seq, _calibration_seq(spark))
@@ -241,7 +213,6 @@ def main() -> None:
             dt = time.perf_counter() - t0
             assert rows is not None
             timings[name] = round(min(timings.get(name, float("inf")), dt), 4)
-            _trace(rep, name, dt)
             _release_query_state(spark)
 
     sf = None

@@ -94,7 +94,8 @@ def _retention(engine: str, table: str) -> str:
     doc="analytics ext: weekly retention cohorts — cohort = first active "
         "epoch-week per user via an unordered MIN window over the distinct "
         "per-user week set (no aggregate+self-join: measured 3.1 s → 0.8 s "
-        "at 12.5M events, scripts/bench_behavior_scale.py); weeks are "
+        "at 12.5M events, scripts/bench_behavior_scale.py — script deleted; "
+        "numbers stand, RESULTS.md Round 2); weeks are "
         "already distinct per user so COUNT(*) is the user count",
     bench=True,
 )
@@ -185,7 +186,8 @@ def interval_join_views(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-(user, bucket) micro-joins stay bounded by arrival rate × "
         "lookback instead of going quadratic on a hot user (measured "
         "linear at 15M zipf rows where the residual form is 28× "
-        "superlinear, scripts/bench_r4_skew.py). Identical oracle: the "
+        "superlinear, scripts/bench_r4_skew.py — script deleted; numbers "
+        "stand, RESULTS.md Round 4). Identical oracle: the "
         "bucketing provably changes no pair",
     bench=True,
 )

@@ -272,6 +272,8 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("mn"),
         F.max("value").alias("mx"),
         F.count("*").alias("n"),
+    # receipt: unstaged/staged 1.27× at 10×
+    # (reports/receipts/nockpt_10x_tpch.json; this builder's 3 stagings A/B'd together)
     ).localCheckpoint(eager=False)
     binned = ev.crossJoin(F.broadcast(mm)).select(
         "value",
@@ -293,6 +295,7 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     offsets = counts.select(
         "bkt", "c", F.coalesce(F.sum("c").over(off_w), F.lit(0)).alias("off")
+    # receipt: with this builder's first staging (1.27× at 10×)
     ).localCheckpoint(eager=False)
 
     # target ranks: r = 1 + (n-1)p, interpolation anchors floor/ceil —
@@ -329,6 +332,7 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = (
         ranked.join(F.broadcast(target_ranks), F.col("grn") == F.col("rk"))
         .select("rk", "value")
+        # receipt: with this builder's first staging (1.27× at 10×)
         .localCheckpoint(eager=False)
     )
     lov, hiv = hits.alias("lov"), hits.alias("hiv")

@@ -160,6 +160,8 @@ def curation_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_rep_docs")
+    # receipt: unstaged/staged 16.11× at 10×
+    # (reports/receipts/nockpt_10x_curation.json)
     m = spark.sql(_rep_m_sql(D.SPARK, "bq_rep_docs")).localCheckpoint(eager=False)
     m.createOrReplaceTempView("bq_rep_m")
     return spark.sql(_rep_read_sql(D.SPARK, "bq_rep_m"))
@@ -266,6 +268,8 @@ def curation_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange, which runtime exchange reuse already dedups — the staged
     # checkpoint only added a job boundary and measured 0.84–0.87×
     # at the 10×/100× salted tiers (scripts/bench_r13_scale_receipts.py)
+    # That ratio came from a no-op patch: both arms ran the staged code,
+    # so it is noise (OPTIMIZATION_r13 §5 annotation).
     return spark.sql(_domain_mixture(D.SPARK, "bq_mix_docs"))
 
 
@@ -714,6 +718,8 @@ def curation_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram map, the anti-join, two scalar anchors, and its own stage agg —
     # Spark would otherwise recompute the injected-text scan per branch);
     # lazy = materializes inside the first action, so bench timing is honest
+    # receipt: unstaged/staged 1.18× at 10×
+    # (reports/receipts/nockpt_10x_curation.json; this builder's 5 stagings A/B'd together)
     corpus = base.filter(F.col("doc_id") % 50 != 0).localCheckpoint(eager=False)
     bench = base.filter(F.col("doc_id") % 50 == 0)
 
@@ -729,11 +735,13 @@ def curation_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
+    # receipt: with this builder's first staging (1.18× at 10×)
     s1 = corpus.join(hit, "doc_id", "left_anti").localCheckpoint(eager=False)
 
     # stage 2: Gopher repetition filter (operators/curation.drop_repetitive;
     # xxhash64 distinct-token counting ≡ string-distinct up to the accepted
     # 2^-64 collision class)
+    # receipt: with this builder's first staging (1.18× at 10×)
     s2 = curation.drop_repetitive(s1).localCheckpoint(eager=False)
 
     # stage 3: model-based quality gate — the h64-rendered twin of
@@ -764,6 +772,7 @@ def curation_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2q = (
         s2.join(qk, "doc_id")
         .select("doc_id", "source", "text")
+        # receipt: with this builder's first staging (1.18× at 10×)
         .localCheckpoint(eager=False)
     )
 
@@ -777,6 +786,7 @@ def curation_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .select("doc_id", "source", "text")
+        # receipt: with this builder's first staging (1.18× at 10×)
         .localCheckpoint(eager=False)
     )
 
@@ -1015,11 +1025,14 @@ def curation_url_dedup_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow frames lazily; no new exchange is introduced.
     canon = spark.sql(
         _url_canon_sql(D.SPARK, "bq_urlddc_docs")
+    # receipt: unstaged/staged 1.76× at 10×
+    # (reports/receipts/nockpt_10x_curation.json; this builder's 2 stagings A/B'd together)
     ).localCheckpoint(eager=False)
     firsts = canon.groupBy("curl").agg(F.min("doc_id").alias("doc_id"))
     kept = (
         canon.join(firsts.select("doc_id"), "doc_id", "left_semi")
         .select("domain", "doc_id")
+        # receipt: with this builder's first staging (1.76× at 10×)
         .localCheckpoint(eager=False)
     )
     h = F.expr(D.seeded_h64("CAST(doc_id AS STRING)", _URL_SEED, D.SPARK))
@@ -1161,10 +1174,13 @@ def curation_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.createOrReplaceTempView("bq_dsir_docs")
     # toks feed both gram arms, grams fan into tot/raw/tgt/scores —
     # CTE-inlining class twice over: stage each once, lazily
+    # receipt: unstaged/staged 1.51× at 10×
+    # (reports/receipts/nockpt_10x_curation.json; this builder's 2 stagings A/B'd together)
     toks = spark.sql(_dsir_toks_sql(D.SPARK, "bq_dsir_docs")).localCheckpoint(
         eager=False
     )
     toks.createOrReplaceTempView("bq_dsir_toks")
+    # receipt: with this builder's first staging (1.51× at 10×)
     grams = spark.sql(_dsir_grams_sql(D.SPARK, "bq_dsir_toks")).localCheckpoint(
         eager=False
     )
@@ -1255,6 +1271,8 @@ def curation_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.createOrReplaceTempView("bq_tb_docs")
     # scored docs feed the operator's refinement passes AND the final
     # per-source aggregates — lazy checkpoint against recompute fan-out
+    # receipt: unstaged/staged 5.22× at 10×
+    # (reports/receipts/nockpt_10x_curation.json)
     d = spark.sql(_tb_docs_sql(D.SPARK, "bq_tb_docs")).localCheckpoint(
         eager=False
     )
@@ -1421,10 +1439,13 @@ def curation_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_ccn_docs")
+    # receipt: unstaged/staged 5.39× at 10×
+    # (reports/receipts/nockpt_10x_curation.json; this builder's 2 stagings A/B'd together)
     bi = spark.sql(_ccnet_bi_sql(D.SPARK, "bq_ccn_docs")).localCheckpoint(
         eager=False
     )
     bi.createOrReplaceTempView("bq_ccn_bi")
+    # receipt: with this builder's first staging (5.39× at 10×)
     pd = spark.sql(_ccnet_perdoc_sql(D.SPARK, "bq_ccn_bi")).localCheckpoint(
         eager=False
     )
@@ -1517,6 +1538,8 @@ def curation_domain_token_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_dtc_docs")
+    # receipt: unstaged/staged 2.67× at 10×
+    # (reports/receipts/nockpt_10x_curation.json)
     d = spark.sql(_tb_docs_sql(D.SPARK, "bq_dtc_docs")).localCheckpoint(
         eager=False
     )

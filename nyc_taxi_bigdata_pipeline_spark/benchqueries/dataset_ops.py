@@ -414,18 +414,17 @@ def _mixture_read_sql(engine: str, table: str, counts: str) -> str:
         "deterministically downsampled to the smallest source's count "
         "via integer-exact portable-hash acceptance ((h % 1e6)·n_src < "
         "n_min·1e6; no float rate, no rand()). Two corpus passes "
-        "(count, filter) and a broadcast-sized source table; the Spark "
-        "side lazily checkpoints the counts so the CTE isn't re-scanned "
-        "per downstream reference",
+        "(count, filter) and a broadcast-sized source table",
 )
 def dataset_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "bq_mix_docs"
     )
-    counts = spark.sql(_MIX_COUNTS.format(table="bq_mix_docs")).localCheckpoint(
-        eager=False
+    # no checkpoint on the counts: it did not pay (unstaged/staged 0.98×
+    # at the 10× tier, 0.73× at 100×; reports/receipts/nockpt_*)
+    spark.sql(_MIX_COUNTS.format(table="bq_mix_docs")).createOrReplaceTempView(
+        "bq_mix_counts"
     )
-    counts.createOrReplaceTempView("bq_mix_counts")
     return spark.sql(_mixture_read_sql(D.SPARK, "bq_mix_docs", "bq_mix_counts"))
 
 
@@ -503,13 +502,19 @@ def _temperature_mixture(engine: str, table: str) -> str:
     engines compute identical doubles per domain — but a SUM over them
     is accumulation-ORDER-dependent, so each sqrt snaps to integer
     micros first (the micro-nat idiom) and the sum is exact BIGINT.
-    Thresholds are then pure integer products/divisions. BIGINT bound:
-    (total/2)·sqrt_micro·2^20 stays under 2^63 to ~1e9 docs per table;
-    past that, lift the products to DECIMAL(38,0) (ANOVA overflow
-    class)."""
+    Thresholds are then pure integer products/divisions, taken in
+    DECIMAL(38,0) (ANOVA overflow class): (total/2)·sqrt_micro·2^20
+    passes 2^63 at ~9e4 docs in one language, where BIGINT raised in
+    both engines. DuckDB's ``//`` on DECIMAL divides as DOUBLE, so its
+    quotient is taken in HUGEINT; Spark's DIV truncates decimals
+    exactly. The quotient is ≤ total·2^19, a BIGINT at any corpus."""
     h = D.seeded_h64("CAST(doc_id AS STRING)", _TMIX_SEED, engine)
     budget = D.idiv("total", str(_TMIX_BUDGET_DIV), engine)
-    thr = D.idiv(f"{budget} * sqm * 1048576", "(nd * ssq)", engine)
+    num = f"CAST({budget} AS DECIMAL(38,0)) * sqm * 1048576"
+    den = "(CAST(nd AS DECIMAL(38,0)) * ssq)"
+    if engine == D.DUCK:
+        num, den = f"CAST({num} AS HUGEINT)", f"CAST({den} AS HUGEINT)"
+    thr = f"CAST({D.idiv(num, den, engine)} AS BIGINT)"
     return f"""
     WITH n AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS nd
                FROM {table} GROUP BY lang),
@@ -554,10 +559,9 @@ def dataset_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-shot WITH deliberately (r12 staging REVERTED r13): same
     # runtime-exchange-reuse finding as curation_domain_mixture — the
     # staged count frame measured 0.99× at 10× (flat; the checkpoint
-    # job boundary buys nothing). Probe note: the Σsqrt-micro BIGINT
-    # accumulator saturates near 10⁸ docs (100× tier overflow) — a
-    # DECIMAL(38,0) widening is the known fix (ANOVA precedent) but is
-    # oracle-text-coupled; unreachable at driver SFs.
+    # job boundary buys nothing).
+    # That ratio came from a no-op patch: both arms ran the staged code,
+    # so it is noise (OPTIMIZATION_r13 §5 annotation).
     return spark.sql(_temperature_mixture(D.SPARK, "bq_tmix_docs"))
 
 
@@ -638,6 +642,8 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_dc_docs")
+    # receipt: unstaged/staged 0.89× at 10×, 1.08× at 100×
+    # (reports/receipts/nockpt_10x_dataset_dedup.json, nockpt_100x_corpus_datacard.json)
     t = spark.sql(_datacard_t_sql(D.SPARK, "bq_dc_docs")).localCheckpoint(
         eager=False
     )

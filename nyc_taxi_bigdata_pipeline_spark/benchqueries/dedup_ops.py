@@ -336,8 +336,11 @@ def dedup_minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_mhv_docs")
     prefix, brows_tail, g_tail = _mhv_fragments(D.SPARK, "bq_mhv_docs")
+    # receipt: unstaged/staged 15.15× at 10×
+    # (reports/receipts/nockpt_10x_dedup_minhash_verify.json; this builder's 2 stagings A/B'd together)
     brows = spark.sql(f"WITH {prefix} {brows_tail}").localCheckpoint(eager=False)
     brows.createOrReplaceTempView("bq_mhv_brows")
+    # receipt: with this builder's first staging (15.15× at 10×)
     g = spark.sql(f"WITH {prefix} {g_tail}").localCheckpoint(eager=False)
     g.createOrReplaceTempView("bq_mhv_g")
     return spark.sql(_mhv_verify_sql(D.SPARK, "bq_mhv_brows", "bq_mhv_g"))
@@ -642,6 +645,9 @@ def dedup_incremental_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("bq_inc_brows_b", pb, bb_tail),
         ("bq_inc_g_b", pb, gb_tail),
     ):
+        # receipt: unstaged/staged >35× at 10× (nockpt cut after ~1,150 s vs
+        # 32.8 s staged; reports/receipts/nockpt_10x_dedup_incremental_verify.md;
+        # this builder's 2 stagings A/B'd together)
         spark.sql(f"WITH {prefix} {tail}").localCheckpoint(
             eager=False
         ).createOrReplaceTempView(view)
@@ -650,6 +656,7 @@ def dedup_incremental_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             D.SPARK, "bq_inc_brows_b", "bq_inc_brows_c",
             "bq_inc_g_b", "bq_inc_g_c",
         )
+        # receipt: with this builder's first staging (>35× at 10×)
     ).localCheckpoint(eager=False)
     cross_dropped.createOrReplaceTempView("bq_inc_cross_dropped")
     win_pairs = spark.sql(
@@ -750,6 +757,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides of the adjacent-id pair join read the checkpointed frame
     sh = spark.sql(
         _simhash_sh_sql(D.SPARK, "bq_simh_docs")
+    # receipt: unstaged/staged 1.10× at 10×
+    # (reports/receipts/nockpt_10x_dataset_dedup.json)
     ).localCheckpoint(eager=False)
     sh.createOrReplaceTempView("bq_simh_sh")
     return spark.sql(_simhash(D.SPARK, "bq_simh_docs", sh_rel="bq_simh_sh"))

@@ -9,8 +9,9 @@ blocking lossless end-to-end on a corpus that is deliberately
 adversarial for it: every ``Customer#`` name shares a constant 9-char
 prefix, so the prefix segment matches everything and candidates
 degenerate toward the length band (see the saturation note in the
-operator docstring; `scripts/bench_r6_editdist.py` measures the
-selective-corpus regime where blocking pays).
+operator docstring; `scripts/bench_r6_editdist.py` measured the
+selective-corpus regime where blocking pays: script deleted; numbers
+stand, RESULTS.md Round 6).
 """
 
 from __future__ import annotations

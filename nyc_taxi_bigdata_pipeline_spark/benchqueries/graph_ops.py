@@ -140,6 +140,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
+        # receipt: unstaged/staged 1.12× at 10×
+        # (reports/receipts/nockpt_10x_graph_search_sketch.json)
         .localCheckpoint(eager=False)  # referenced 3× under different keys
     )
     e1 = e.alias("e1")
@@ -282,6 +284,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
+        # receipt: unstaged/staged 1.08× at 10×
+        # (reports/receipts/nockpt_10x_graph_search_sketch.json)
         .localCheckpoint(eager=False)  # referenced 4x under different keys
     )
     deg = (

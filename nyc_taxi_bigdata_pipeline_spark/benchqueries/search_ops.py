@@ -481,12 +481,15 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tf relation fans into n/dfreq/w(×2)/norms(×2) — CTE-inlining
     # class: one corpus tokenize pass, lazily checkpointed (honest: the
     # first caller action materializes it inside its own timing)
+    # receipt: unstaged/staged 1.08× at 10×
+    # (reports/receipts/nockpt_10x_graph_search_sketch.json; this builder's 2 stagings A/B'd together)
     tf = spark.sql(_rrf_tf_sql(D.SPARK, "bq_rrf_cand")).localCheckpoint(
         eager=False
     )
     tf.createOrReplaceTempView("bq_rrf_tf")
     # w fans into norms + both lexdot sides (CTE-inlining class): one
     # materialized weight pass instead of three (r12)
+    # receipt: with this builder's first staging (1.08× at 10×)
     w = spark.sql(_rrf_w_sql("bq_rrf_tf")).localCheckpoint(eager=False)
     w.createOrReplaceTempView("bq_rrf_w")
     # emb relation deliberately NOT staged (r13 measured rejection): it
@@ -496,6 +499,8 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to save it — 0.88× at the 100× salted tier
     # (bench_r13_scale_receipts.py). The ×2 scans in the plan are one
     # full pass + one pruned probe read, not a recompute class.
+    # That ratio came from a no-op patch: both arms ran the staged code,
+    # so it is noise (OPTIMIZATION_r13 §5 annotation).
     spark.sql(_rrf_emb_sql("bq_rrf_docs", "bq_rrf_emb_raw")).createOrReplaceTempView(
         "bq_rrf_emb"
     )
@@ -739,39 +744,19 @@ def search_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-partition single-file scan pitfall: spread the tokenize explode
     cand = cand.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     cand.createOrReplaceTempView("bq_ev_cand")
-    # one corpus tokenize pass, lazily checkpointed (CTE-inlining class;
-    # honest: the first caller action materializes it inside its timing)
-    tf = spark.sql(_rrf_tf_sql(D.SPARK, "bq_ev_cand")).localCheckpoint(
-        eager=False
-    )
-    tf.createOrReplaceTempView("bq_ev_tf")
+    # no checkpoints: staging tf, the qrel relation, w and both arms'
+    # top-K (r12) did not pay — unstaged/staged 0.99× at the 10× tier
+    # and 1.00× at 100× (reports/receipts/nockpt_*)
+    spark.sql(_rrf_tf_sql(D.SPARK, "bq_ev_cand")).createOrReplaceTempView("bq_ev_tf")
     spark.sql(
         _eval_emb_sql(D.SPARK, "bq_ev_docs", "bq_ev_emb_raw", "bq_ev_planted")
     ).createOrReplaceTempView("bq_ev_emb")
-    # the qrel relation is |probes|·5 rows but its view re-inlines the
-    # whole 5-way planted UNION (docs⋈emb point joins) per consumer
-    # (relcnt + dcg) — materialize it once
-    rel = spark.sql(
-        "SELECT qid, doc_id, rel FROM bq_ev_planted"
-    ).localCheckpoint(eager=False)
-    rel.createOrReplaceTempView("bq_ev_rel")
-    # r12 recompute fix (92 parquet scans / 141 Exchanges / 0 reuse in
-    # the inlined plan): w fans into norms + both lexdot sides, and each
-    # arm's ranking is referenced twice (fused + arms) — materialize w
-    # once and each arm's bounded top-K once (≤|probes|·_RRF_FUSE_K
-    # rows; every downstream consumer filters at least that tight, so
-    # results are identical). Lazy checkpoints: the caller's first
-    # action pays for them inside its own timing.
-    w = spark.sql(_rrf_w_sql("bq_ev_tf")).localCheckpoint(eager=False)
-    w.createOrReplaceTempView("bq_ev_w")
-    lex = spark.sql(
-        _rrf_lex_topk_sql(D.SPARK, "bq_ev_w")
-    ).localCheckpoint(eager=False)
-    lex.createOrReplaceTempView("bq_ev_lex")
-    sem = spark.sql(
-        _rrf_sem_topk_sql(D.SPARK, "bq_ev_emb")
-    ).localCheckpoint(eager=False)
-    sem.createOrReplaceTempView("bq_ev_sem")
+    spark.sql("SELECT qid, doc_id, rel FROM bq_ev_planted").createOrReplaceTempView(
+        "bq_ev_rel"
+    )
+    spark.sql(_rrf_w_sql("bq_ev_tf")).createOrReplaceTempView("bq_ev_w")
+    spark.sql(_rrf_lex_topk_sql(D.SPARK, "bq_ev_w")).createOrReplaceTempView("bq_ev_lex")
+    spark.sql(_rrf_sem_topk_sql(D.SPARK, "bq_ev_emb")).createOrReplaceTempView("bq_ev_sem")
     return spark.sql(
         _eval_read_sql(
             D.SPARK,
@@ -803,12 +788,15 @@ def text_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_tfidf_docs")
+    # receipt: unstaged/staged 2.03× at 10×
+    # (reports/receipts/nockpt_10x_graph_search_sketch.json; this builder's 2 stagings A/B'd together)
     tf = spark.sql(_tfidf_tf_sql(D.SPARK, "bq_tfidf_docs")).localCheckpoint(
         eager=False
     )
     tf.createOrReplaceTempView("bq_tfidf_tf")
     # w fans into norms + both dot sides (CTE-inlining class): one
     # materialized weight pass instead of three (r12)
+    # receipt: with this builder's first staging (2.03× at 10×)
     w = spark.sql(_rrf_w_sql("bq_tfidf_tf")).localCheckpoint(eager=False)
     w.createOrReplaceTempView("bq_tfidf_w")
     return spark.sql(_tfidf_read_sql("bq_tfidf_tf", w_rel="bq_tfidf_w"))

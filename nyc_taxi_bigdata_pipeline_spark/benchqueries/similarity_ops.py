@@ -140,6 +140,8 @@ def similarity_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers' window exchanges runtime-reuse the scored subtree, so
     # the checkpoint's job boundary is pure overhead
     # (bench_r13_scale_receipts.py).
+    # That ratio came from a no-op patch: both arms ran the staged code,
+    # so it is noise (OPTIMIZATION_r13 §5 annotation).
     return spark.sql(_triplet_sql(D.SPARK, "bq_trip_emb"))
 
 
@@ -274,6 +276,8 @@ def similarity_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cand fans into pairs (×2) + the operator's rel collect — lazy
     # checkpoint against the CTE-inlining recompute class
+    # receipt: unstaged/staged 1.46× at 10×
+    # (reports/receipts/nockpt_10x_graph_search_sketch.json)
     cand = spark.sql(_mmr_cand_sql(D.SPARK, "bq_mmr_emb")).localCheckpoint(
         eager=False
     )

@@ -164,6 +164,9 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("bq_cms_docs")
     tc = spark.sql(
         _cms_tokcounts_sql(D.SPARK, "bq_cms_docs")
+    # receipt: unstaged/staged 1.00× at 10×, 1.02× at 100×: flat, kept only
+    # because test_plans.test_plan_risk_queries_scan_counts pins one scan
+    # (reports/receipts/nockpt_10x_graph_search_sketch.json, nockpt_100x_cms_heavy_hitters.json)
     ).localCheckpoint(eager=False)
     tc.createOrReplaceTempView("bq_cms_tokcounts")
     return spark.sql(
@@ -358,6 +361,9 @@ def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the read-back over it; the oracle keeps the equivalent one-shot
     # SQL, same values either way.
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("bq_hdr_orders")
+    # receipt: unstaged/staged 0.97× at 10×, 1.046× at 100×: flat, kept only
+    # because test_plans.test_plan_risk_queries_scan_counts pins one scan
+    # (reports/receipts/nockpt_10x_graph_search_sketch.json, nockpt_100x_hdr_quantile_sketch.json)
     bins = spark.sql(_hdr_bins_sql(D.SPARK, "bq_hdr_orders")).localCheckpoint(eager=False)
     bins.createOrReplaceTempView("bq_hdr_bins")
     return spark.sql(
@@ -453,6 +459,8 @@ def hll_segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (runtime-reused) and the staged checkpoint measured 0.77×/0.96×
     # at the 100×/10× salted tiers (bench_r13_scale_receipts.py). Both
     # engines run the same two-scan INTERSECT exhibit.
+    # That ratio came from a no-op patch: both arms ran the staged code,
+    # so it is noise (OPTIMIZATION_r13 §5 annotation).
     return spark.sql(_hll_overlap_sql(D.SPARK, "bq_hllov_orders"))
 
 

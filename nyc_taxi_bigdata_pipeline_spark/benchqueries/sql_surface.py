@@ -55,6 +55,8 @@ def set_ops_customer_years(spark: SparkSession, sf_dir: str) -> DataFrame:
             o.filter(F.year("o_orderdate") == year)
             .select("o_custkey")
             .distinct()
+            # receipt: unstaged/staged 0.96× at 10×, 1.15× at 100×
+            # (reports/receipts/nockpt_10x_tpch.json, nockpt_100x_set_ops_customer_years.json)
             .localCheckpoint(eager=False)
         )
 

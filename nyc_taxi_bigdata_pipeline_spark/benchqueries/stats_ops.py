@@ -189,8 +189,9 @@ def robust_zscore_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def mad_profile(events: DataFrame) -> DataFrame:
     """The shipped robust_zscore_mad plan over any (event_type, value)
-    frame — the scale probe (scripts/bench_r9_quantiles.py) drives THIS
-    function so probe numbers measure the registry path, not a twin."""
+    frame. The r9 scale probe (scripts/bench_r9_quantiles.py: script
+    deleted; numbers stand, RESULTS.md Round 9) drove this function, so
+    its numbers measure the registry path, not a twin."""
     from ..operators.quantiles import grouped_quantile_select
 
     # ONE corpus-scale cut: `v` is read by every refinement pass of both
@@ -204,6 +205,8 @@ def mad_profile(events: DataFrame) -> DataFrame:
         events
         .filter(F.col("value").isNotNull())
         .select("event_type", F.col("value").alias("x"))
+        # receipt: unstaged/staged 1.10× at 10×
+        # (reports/receipts/nockpt_10x_stats_text.json)
         .localCheckpoint(eager=False)
     )
     med = grouped_quantile_select(v, ["event_type"], "x", [0.5]).select(
@@ -294,6 +297,8 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "bq_chi2_docs"
     )
+    # receipt: unstaged/staged 1.28× at 10×
+    # (reports/receipts/nockpt_10x_stats_text.json)
     ob = spark.sql(_CHI2_DOCS_SQL.format(table="bq_chi2_docs")).localCheckpoint(
         eager=False
     )
@@ -649,6 +654,8 @@ def drift_psi_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # classification came from the audit script's final+initial-plan
     # double count (fixed this round). Staged measured 0.59×/0.73× at
     # the 10×/100× salted tiers (bench_r13_scale_receipts.py).
+    # That ratio came from a no-op patch: both arms ran the staged code,
+    # so it is noise (OPTIMIZATION_r13 §5 annotation).
     return spark.sql(_psi_sql(D.SPARK, "bq_psi_events"))
 
 

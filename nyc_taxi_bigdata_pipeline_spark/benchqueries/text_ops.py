@@ -369,6 +369,8 @@ def _kl_read_sql(sf: str, cont: bool = False) -> str:
 )
 def text_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("bq_kl_docs")
+    # receipt: unstaged/staged 1.07× at 10×
+    # (reports/receipts/nockpt_10x_stats_text.json)
     sf = spark.sql(_kl_docs_sql(D.SPARK, "bq_kl_docs")).localCheckpoint(eager=False)
     sf.createOrReplaceTempView("bq_kl_counts")
     return spark.sql(_kl_read_sql("bq_kl_counts"))
@@ -546,7 +548,9 @@ def text_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.lower(F.trim("text")), " ")).alias("__w")
     )
     totals = ws.agg(F.sum("__w").cast("bigint").alias("ws_tokens"))
-    enc = enc.localCheckpoint(eager=False)  # two aggregates read it
+    # enc feeds two aggregates but is not checkpointed: staging it did
+    # not pay (unstaged/staged 0.98× at the 10× tier, 0.77× at 100×;
+    # reports/receipts/nockpt_*)
     counts = enc.select(F.size("tokens").alias("__n")).agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("__n").cast("bigint").alias("bpe_tokens"),
@@ -627,6 +631,8 @@ def text_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = spark.sql(
         _cooc_docs_sql(D.SPARK, "bq_cooc_docs")
+    # receipt: unstaged/staged 0.95× at 10×, 1.17× at 100×
+    # (reports/receipts/nockpt_10x_stats_text.json, nockpt_100x_text_cooccurrence_pairs.json)
     ).localCheckpoint(eager=False)
     d.createOrReplaceTempView("bq_cooc_incidence")
     return spark.sql(
@@ -686,6 +692,8 @@ def text_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = spark.sql(
         _cooc_docs_sql(D.SPARK, "bq_assoc_docs")
+    # receipt: unstaged/staged 1.10× at 10×
+    # (reports/receipts/nockpt_10x_stats_text.json)
     ).localCheckpoint(eager=False)
     d.createOrReplaceTempView("bq_assoc_incidence")
     return spark.sql(
@@ -801,18 +809,18 @@ def _oov_read_sql(toks_rel: str) -> str:
         "and type rates per language for the content-stable 80/20 hash "
         "split (the split-acceptance gate before LM evaluation). Train "
         "vocabulary is one distinct pass; eval coverage is a LEFT JOIN "
-        "on the token (broadcastable vocab at any real SF); the Spark "
-        "side materializes the tokenize+bucket pass once (CTE-inlining "
-        "class: vocab and eval both read it)",
+        "on the token (broadcastable vocab at any real SF)",
 )
 def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_oov_docs")
-    toks = spark.sql(_oov_toks_sql(D.SPARK, "bq_oov_docs")).localCheckpoint(
-        eager=False
+    # no checkpoint on the token pass: materializing it cost more than
+    # the re-read it saves (unstaged/staged 0.50× at the 10× tier, 0.14×
+    # at 100×; reports/receipts/nockpt_*)
+    spark.sql(_oov_toks_sql(D.SPARK, "bq_oov_docs")).createOrReplaceTempView(
+        "bq_oov_toks"
     )
-    toks.createOrReplaceTempView("bq_oov_toks")
     return spark.sql(_oov_read_sql("bq_oov_toks"))
 
 
@@ -955,8 +963,9 @@ def text_langid_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def langid_confusion(spark: SparkSession, docs_view: str) -> DataFrame:
     """Shipped langid plan over any registered (doc_id, lang, text)
-    view — shared by the registry query, the scale probe
-    (scripts/bench_r9_textops.py) and the discrimination test."""
+    view — shared by the registry query and the discrimination test (the
+    r9 scale probe scripts/bench_r9_textops.py drove it too: script
+    deleted; numbers stand, RESULTS.md Round 9)."""
     rows = _langid_rows_sql(D.SPARK, docs_view)
     # two tokenize passes (model, eval) — each aggregates map-side to a
     # small frame; both checkpoint lazily because the read SQL references
@@ -964,12 +973,15 @@ def langid_confusion(spark: SparkSession, docs_view: str) -> DataFrame:
     model = spark.sql(
         f"SELECT lang AS cand_lang, fb, CAST(COUNT(*) AS BIGINT) AS clb"
         f" FROM ({rows}) r WHERE sb < 80 GROUP BY lang, fb"
+    # receipt: unstaged/staged 2.04× at 10×
+    # (reports/receipts/nockpt_10x_stats_text.json; this builder's 2 stagings A/B'd together)
     ).localCheckpoint(eager=False)
     model.createOrReplaceTempView("bq_langid_model")
     ed = spark.sql(
         f"SELECT doc_id, lang AS true_lang, fb,"
         f" CAST(COUNT(*) AS BIGINT) AS c"
         f" FROM ({rows}) r WHERE sb >= 80 GROUP BY doc_id, lang, fb"
+    # receipt: with this builder's first staging (2.04× at 10×)
     ).localCheckpoint(eager=False)
     ed.createOrReplaceTempView("bq_langid_ed")
     return spark.sql(
@@ -1057,6 +1069,8 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_winnow_docs")
+    # receipt: unstaged/staged 1.43× at 10×
+    # (reports/receipts/nockpt_10x_stats_text.json)
     fps = spark.sql(_winnow_fps_sql(D.SPARK, "bq_winnow_docs")).localCheckpoint(
         eager=False
     )
@@ -1159,6 +1173,8 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_lm_docs")
+    # receipt: unstaged/staged 2.58× at 10×
+    # (reports/receipts/nockpt_10x_stats_text.json)
     bi = spark.sql(_lm_bi_sql(D.SPARK, "bq_lm_docs")).localCheckpoint(eager=False)
     bi.createOrReplaceTempView("bq_lm_bi")
     return spark.sql(_lm_read_sql("bq_lm_bi"))
@@ -1242,6 +1258,8 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_vcc_docs")
+    # receipt: unstaged/staged 1.14× at 10×
+    # (reports/receipts/nockpt_10x_stats_text.json)
     vocab = spark.sql(_vcc_vocab_sql(D.SPARK, "bq_vcc_docs")).localCheckpoint(
         eager=False
     )

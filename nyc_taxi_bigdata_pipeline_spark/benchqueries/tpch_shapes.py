@@ -102,6 +102,8 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(sx(C.sum_exact(_DISC, "total_rev")))
         # rev feeds both the MAX anchor and the final join — materialize
         # the supplier-count-sized aggregate once or lineitem scans twice
+        # receipt: unstaged/staged 1.24× at 10×
+        # (reports/receipts/nockpt_10x_tpch.json)
         .localCheckpoint(eager=False)
     )
     mx = rev.agg(F.max("total_rev").alias("mx"))
@@ -239,9 +241,9 @@ def brand_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand")
         .agg(F.expr(f"SUM({_DISC})").alias("rev_dec"))
-        # br feeds both the grand-total anchor and the share filter —
-        # materialize the ~25-brand aggregate once or lineitem scans twice
-        .localCheckpoint(eager=False)
+        # br feeds both the grand-total anchor and the share filter, but
+        # staging it did not pay (unstaged/staged 0.84× at the 10× tier,
+        # 0.88× at 100×; reports/receipts/nockpt_*)
     )
     tot = br.agg(F.sum("rev_dec").alias("t"))
     return (
@@ -635,6 +637,8 @@ def sole_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lineitem×2/orders×2, 0 reuse); narrow to what both consumers
         # need and stage lazily
         .select("l_orderkey", "l_suppkey", "late")
+        # receipt: unstaged/staged 1.11× at 10×
+        # (reports/receipts/nockpt_10x_tpch.json)
         .localCheckpoint(eager=False)
     )
     per_order = li.groupBy(F.col("l_orderkey").alias("ok")).agg(

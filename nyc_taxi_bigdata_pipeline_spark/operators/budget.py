@@ -346,7 +346,8 @@ def grouped_token_budget_prefix(
     special-casing).
 
     MEASURED regimes vs the naive per-group cumulative window
-    (scripts/bench_r11_budget.grouped_tier, round-robin best-of-2,
+    (scripts/bench_r11_budget.grouped_tier — script deleted; numbers
+    stand, RESULTS.md Round 11 — round-robin best-of-2,
     identical outputs asserted): the window wins while every group's
     rows fit one task's sort budget with enough groups to fill the
     cores (100M × 8 groups on 32 threads: 36.4 s vs 61.0 s here — the

@@ -17,8 +17,8 @@ id regions) matches everything and degenerates that segment's bucket
 toward the full length-band cross product — the same saturation failure
 mode as low-n shingles in `jaccard_join_prefix` (see working notes).
 Selective corpora (hashes, natural words, mixed-format ids) keep
-candidates near-linear; the scale probe (`scripts/bench_r6_editdist.py`)
-measures both regimes.
+candidates near-linear; the scale probe `scripts/bench_r6_editdist.py`
+measured both regimes (script deleted; numbers stand, RESULTS.md Round 6).
 
 At 100 TB: one shuffle keyed by (L, i, segment) whose fan-in per key is
 bounded by segment selectivity; verify is a projection on the joined
@@ -112,7 +112,8 @@ def levenshtein_candidates(
     """Candidate pair frame ``(pid_a, pid_b, ps_a, ps_b)`` before the
     exact verify — a superset of the true <=k result (pigeonhole).
     Exposed separately so scale probes can measure candidate volume
-    per corpus regime (`scripts/bench_r6_editdist.py`).
+    per corpus regime (`scripts/bench_r6_editdist.py`: script deleted;
+    numbers stand, RESULTS.md Round 6).
 
     With ``strip_affixes`` (default), the corpus-wide common prefix and
     suffix are removed first (:func:`_strip_common_affixes`) — edit

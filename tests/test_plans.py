@@ -145,7 +145,8 @@ def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir, monkeypatch):
     with the corpus, and Spark's static estimator under-reads
     aggregates downstream of checkpointed sources — it statically
     planned broadcasts that OOM'd the driver at a 500k-doc probe
-    corpus (bench_r6_assoc_ssjoin; AQE can't re-plan a static
+    corpus (bench_r6_assoc_ssjoin: script deleted; numbers stand,
+    RESULTS.md Round 6; AQE can't re-plan a static
     broadcast). The merge hints pin the honest large-large strategy."""
     import pyspark.sql.functions as F
 
@@ -408,7 +409,8 @@ def test_grouped_topk_plans_window_group_limit(spark):
     """Per-key top-k must plan Spark 4's WindowGroupLimit (partial rank-k
     cut below the exchange) — what keeps a zipfian hot key from sorting
     all its rows in one task (scripts/bench_r4_skew.py: 1.8 s at 15M
-    rows with a 12.9% hot key)."""
+    rows with a 12.9% hot key; script deleted; numbers stand,
+    RESULTS.md Round 4)."""
     import pyspark.sql.functions as F
 
     from nyc_taxi_bigdata_pipeline_spark.operators.topk import grouped_topk

@@ -101,6 +101,32 @@ def test_anova_survives_large_moments(spark):
     assert math.isfinite(got.f_stat)
 
 
+def test_temperature_mixture_survives_bigint_threshold_products(spark):
+    """Overflow regression: on 90,000 documents in one language the
+    threshold product (total/2)·sqrt_micro·2^20 ≈ 1.4e19 passes 2^63,
+    which raised in both engines while it was BIGINT. Spark must equal
+    DuckDB, row for row, and the one language keeps its whole budget."""
+    import duckdb
+
+    from nyc_taxi_bigdata_pipeline_spark.benchqueries import dialect as D
+    from nyc_taxi_bigdata_pipeline_spark.benchqueries.dataset_ops import (
+        _temperature_mixture,
+    )
+
+    n = 90_000
+    spark.range(n).select(
+        F.col("id").alias("doc_id"), F.lit("en").alias("lang")
+    ).createOrReplaceTempView("tmix_big")
+    got = [tuple(r) for r in spark.sql(_temperature_mixture(D.SPARK, "tmix_big")).collect()]
+    con = duckdb.connect()
+    con.sql(f"CREATE TABLE tmix_big AS SELECT range AS doc_id, 'en' AS lang FROM range({n})")
+    want = con.sql(_temperature_mixture(D.DUCK, "tmix_big")).fetchall()
+    assert got == want
+    ((lang, docs_in, docs_kept, share, keep_frac),) = got
+    assert (lang, docs_in, share, keep_frac) == ("en", n, 1.0, 0.5)
+    assert abs(docs_kept - n // 2) <= 6 * math.sqrt(n / 4)
+
+
 def test_mixture_resample_invariants(spark, sf_dir):
     """Every source keeps ≤ its input; the smallest source's acceptance
     predicate is vacuously true (rate 1) so it keeps EVERYTHING; kept
