@@ -616,7 +616,7 @@ def _inc_verify_oracle(table: str) -> str:
         "corpus copies, 60 near-dups, 40 fresh reversed docs planted "
         "twice) is checked against the CORPUS BAND INDEX (the corpus is "
         "never re-shingled beyond colliding candidates), survivors are "
-        "collapsed within-batch via the iterative component operator, "
+        "collapsed within-batch via the component operator, "
         "and every batch doc gets a status (dup_of_corpus / "
         "dup_in_batch / kept). DuckDB replays the whole chain, closing "
         "the within-batch collapse with WITH RECURSIVE; "
@@ -995,11 +995,12 @@ def _components_oracle(table: str, n: int = 14) -> str:
     _components_oracle("documents"),
     doc="training-data ext: connected-component collapse of the exact "
         "near-dup pair graph (operators/dedup.dedup_clusters — the "
-        "iterative min-label propagation every dedup chain ends with) "
-        "pinned against a DECLARATIVE oracle: DuckDB's WITH RECURSIVE "
-        "transitive closure over the same brute-force pair SQL. "
-        "Hash-equality proves the fixpoint loop computes true "
-        "components, upgrading the collapse from rows-only to "
+        "collapse every dedup chain ends with: driver-side union-find "
+        "up to SMALL_GRAPH_CAP verified pairs, iterative min-label "
+        "propagation past it) pinned against a DECLARATIVE oracle: "
+        "DuckDB's WITH RECURSIVE transitive closure over the same "
+        "brute-force pair SQL. Hash-equality proves the collapse "
+        "computes true components, upgrading it from rows-only to "
         "oracle-backed",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1076,10 +1077,7 @@ def dataset_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     pairs = jaccard_join_prefix(docs, threshold=0.8, shingle_n=14)
-    # consumer of the cluster map, not its pin (dedup_components /
-    # dedup_cluster_canonical keep the distributed loop): verified pair
-    # graphs this size collapse driver-side (bounded; identical output)
-    clusters = dedup_clusters(pairs, id_col="doc_id", small_graph_cap=200_000)
+    clusters = dedup_clusters(pairs, id_col="doc_id")
     h = D.seeded_h64("CAST(doc_id AS STRING)", _SPLIT_SEED, D.SPARK)
     sp = docs.select(
         "doc_id", F.expr(f"({h}) % 100").alias("bucket")
@@ -1172,8 +1170,7 @@ def dataset_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     pairs = jaccard_join_prefix(docs, threshold=0.8, shingle_n=14)
-    # consumer of the cluster map (see dataset_split_leakage)
-    clusters = dedup_clusters(pairs, id_col="doc_id", small_graph_cap=200_000)
+    clusters = dedup_clusters(pairs, id_col="doc_id")
     alld = docs.select("doc_id").join(clusters, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster", "doc_id").alias("label")
     )

@@ -788,15 +788,16 @@ def text_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs.createOrReplaceTempView("bq_tfidf_docs")
-    # receipt: unstaged/staged 2.03× at 10×
-    # (reports/receipts/nockpt_10x_graph_search_sketch.json; this builder's 2 stagings A/B'd together)
+    # receipt: unstaged/staged 1.82× at sf0.1 (reports/receipts/
+    # nockpt_sf0.1_text_support.json; the 10× tier returns 0 rows;
+    # this builder's 2 stagings A/B'd together)
     tf = spark.sql(_tfidf_tf_sql(D.SPARK, "bq_tfidf_docs")).localCheckpoint(
         eager=False
     )
     tf.createOrReplaceTempView("bq_tfidf_tf")
     # w fans into norms + both dot sides (CTE-inlining class): one
     # materialized weight pass instead of three (r12)
-    # receipt: with this builder's first staging (2.03× at 10×)
+    # receipt: with this builder's first staging (1.82× at sf0.1)
     w = spark.sql(_rrf_w_sql("bq_tfidf_tf")).localCheckpoint(eager=False)
     w.createOrReplaceTempView("bq_tfidf_w")
     return spark.sql(_tfidf_read_sql("bq_tfidf_tf", w_rel="bq_tfidf_w"))

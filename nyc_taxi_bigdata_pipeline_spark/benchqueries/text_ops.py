@@ -631,8 +631,8 @@ def text_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = spark.sql(
         _cooc_docs_sql(D.SPARK, "bq_cooc_docs")
-    # receipt: unstaged/staged 0.95× at 10×, 1.17× at 100×
-    # (reports/receipts/nockpt_10x_stats_text.json, nockpt_100x_text_cooccurrence_pairs.json)
+    # receipt: unstaged/staged 1.52× at sf0.1 (reports/receipts/
+    # nockpt_sf0.1_text_support.json; the salted tiers return 0 rows)
     ).localCheckpoint(eager=False)
     d.createOrReplaceTempView("bq_cooc_incidence")
     return spark.sql(
@@ -692,8 +692,8 @@ def text_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = spark.sql(
         _cooc_docs_sql(D.SPARK, "bq_assoc_docs")
-    # receipt: unstaged/staged 1.10× at 10×
-    # (reports/receipts/nockpt_10x_stats_text.json)
+    # receipt: unstaged/staged 1.85× at sf0.1 (reports/receipts/
+    # nockpt_sf0.1_text_support.json; the 10× tier returns 0 rows)
     ).localCheckpoint(eager=False)
     d.createOrReplaceTempView("bq_assoc_incidence")
     return spark.sql(

@@ -1,3 +1,3 @@
-from . import compat, datetime_parity, hashing
+from . import compat, datetime_parity
 
-__all__ = ["compat", "datetime_parity", "hashing"]
+__all__ = ["compat", "datetime_parity"]

@@ -18,7 +18,6 @@ from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame
 
 from ..quality import schema_check
-from ..schema import ML_LABEL
 
 PLAUSIBLE_MIN = -50.0   # test_ml_plausibility.py:15-18
 PLAUSIBLE_MAX = 500.0
@@ -68,9 +67,3 @@ def score_single(model: PipelineModel, row_df: DataFrame) -> float:
     """M12 single-row inference (ex05 streamlit_app/app.py:470-514)."""
     out = model.transform(row_df).select("prediction").first()
     return float(out["prediction"])
-
-
-def residual_frame(preds: DataFrame, label: str = ML_LABEL) -> DataFrame:
-    from .errors import with_residuals
-
-    return with_residuals(preds, label)

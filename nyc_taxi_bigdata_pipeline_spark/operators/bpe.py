@@ -7,7 +7,10 @@ Spark-first shape (the part that matters at 100 TB): the corpus is
 touched EXACTLY ONCE — a tokenize + groupBy into the word-frequency
 table — and every merge iteration runs over that vocabulary-sized
 relation only, which is how every production BPE trainer works
-(corpus size and iteration cost are decoupled). The per-iteration
+(corpus size and iteration cost are decoupled). A vocabulary of at most
+``SMALL_VOCAB_CAP`` words (read at call time; tests and scripts/ab.py's
+``set:`` arm pin the distributed loop by setting it to 0) is collected
+once and merged driver-side. Past the cap, the per-iteration
 argmax is a 1-row collect (same bounded driver action as PageRank's
 convergence probe), and the word table is eagerly localCheckpointed
 each round so plan depth stays O(1) across hundreds of merges
@@ -128,7 +131,7 @@ def _learn_bpe_driver(
 
 
 # Vocabulary cap for the driver-side merge loop: 200k distinct words ×
-# ~50 B is a ~10 MB bounded collect (the small_graph_cap class —
+# ~50 B is a ~10 MB bounded collect (the dedup.SMALL_GRAPH_CAP class —
 # bounded driver state, never corpus-scaled). Heaps-law vocabularies of
 # web-scale corpora (10⁷–10⁸ types with junk) exceed it and take the
 # distributed loop.
@@ -140,7 +143,6 @@ def learn_bpe(
     n_merges: int,
     text_col: str = "text",
     min_pair_freq: int = 2,
-    small_vocab_cap: int | None = SMALL_VOCAB_CAP,
 ) -> list[tuple[str, str, int]]:
     """Learn up to ``n_merges`` BPE merges; returns
     [(left, right, weighted_count), ...] in merge order. Stops early
@@ -148,28 +150,22 @@ def learn_bpe(
     ``min_pair_freq`` (merging hapax pairs is noise — reference
     trainer's default cutoff).
 
-    ``small_vocab_cap``: when the word-frequency table (the ONE corpus
-    pass, checkpointed either way) has at most this many distinct
-    words, the merge loop runs driver-side over the collected table —
-    one bounded collect replacing ~2 jobs per merge of fixed scheduler
-    overhead on a vocabulary-sized frame (the dedup_clusters
-    small_graph_cap pattern; every production BPE trainer is in-memory
-    at this stage). Same argmax tie-break, same greedy apply — result
-    lists are identical (test-pinned); ``None`` forces the distributed
-    loop.
+    When the word-frequency table (the ONE corpus pass, checkpointed
+    either way) has at most ``SMALL_VOCAB_CAP`` distinct words, the
+    merge loop runs driver-side over the collected table — one bounded
+    collect replacing ~2 jobs per merge of fixed scheduler overhead on
+    a vocabulary-sized frame (the dedup_clusters pattern; every
+    production BPE trainer is in-memory at this stage). Same argmax
+    tie-break, same greedy apply — result lists are identical
+    (test-pinned).
     """
-    spark = docs.sparkSession
     table = word_symbol_table(docs, text_col).localCheckpoint(eager=True)
-    if small_vocab_cap is not None:
-        n_words = table.count()
-        if n_words <= small_vocab_cap:
-            rows = table.select("word", "freq").collect()
-            table.unpersist()
-            return _learn_bpe_driver(
-                [(r["word"], int(r["freq"])) for r in rows],
-                n_merges,
-                min_pair_freq,
-            )
+    if table.count() <= SMALL_VOCAB_CAP:
+        rows = table.select("word", "freq").collect()
+        table.unpersist()
+        return _learn_bpe_driver(
+            [(r["word"], int(r["freq"])) for r in rows], n_merges, min_pair_freq
+        )
     merges: list[tuple[str, str, int]] = []
     pair_i = F.explode(
         F.expr("sequence(1, size(syms) - 1)")

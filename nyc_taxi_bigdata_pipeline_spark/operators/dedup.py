@@ -53,11 +53,11 @@ def dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 # changing the plan shape (same explode → hash → MIN aggregate, same
 # band join, same Arrow verify kernel). One md5 per shingle; the N
 # family members derive from the 64-bit base via an (a·h + b) mod P
-# universal family with P = 2³¹−1. functions/hashing.py's general
-# warning against (a·h+b) families is about 64-bit h (the 122-bit
-# product wraps in Spark and raises in DuckDB); folding h into [0, P)
-# first keeps every product under 2⁶² — exact BIGINT arithmetic in
-# both engines, no overflow semantics in play.
+# universal family with P = 2³¹−1. An (a·h+b) family over a 64-bit h
+# is not portable (the 122-bit product wraps in Spark and raises in
+# DuckDB); folding h into [0, P) first keeps every product under 2⁶² —
+# exact BIGINT arithmetic in both engines, no overflow semantics in
+# play.
 _PORTABLE_P = 2_147_483_647  # 2^31 − 1, prime
 
 
@@ -432,7 +432,7 @@ def jaccard_verify(
 # fits the ~1 GB unified memory region of a 2 GB heap at Spark's
 # default spark.memory.fraction. Past the cap the operator falls back
 # to the join shape with identical results (the graph.py
-# broadcast_nodes_max discipline). verify_sets reads the constant at
+# BROADCAST_NODES_MAX discipline). verify_sets reads the constant at
 # call time, so tests pin the fallback by monkeypatching it to 0.
 BROADCAST_ARRAYS_MAX_BYTES = 256 << 20
 
@@ -960,11 +960,21 @@ def _unionfind_min_label(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
+# Verified-pair count at or under which dedup_clusters collapses
+# components driver-side. Receipt (RESULTS.md, Round 11): union-find
+# over 200k edges takes ~0.4 s (0.18 s on a 200k-node single chain —
+# path compression keeps it near-linear), less than ONE ~1.2 s round of
+# the distributed loop; driver state is ≤ cap edge tuples (~16 bytes
+# each). dedup_clusters reads the constant at call time, so tests and
+# scripts/ab.py's ``set:`` arm pin the distributed loop by setting it
+# to 0.
+SMALL_GRAPH_CAP = 200_000
+
+
 def dedup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 10,
-    small_graph_cap: int | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs by iterative min-label
     propagation: every doc's cluster label converges to the smallest doc
@@ -988,33 +998,28 @@ def dedup_clusters(
     replicated flavor), and the convergence probe aggregates a full
     count, never a limit.
 
-    ``small_graph_cap`` (r11): when set and the VERIFIED pair count is
-    ≤ cap, the component collapse runs as a driver-side union-find over
-    the collected pairs instead of the distributed loop — bounded
-    driver state (≤ cap edge tuples, ~16 bytes each), identical output
-    (union-by-min-root ≡ the min-label fixpoint). A daily-batch dup
-    graph is candidate-verified and tiny next to the corpus, and the
-    iterative loop's per-round jobs (join + agg + eager checkpoint +
-    convergence count) are pure fixed overhead at that size — measured
-    ~1.2 s for an 18-node graph at sf0.1. Default None keeps the
-    distributed loop (corpus-scale callers, and the oracle-backed
-    cluster queries that pin it). At the 200k-edge cap the driver-side
-    work is measured ~0.4 s (0.18 s on the pathological 200k-node
-    single chain — path compression keeps it near-linear), so the
-    shortcut stays cheaper than even ONE distributed round right up to
-    the boundary where the loop takes over."""
-    # persist the pair input: the symmetric edge union scans it TWICE,
-    # and upstream pair generation (LSH + Jaccard verify) is the
-    # expensive part of the whole clustering path
+    Small graphs: when the VERIFIED pair count is ≤ ``SMALL_GRAPH_CAP``
+    the collapse runs as a driver-side union-find over the collected
+    pairs instead — identical output (union-by-min-root ≡ the min-label
+    fixpoint). A candidate-verified dup graph is tiny next to the
+    corpus, and there the loop's per-round jobs (join + agg + eager
+    checkpoint + convergence count) are pure fixed overhead (~1.2 s for
+    an 18-node graph at sf0.1). The label frame is built from pandas so
+    its rows travel as Arrow."""
+    # persist the pair input: the size probe and the symmetric edge
+    # union scan it, and upstream pair generation (LSH + Jaccard verify)
+    # is the expensive part of the whole clustering path
     pairs = pairs.persist()
-    if small_graph_cap is not None and pairs.count() <= small_graph_cap:
+    if pairs.count() <= SMALL_GRAPH_CAP:
+        import pandas as pd
+
         rows = pairs.select("id_a", "id_b").collect()
         pairs.unpersist()
         labels = _unionfind_min_label([(r[0], r[1]) for r in rows])
-        spark = pairs.sparkSession
-        id_type = dict(pairs.select(F.col("id_a").alias(id_col)).dtypes)[id_col]
-        return spark.createDataFrame(
-            sorted(labels.items()), f"{id_col} {id_type}, cluster {id_type}"
+        id_type = dict(pairs.dtypes)["id_a"]
+        return pairs.sparkSession.createDataFrame(
+            pd.DataFrame(sorted(labels.items()), columns=[id_col, "cluster"]),
+            f"{id_col} {id_type}, cluster {id_type}",
         )
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -1061,17 +1066,13 @@ def dedup_clusters(
 
 
 def keep_canonical(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    small_graph_cap: int | None = None,
+    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Corpus dedup, final step: collapse each near-dup cluster to its
     canonical (min-id) member. Docs in no pair pass through untouched —
     the left join against the (small) cluster map costs one shuffle of
-    the cluster assignments, not the corpus. ``small_graph_cap``
-    passes through to :func:`dedup_clusters`."""
-    clusters = dedup_clusters(pairs, id_col, small_graph_cap=small_graph_cap)
+    the cluster assignments, not the corpus."""
+    clusters = dedup_clusters(pairs, id_col)
     drop = clusters.filter(F.col(id_col) != F.col("cluster")).select(id_col)
     return docs.join(drop, id_col, "left_anti")
 
@@ -1172,16 +1173,12 @@ def dedup_incremental(
     )
     # within-batch collapse over the survivors only (docs dropped for
     # corpus contamination must not become within-batch canonicals);
-    # reuse the batch signatures (semi-joined to survivors inside) and
-    # collapse the verified dup graph driver-side when it's small — a
-    # daily batch's within-batch dup graph is tiny next to the corpus,
-    # and the distributed min-label loop is pure fixed overhead there
-    # (measured ~1.2 s for 18 nodes at sf0.1; identical output)
+    # reuse the batch signatures (semi-joined to survivors inside)
     in_batch = minhash_dedup(
         survivors, id_col, text_col, num_hashes, bands, threshold, bucket_cap,
         sigs=new_sigs, shingles=sh_batch,
     )
-    return keep_canonical(survivors, in_batch, id_col, small_graph_cap=200_000)
+    return keep_canonical(survivors, in_batch, id_col)
 
 
 # ------------------------------------------------------------------ SimHash

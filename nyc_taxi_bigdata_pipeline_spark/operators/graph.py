@@ -17,10 +17,12 @@ bit-for-bit (benchqueries/graph_ops.py).
 At scale: each iteration is one shuffle (contributions aggregated on
 dst) plus a join of the rank vector against the edges. The rank vector
 is broadcast ONLY while the node count stays under
-``broadcast_nodes_max`` — web-scale graphs (10⁸–10⁹ nodes) exceed any
+``BROADCAST_NODES_MAX`` — web-scale graphs (10⁸–10⁹ nodes) exceed any
 driver's broadcast budget, so past the threshold both per-step joins
 fall back to shuffle equi-joins (one extra exchange per step, same
-bit-exact result). The rank frame is eagerly localCheckpointed per
+bit-exact result). PageRank and BFS read the constant at call time, so
+tests and scripts/ab.py's ``set:`` arm pin the shuffle path by setting
+it to 0. The rank frame is eagerly localCheckpointed per
 iteration on the eager path (persist() would bound recompute but NOT
 plan depth — the nested-plan stringification OOMs past ~10 steps), and
 e/nodes are unpersisted on exit — no cache leak, no unbounded lineage.
@@ -33,9 +35,10 @@ from pyspark.sql import DataFrame
 
 SCALE = 10**12  # rank mass per node; 25 nodes × 1e12 × max-weight ≪ 2^63
 
-# Above this node count the rank vector stops being broadcast and the
-# per-step joins become shuffle equi-joins. 2M rows × ~16 bytes ≈ 32 MB,
-# comfortably under a default driver's broadcast ceiling.
+# Above this node count the rank vector (and BFS's frontier / visited
+# sets) stops being broadcast and the per-step joins become shuffle
+# equi-joins. 2M rows × ~16 bytes ≈ 32 MB, comfortably under a default
+# driver's broadcast ceiling.
 BROADCAST_NODES_MAX = 2_000_000
 
 
@@ -47,8 +50,6 @@ def pagerank_fixed_point(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    broadcast_nodes_max: int = BROADCAST_NODES_MAX,
-    reinject_dangling: bool = False,
     n_nodes_hint: int | None = None,
 ) -> DataFrame:
     """Weighted PageRank over (src, dst, w) with integer fixed-point
@@ -57,11 +58,9 @@ def pagerank_fixed_point(
     r'(n) = (100-d)%·scale + d%·Σ_in( r(s)·w(s→n) ÷ totw(s) ), every op
     on BIGINTs with truncating division — bit-identical in any engine,
     any partitioning, and identical whether the rank vector is broadcast
-    or shuffle-joined. With ``reinject_dangling`` the mass parked on
-    out-degree-0 nodes is redistributed uniformly each step as
-    ``(d%·Σ_dangling r) ÷ (100·|nodes|)`` — one extra 1-row aggregate
-    per iteration (the default False matches the simplified formulation
-    the DuckDB oracle unrolls).
+    or shuffle-joined. Mass parked on out-degree-0 nodes is not
+    redistributed — the simplified formulation the DuckDB oracle
+    unrolls.
 
     The returned frame is materialized on both paths: persisted on the
     lazy one (re-enters the CacheManager — identical repeated queries
@@ -74,8 +73,7 @@ def pagerank_fixed_point(
     removes the ``nodes.count()`` strategy probe, collapsing the whole
     small-graph query into ONE job (the probe is a full edge-build
     materialization barrier, ~30% of wall time on the 25-node bench
-    graph). Ignored when ``reinject_dangling`` needs the exact count as
-    an arithmetic operand.
+    graph).
     """
     # persist the raw edge frame FIRST: deg aggregates it and e joins it
     # back, so without this the caller's edge build (often an expensive
@@ -92,25 +90,15 @@ def pagerank_fixed_point(
     )
     e = e.persist()
     nodes = nodes.persist()
-    dangling = None
     ranks = nodes.withColumn("r", F.lit(scale).cast("bigint"))
     try:
         # decides the join strategy (ranks / contrib both have ≤ n_nodes
-        # rows) and, absent a hint, materializes the caches; dangling
-        # reinjection divides by n_nodes, so it always counts exactly
-        if n_nodes_hint is not None and not reinject_dangling:
-            n_nodes = n_nodes_hint
-        else:
-            n_nodes = nodes.count()
-        small = n_nodes <= broadcast_nodes_max
+        # rows) and, absent a hint, materializes the caches
+        n_nodes = n_nodes_hint if n_nodes_hint is not None else nodes.count()
+        small = n_nodes <= BROADCAST_NODES_MAX
 
         def rank_side(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if small else df
-
-        if reinject_dangling:
-            dangling = nodes.join(
-                e.select(F.col("src").alias("n")).distinct(), "n", "left_anti"
-            ).persist()
 
         base = (100 - damping_pct) * scale // 100
         # Below the broadcast threshold the per-iteration materialization
@@ -123,11 +111,9 @@ def pagerank_fixed_point(
         # stringification (measured: OutOfMemoryError in explainString at
         # 12 iterations on a 3-node graph). Only an eager localCheckpoint
         # truncates lineage — the same fix as dedup cluster collapse.
-        # Dangling reinjection collects a scalar per step, which would
-        # re-evaluate the whole lazy chain each iteration (quadratic) —
-        # it always takes the eager path; so do deep iteration counts on
-        # small graphs (the lazy chain's planning cost grows with depth).
-        lazy = small and not reinject_dangling and iterations <= 10
+        # Deep iteration counts on small graphs take the eager path too
+        # (the lazy chain's planning cost grows with depth).
+        lazy = small and iterations <= 10
         if not lazy:
             ranks = ranks.localCheckpoint(eager=True)
         for _ in range(iterations):
@@ -137,22 +123,13 @@ def pagerank_fixed_point(
                 .groupBy("dst")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-            share = 0
-            if reinject_dangling:
-                # 1-row exact-integer aggregate; bounded driver traffic
-                dm = (
-                    dangling.join(ranks, "n")
-                    .agg(F.sum("r").cast("bigint").alias("dm"))
-                    .collect()[0]["dm"]
-                ) or 0
-                share = damping_pct * dm // (100 * n_nodes)
             new_ranks = (
                 nodes.join(rank_side(contrib), nodes["n"] == contrib["dst"], "left")
                 .select(
                     "n",
                     # truncating DIV, not `/` (which is double division)
                     F.expr(
-                        f"CAST({base + share} + ({damping_pct} * COALESCE(c, 0)) "
+                        f"CAST({base} + ({damping_pct} * COALESCE(c, 0)) "
                         "DIV 100 AS BIGINT)"
                     ).alias("r"),
                 )
@@ -182,8 +159,6 @@ def pagerank_fixed_point(
         raw.unpersist()
         e.unpersist()
         nodes.unpersist()
-        if dangling is not None:
-            dangling.unpersist()
 
 
 def bfs_distances(
@@ -192,7 +167,6 @@ def bfs_distances(
     max_hops: int = 6,
     src: str = "src",
     dst: str = "dst",
-    broadcast_nodes_max: int = BROADCAST_NODES_MAX,
 ) -> DataFrame:
     """Single/multi-source BFS min-hop distances over an (src, dst)
     edge table: returns (node, dist) for every node reachable from
@@ -205,7 +179,7 @@ def bfs_distances(
     localCheckpointed ONCE before the loop (it is referenced every
     level — without the cut the caller's edge build, often a distinct
     over a corpus-scale table, re-executes per level). While the
-    frontier / visited node sets stay under ``broadcast_nodes_max``
+    frontier / visited node sets stay under ``BROADCAST_NODES_MAX``
     they are broadcast (same threshold discipline as PageRank's rank
     vector: node-bounded frames, so past the threshold both joins fall
     back to shuffle equi-joins with identical results) — the edge
@@ -237,11 +211,11 @@ def bfs_distances(
     for _ in range(max_hops):
         f_in = (
             F.broadcast(frontier)
-            if n_frontier <= broadcast_nodes_max
+            if n_frontier <= BROADCAST_NODES_MAX
             else frontier
         )
         v_in = visited.select("node")
-        if n_visited <= broadcast_nodes_max:
+        if n_visited <= BROADCAST_NODES_MAX:
             v_in = F.broadcast(v_in)
         nxt = (
             f_in.join(e, "node")

@@ -983,14 +983,6 @@ def extract_features(
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing for formats without a real decoder (MP4 frames):
-    passes payloads through untouched but rewrites the metadata the way
-    a real resize kernel would — keeps pipelines runnable end-to-end
-    without codecs. For PPM/PNG/JPEG use :func:`resize_images`."""
-    return media.withColumn("width", F.lit(width)).withColumn("height", F.lit(height))
-
-
 def resize_bilinear(img: np.ndarray, width: int, height: int) -> np.ndarray:
     """Pure-numpy bilinear resample, half-pixel-center convention (the
     OpenCV/Pillow ``align_corners=False`` geometry — each target pixel

@@ -88,7 +88,6 @@ def ivf_build(
     vec_col: str = "embedding",
     seed: int = 42,
     train_fraction: float | None = None,
-    materialize: bool = False,
 ):
     """Build the IVF index ONCE: train the KMeans coarse quantizer
     (optionally on a ``train_fraction`` sample — centroid quality needs
@@ -100,9 +99,7 @@ def ivf_build(
     assignment is the EXPENSIVE part (measured 15× a single brute-force
     query batch at 200k vectors when re-done per call), amortized to
     zero when the index is reused across query batches — which is the
-    only deployment shape that makes sense. ``materialize`` eagerly
-    localCheckpoints the assignment so repeated searches don't re-run
-    the transform."""
+    only deployment shape that makes sense."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -121,8 +118,6 @@ def ivf_build(
         F.col(vec_col).alias("c_vec"),
         F.col("__cell").alias("cell"),
     )
-    if materialize:
-        assigned = assigned.localCheckpoint(eager=True)
     return assigned, np.array(model.clusterCenters())
 
 

@@ -41,15 +41,6 @@ def quality_score(col: str = "text") -> F.Column:
     ).cast("int")
 
 
-def lang_scores(col: str, markers: dict[str, tuple[str, ...]]) -> list[F.Column]:
-    toks = f"split(lower(trim({col})), ' ')"
-    out = []
-    for lang, words in markers.items():
-        inlist = ", ".join(f"'{w}'" for w in words)
-        out.append(F.expr(f"size(filter({toks}, t -> t IN ({inlist})))").alias(f"score_{lang}"))
-    return out
-
-
 def fingerprint(col: str = "text") -> F.Column:
     """64-bit content fingerprint of normalized text (xxhash64 — for the
     oracle-portable md5 flavor see functions/compat.h64)."""

@@ -19,10 +19,6 @@ def read_zone_lookup(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.csv(path, header=True, schema=ZONE_LOOKUP_SCHEMA)
 
 
-def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    return spark.read.csv(path, header=True, schema=schema, inferSchema=schema is None)
-
-
 def write_report_csv(df: DataFrame, path: str, limit: int | None = None) -> None:
     """S10: bounded CSV extract. ``limit`` guards against accidentally
     dumping an unbounded table through a single writer."""

@@ -150,8 +150,7 @@ def _hp_spark(tag: str, key: str) -> F.Column:
     """Portable seeded 64-bit row hash (md5-hex → int64) of the range id —
     the bit-identical twin of :func:`_hp_duck`. Engine-private xxhash64
     stays in make_trips_month_distributed; this variant pays the md5 cost
-    so a DuckDB oracle can regenerate the exact rows
-    (functions/hashing.py rationale)."""
+    so a DuckDB oracle can regenerate the exact rows."""
     return F.expr(
         "CAST(CONV(SUBSTRING(MD5(CONCAT("
         f"'{tag}#{key}#', CAST(id AS STRING))), 1, 15), 16, 10) AS BIGINT)"

@@ -315,9 +315,7 @@ def foreach_batch_dedup_maintain(
             pairs = minhash_dedup(
                 batch, id_col, text_col, num_hashes, bands, threshold
             )
-            survivors = keep_canonical(
-                batch, pairs, id_col, small_graph_cap=200_000
-            )
+            survivors = keep_canonical(batch, pairs, id_col)
         # both view builds read the survivors — materialize the dedup
         # chain once (honest inside a sink: the work is per-batch)
         survivors = survivors.localCheckpoint(eager=True)

@@ -16,9 +16,10 @@ Arms (``--arm``, repeatable; the first arm is the ratio's denominator):
 Each query is warmed once per arm at sf0.001, then timed best-of-N
 round-robin with the arm order alternating per pass. Every run collects
 the rows and checksums them sorted (never ``.count()``); arms whose
-checksums differ fail the run. The receipt JSON holds per-arm times and
-checksums, the calibration probes, ``cpus``, ``default_parallelism``
-and the driver heap.
+checksums differ fail the run, and so does a query that returns no rows
+on every arm (a receipt must not time an empty result). The receipt
+JSON holds per-arm times and checksums, the calibration probes,
+``cpus``, ``default_parallelism`` and the driver heap.
 
 Usage:
     python scripts/make_scaled_testdata.py --reps 10 --out DIR
@@ -128,7 +129,8 @@ def host_facts(spark) -> dict:
 
 def ab(spark, queries: list[str], arms: list[str], sf_dir: str, passes: int) -> dict:
     """Warm, then time every (query, arm) best-of-``passes`` round-robin.
-    Raises when two arms' checksums differ on a query."""
+    Exits when two arms' checksums differ on a query, or when every arm
+    returns 0 rows."""
     for q in queries:
         for a in arms:
             run_arm(spark, q, a, WARM_DIR)
@@ -147,6 +149,8 @@ def ab(spark, queries: list[str], arms: list[str], sf_dir: str, passes: int) -> 
             sums = {r["checksum"] for a in arms for r in runs[q][a]}
             if len(sums) != 1:
                 raise SystemExit(f"{q}: arms disagree on the rows ({len(sums)} checksums)")
+            if all(r["rows"] == 0 for a in arms for r in runs[q][a]):
+                raise SystemExit(f"{q}: 0 rows on every arm; nothing to time")
     out: dict = {"queries": {}}
     for q in queries:
         best = {a: min(r["s"] for r in runs[q][a]) for a in arms}

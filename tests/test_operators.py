@@ -18,6 +18,20 @@ from nyc_taxi_bigdata_pipeline_spark.operators import (
 )
 
 
+def _spy(monkeypatch, owner, name: str) -> list:
+    """Record each call to ``owner.name`` for the test's duration; a
+    size constant's fork shows in whether its path's helper ran."""
+    calls: list = []
+    real = getattr(owner, name)
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, spy)
+    return calls
+
+
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
@@ -116,11 +130,12 @@ def test_dedup_clusters_and_canonical(spark, docs_with_dups):
         assert doc + 100000 not in kept_ids  # its exact copy does not
 
 
-def test_dedup_clusters_small_graph_cap_equivalence(spark):
-    """r11 `small_graph_cap` driver-side union-find must equal the
-    distributed min-label loop exactly — adversarial shapes: long chain
-    (tests transitive depth), star, cycle, cross-edges arriving in
-    max-first order (tests union-by-min-root), self-contained cliques."""
+def test_dedup_clusters_small_graph_cap_equivalence(spark, monkeypatch):
+    """The driver-side union-find taken at or under ``SMALL_GRAPH_CAP``
+    verified pairs must equal the distributed min-label loop exactly —
+    adversarial shapes: long chain (tests transitive depth), star,
+    cycle, cross-edges arriving in max-first order (tests
+    union-by-min-root), self-contained cliques."""
     edges = (
         [(i, i + 1) for i in range(1, 9)]            # chain 1..9
         + [(50, 51), (50, 52), (50, 53)]             # star
@@ -129,21 +144,24 @@ def test_dedup_clusters_small_graph_cap_equivalence(spark):
         + [(80, 81), (81, 80)]                       # duplicate both ways
     )
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    loop = {
-        (r["doc_id"], r["cluster"])
-        for r in dedup.dedup_clusters(pairs, max_iter=20).collect()
-    }
-    uf = {
-        (r["doc_id"], r["cluster"])
-        for r in dedup.dedup_clusters(pairs, small_graph_cap=10_000).collect()
-    }
+    uf_calls = _spy(monkeypatch, dedup, "_unionfind_min_label")
+
+    def clusters():
+        return {
+            (r["doc_id"], r["cluster"])
+            for r in dedup.dedup_clusters(pairs, max_iter=20).collect()
+        }
+
+    uf = clusters()  # under the default cap: driver-side union-find
+    assert len(uf_calls) == 1
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_CAP", 0)
+    loop = clusters()
+    assert len(uf_calls) == 1  # cap 0: the distributed loop ran
     assert uf == loop
     # cap below the edge count → falls through to the distributed loop
-    tiny = {
-        (r["doc_id"], r["cluster"])
-        for r in dedup.dedup_clusters(pairs, small_graph_cap=2).collect()
-    }
-    assert tiny == loop
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_CAP", 2)
+    assert clusters() == loop
+    assert len(uf_calls) == 1
 
 
 def test_containment_asymmetric_subset(spark):
@@ -793,50 +811,33 @@ def test_pagerank_mass_bounded(spark, docs):
     assert agg["lo"] >= 15 * SCALE // 100
 
 
-def test_pagerank_shuffle_join_path_identical(spark):
+def test_pagerank_shuffle_join_path_identical(spark, monkeypatch):
     """Above the broadcast threshold the rank joins fall back to shuffle
     equi-joins (the 100-TB path): with broadcasting disabled entirely the
     fixed-point ranks must be bit-identical and the plan must contain no
     BroadcastNestedLoopJoin."""
-    from nyc_taxi_bigdata_pipeline_spark.operators.graph import pagerank_fixed_point
+    from nyc_taxi_bigdata_pipeline_spark.operators import graph
     from nyc_taxi_bigdata_pipeline_spark.plans.explain import physical_plan
 
     edges = spark.createDataFrame(
         [("A", "B", 1), ("A", "C", 1), ("B", "A", 1)], "src string, dst string, w bigint"
     )
+    hints = _spy(monkeypatch, graph.F, "broadcast")
+    bcast = graph.pagerank_fixed_point(edges, iterations=2, scale=100)
+    assert {r["n"]: r["r"] for r in bcast.collect()} == {"A": 63, "B": 57, "C": 57}
+    assert len(hints) == 4  # rank and contribution sides, both iterations
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ranks = pagerank_fixed_point(
-            edges, iterations=2, scale=100, broadcast_nodes_max=0
-        )
+        ranks = graph.pagerank_fixed_point(edges, iterations=2, scale=100)
         got = {r["n"]: r["r"] for r in ranks.collect()}
         plan = physical_plan(ranks)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert len(hints) == 4  # cap 0: no further broadcast hint
     assert got == {"A": 63, "B": 57, "C": 57}  # == broadcast-path values
     assert "BroadcastNestedLoop" not in plan, plan
-
-
-def test_pagerank_dangling_reinjection(spark):
-    """reinject_dangling=True redistributes the mass parked on
-    out-degree-0 nodes uniformly each step. Hand-derived (scale=100,
-    d=85, C dangling): iter1 share=85·100//300=28 → A=128 B=C=85;
-    iter2 dm=85, share=24 → A=111 B=C=93. Total mass stays ≈ n·scale
-    (truncation-only loss) instead of leaking 1/3 per step."""
-    from nyc_taxi_bigdata_pipeline_spark.operators.graph import pagerank_fixed_point
-
-    edges = spark.createDataFrame(
-        [("A", "B", 1), ("A", "C", 1), ("B", "A", 1)], "src string, dst string, w bigint"
-    )
-    got = {
-        r["n"]: r["r"]
-        for r in pagerank_fixed_point(
-            edges, iterations=2, scale=100, reinject_dangling=True
-        ).collect()
-    }
-    assert got == {"A": 111, "B": 93, "C": 93}
-    assert sum(got.values()) >= 3 * 100 - 5  # mass conserved up to truncation
 
 
 def test_per_key_sample_prefilter_exact(docs):
@@ -1110,12 +1111,12 @@ def test_phash_images_preserves_id_type(spark):
     assert row["media_id"] == 7 and row["phash"] == phash63(img)
 
 
-def test_pagerank_deep_iterations_bounded_planning(spark):
+def test_pagerank_deep_iterations_bounded_planning(spark, monkeypatch):
     """iterations > 10 on a small graph must take the eager
     persist-per-step path (bounded lineage — the lazy chain's planning
     cost is superlinear in depth) and stay bit-identical to the
     shuffle-join path at the same depth."""
-    from nyc_taxi_bigdata_pipeline_spark.operators.graph import pagerank_fixed_point
+    from nyc_taxi_bigdata_pipeline_spark.operators import graph
 
     edges = spark.createDataFrame(
         [("A", "B", 1), ("A", "C", 1), ("B", "A", 1), ("C", "A", 1)],
@@ -1123,13 +1124,12 @@ def test_pagerank_deep_iterations_bounded_planning(spark):
     )
     deep = {
         r["n"]: r["r"]
-        for r in pagerank_fixed_point(edges, iterations=12).collect()
+        for r in graph.pagerank_fixed_point(edges, iterations=12).collect()
     }
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)
     via_shuffle = {
         r["n"]: r["r"]
-        for r in pagerank_fixed_point(
-            edges, iterations=12, broadcast_nodes_max=0
-        ).collect()
+        for r in graph.pagerank_fixed_point(edges, iterations=12).collect()
     }
     assert deep == via_shuffle
     # converged by depth 12: B and C split A's mass equally
@@ -1521,9 +1521,10 @@ def test_unigram_logprob_features(spark):
     assert np.isfinite(list(s.values())).all()
 
 
-def test_bfs_distances(spark):
+def test_bfs_distances(spark, monkeypatch):
     """Hand-built graph: min-hop distances, unreachable nodes excluded,
     early exit, max_hops bound respected."""
+    from nyc_taxi_bigdata_pipeline_spark.operators import graph
     from nyc_taxi_bigdata_pipeline_spark.operators.graph import bfs_distances
 
     e = spark.createDataFrame(
@@ -1544,11 +1545,14 @@ def test_bfs_distances(spark):
     assert gotm[3] == 1 and gotm[2] == 2 and gotm[4] == 0
     # r12: past the broadcast threshold the frontier/visited joins fall
     # back to shuffle equi-joins — results must be identical
-    got_shuffle = {
-        r["node"]: r["dist"]
-        for r in bfs_distances(und, src, broadcast_nodes_max=0).collect()
-    }
+    hints = _spy(monkeypatch, graph.F, "broadcast")
+    assert {r["node"]: r["dist"] for r in bfs_distances(und, src).collect()} == got
+    assert hints  # under the cap the frontier and visited sets broadcast
+    n_hints = len(hints)
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)
+    got_shuffle = {r["node"]: r["dist"] for r in bfs_distances(und, src).collect()}
     assert got_shuffle == got
+    assert len(hints) == n_hints  # cap 0: no broadcast hint
 
 
 def test_bucketed_write_elides_join_shuffle(spark, tmp_path):
@@ -2188,8 +2192,10 @@ def test_learn_bpe_matches_reference(spark, bpe_corpus):
     assert len(bpe.learn_bpe(df, 5)) == 5  # corpus supports ≥5 merges
 
 
-def test_learn_bpe_distributed_path_matches_driver_path(spark, bpe_corpus):
-    """small_vocab_cap=None forces the distributed merge loop; it must
+def test_learn_bpe_distributed_path_matches_driver_path(
+    spark, bpe_corpus, monkeypatch
+):
+    """``SMALL_VOCAB_CAP`` = 0 forces the distributed merge loop; it must
     produce the identical merge list to the driver-side small-vocab
     path (r12: the registry queries ride the driver path on bounded
     vocabularies, so this equality is what keeps their results
@@ -2197,21 +2203,25 @@ def test_learn_bpe_distributed_path_matches_driver_path(spark, bpe_corpus):
     from nyc_taxi_bigdata_pipeline_spark.operators import bpe
 
     df, freqs = bpe_corpus
+    driver_calls = _spy(monkeypatch, bpe, "_learn_bpe_driver")
+    driver = {n: bpe.learn_bpe(df, n) for n in (5, 25)}
+    assert len(driver_calls) == 2
+    monkeypatch.setattr(bpe, "SMALL_VOCAB_CAP", 0)
     for n in (5, 25):
-        dist = bpe.learn_bpe(df, n, small_vocab_cap=None)
+        dist = bpe.learn_bpe(df, n)
         assert dist == _ref_learn_bpe(freqs, n)
-        assert dist == bpe.learn_bpe(df, n)
+        assert dist == driver[n]
+    assert len(driver_calls) == 2  # cap 0: the distributed loop ran
 
 
-def test_learn_bpe_partition_invariant(spark, bpe_corpus):
+def test_learn_bpe_partition_invariant(spark, bpe_corpus, monkeypatch):
     from nyc_taxi_bigdata_pipeline_spark.operators import bpe
 
     df, freqs = bpe_corpus
     # distributed loop forced: partition invariance is a property of
     # the distributed path (the driver path collects one table)
-    assert bpe.learn_bpe(
-        df.repartition(7), 8, small_vocab_cap=None
-    ) == _ref_learn_bpe(freqs, 8)
+    monkeypatch.setattr(bpe, "SMALL_VOCAB_CAP", 0)
+    assert bpe.learn_bpe(df.repartition(7), 8) == _ref_learn_bpe(freqs, 8)
 
 
 def test_bpe_encode_lossless_and_in_vocab(spark, bpe_corpus):

@@ -38,6 +38,25 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
         assert res.oracle_rows > 0, f"{name}: vacuous 0-row oracle at sf0.01"
 
 
+@pytest.mark.parametrize("name", ["dedup_components", "dedup_cluster_canonical"])
+def test_distributed_component_loop_matches_oracle(name, spark, sf_dir, duck, monkeypatch):
+    """At test sizes the registry's component collapses run driver-side
+    (union-find under ``SMALL_GRAPH_CAP``); with the cap at 0 the same
+    queries take the distributed min-label loop, which keeps this
+    oracle-backed pin."""
+    from nyc_taxi_bigdata_pipeline_spark.operators import dedup
+
+    def union_find_called(edges):
+        raise AssertionError("SMALL_GRAPH_CAP = 0 must take the distributed loop")
+
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_CAP", 0)
+    monkeypatch.setattr(dedup, "_unionfind_min_label", union_find_called)
+    sdf = REGISTRY[name].spark_fn(spark, sf_dir).toPandas()
+    res: ParityResult = compare_frames(name, sdf, duck.execute(REGISTRY[name].oracle).fetchdf())
+    assert res.ok, f"{name}: {res.detail}"
+    assert res.oracle_rows > 0
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import importlib.util
 import os
+import types
 
 import pytest
 from pyspark import SparkContext
@@ -89,3 +90,17 @@ def test_ab_set_arm_restores_constant(spark, ab):
     assert dedup.BROADCAST_ARRAYS_MAX_BYTES == before
     with pytest.raises(SystemExit), ab.arm(spark, "conf:spark.sql.shuffle.partitions=1", {}):
         pass
+
+
+def test_ab_refuses_empty_results(spark, ab, monkeypatch):
+    """A query that returns 0 rows on every arm stops the run instead of
+    writing a receipt that times an empty result; one with rows goes
+    through."""
+    monkeypatch.setattr(ab, "PROBES", {})
+    for name, n in (("ab_empty", 0), ("ab_rows", 3)):
+        fn = lambda spark, sf_dir, n=n: spark.range(n)  # noqa: E731
+        monkeypatch.setitem(REGISTRY, name, types.SimpleNamespace(spark_fn=fn))
+    with pytest.raises(SystemExit, match="0 rows on every arm"):
+        ab.ab(spark, ["ab_empty"], ["shipped", "nockpt"], ab.WARM_DIR, 1)
+    got = ab.ab(spark, ["ab_rows"], ["shipped", "nockpt"], ab.WARM_DIR, 1)
+    assert got["queries"]["ab_rows"]["arms"]["shipped"]["rows"] == 3
