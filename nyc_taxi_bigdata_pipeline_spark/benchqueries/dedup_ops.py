@@ -863,17 +863,17 @@ def _ssjoin_oracle(table: str, n: int = 14) -> str:
         "rare-token-first prefix equi-join + length filter (lossless "
         "by theorem), verified by the Arrow kernel; the oracle brute-"
         "forces ALL pairs, so hash-equality proves the filters dropped "
-        "nothing (operators/dedup.py:jaccard_join_prefix). Shingle n=14 "
-        "since r10 — the accounting probe showed n=5 saturates this "
-        "fixture's vocabulary (5,974x candidate over-generation for the "
-        "same 256 true pairs; see _ssjoin_oracle)",
+        "nothing (operators/dedup.prefix_join_sets, jaccard metric). "
+        "Shingle n=14 since r10 — the accounting probe showed n=5 "
+        "saturates this fixture's vocabulary (5,974x candidate "
+        "over-generation for the same 256 true pairs; see _ssjoin_oracle)",
 )
 def dedup_ssjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import jaccard_join_prefix
+    from ..operators.dedup import prefix_join_sets
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    return jaccard_join_prefix(docs, threshold=0.8, shingle_n=14).orderBy(
+    return prefix_join_sets(docs, "jaccard", threshold=0.8, shingle_n=14).orderBy(
         "id_a", "id_b"
     )
 
@@ -923,20 +923,20 @@ def _containment_oracle(table: str, n: int = 14, thr: str = "0.8") -> str:
         "dedup_ssjoin_prefix (Jaccard union-normalizes, so a short doc "
         "quoted inside a long one scores near zero; containment is the "
         "predicate inclusion-dedup needs). Source-prefix ⋈ full-postings "
-        "candidates + size + positional filters, exact relational verify; "
+        "candidates + size + positional filters, exact Arrow verify; "
         "the oracle brute-forces all shared-shingle directed pairs, so "
         "hash-equality proves the pruning lossless "
-        "(operators/dedup.py:containment_join_prefix)",
+        "(operators/dedup.prefix_join_sets, containment metric)",
     bench=True,
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import containment_join_prefix
+    from ..operators.dedup import prefix_join_sets
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # single-file scan is ONE partition; the explode/window stages inherit
     # it (CLAUDE.md layout pitfall) — spread by key before the heavy work
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    return containment_join_prefix(docs, threshold=0.8, shingle_n=14).orderBy(
+    return prefix_join_sets(docs, "containment", threshold=0.8, shingle_n=14).orderBy(
         "src_id", "dst_id"
     )
 
@@ -994,7 +994,8 @@ def _components_oracle(table: str, n: int = 14) -> str:
     "dedup_components",
     _components_oracle("documents"),
     doc="training-data ext: connected-component collapse of the exact "
-        "near-dup pair graph (operators/dedup.dedup_clusters — the "
+        "near-dup pair graph (pairs from operators/dedup.prefix_join_sets, "
+        "jaccard metric; operators/dedup.dedup_clusters — the "
         "collapse every dedup chain ends with: driver-side union-find "
         "up to SMALL_GRAPH_CAP verified pairs, iterative min-label "
         "propagation past it) pinned against a DECLARATIVE oracle: "
@@ -1004,11 +1005,11 @@ def _components_oracle(table: str, n: int = 14) -> str:
         "oracle-backed",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import dedup_clusters, jaccard_join_prefix
+    from ..operators.dedup import dedup_clusters, prefix_join_sets
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    pairs = jaccard_join_prefix(docs, threshold=0.8, shingle_n=14)
+    pairs = prefix_join_sets(docs, "jaccard", threshold=0.8, shingle_n=14)
     return dedup_clusters(pairs, id_col="doc_id").orderBy("doc_id")
 
 
@@ -1056,7 +1057,8 @@ def _split_leakage_oracle(table: str, n: int = 14) -> str:
     "dataset_split_leakage",
     _split_leakage_oracle("documents"),
     doc="training-data ext: DEDUP-AWARE SPLIT CONTAMINATION check — "
-        "near-dup clusters (exact SSJoin pairs -> connected components) "
+        "near-dup clusters (exact SSJoin pairs from "
+        "operators/dedup.prefix_join_sets -> connected components) "
         "joined against the deterministic dataset_split_assign 80/10/10 "
         "hash: a cluster spanning splits leaks train content into "
         "val/test (the contamination a doc-level random split always "
@@ -1071,12 +1073,12 @@ def _split_leakage_oracle(table: str, n: int = 14) -> str:
         "this check is then one join + two aggregates over them",
 )
 def dataset_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import dedup_clusters, jaccard_join_prefix
+    from ..operators.dedup import dedup_clusters, prefix_join_sets
     from .dataset_ops import _SPLIT_SEED
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    pairs = jaccard_join_prefix(docs, threshold=0.8, shingle_n=14)
+    pairs = prefix_join_sets(docs, "jaccard", threshold=0.8, shingle_n=14)
     clusters = dedup_clusters(pairs, id_col="doc_id")
     h = D.seeded_h64("CAST(doc_id AS STRING)", _SPLIT_SEED, D.SPARK)
     sp = docs.select(
@@ -1157,19 +1159,20 @@ def _split_by_cluster_oracle(table: str, n: int = 14) -> str:
     _split_by_cluster_oracle("documents"),
     doc="training-data ext: the REMEDIATION for dataset_split_leakage — "
         "80/10/10 split assigned at near-dup-CLUSTER granularity "
-        "(seeded h64 of the cluster label; every member inherits its "
+        "(prefix_join_sets pairs -> dedup_clusters; seeded h64 of the "
+        "cluster label; every member inherits its "
         "cluster's split, so leakage is zero by construction; "
         "singletons label as themselves). Reports per-split cluster/"
         "doc counts and docs moved vs the naive doc-level hash rule. "
         "Detection + remediation close the dedup-aware-split story",
 )
 def dataset_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import dedup_clusters, jaccard_join_prefix
+    from ..operators.dedup import dedup_clusters, prefix_join_sets
     from .dataset_ops import _SPLIT_SEED
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    pairs = jaccard_join_prefix(docs, threshold=0.8, shingle_n=14)
+    pairs = prefix_join_sets(docs, "jaccard", threshold=0.8, shingle_n=14)
     clusters = dedup_clusters(pairs, id_col="doc_id")
     alld = docs.select("doc_id").join(clusters, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster", "doc_id").alias("label")
@@ -1259,7 +1262,8 @@ def _cluster_canonical_oracle(table: str, n: int = 14) -> str:
     "dedup_cluster_canonical",
     _cluster_canonical_oracle("documents"),
     doc="training-data ext: near-dup REMOVAL end-to-end — exact pair "
-        "graph (lossless prefix-filtered SSJoin) → connected components "
+        "graph (lossless prefix-filtered SSJoin, "
+        "operators/dedup.prefix_join_sets) → connected components "
         "(operators/dedup.dedup_clusters) → collapse each cluster to its "
         "canonical min-id member (keep_canonical); returns corpus size "
         "before/after. Oracle-backed since r7 (was rows-only): DuckDB "
@@ -1270,7 +1274,7 @@ def _cluster_canonical_oracle(table: str, n: int = 14) -> str:
         "just cluster labels",
 )
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import jaccard_join_prefix, keep_canonical
+    from ..operators.dedup import keep_canonical, prefix_join_sets
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -1287,7 +1291,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # single-file scan is ONE partition; spread before the shingle explode
     corpus = corpus.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    pairs = jaccard_join_prefix(corpus, threshold=0.8, shingle_n=14)
+    pairs = prefix_join_sets(corpus, "jaccard", threshold=0.8, shingle_n=14)
     kept = keep_canonical(corpus, pairs)
     return (
         corpus.agg(F.count("*").alias("docs_in"))

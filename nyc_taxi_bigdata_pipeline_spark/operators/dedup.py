@@ -17,8 +17,10 @@ All JVM expressions, no Python UDFs in the hot path.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 def normalize_text(col: str = "text") -> F.Column:
@@ -436,10 +438,51 @@ def jaccard_verify(
 # call time, so tests pin the fallback by monkeypatching it to 0.
 BROADCAST_ARRAYS_MAX_BYTES = 256 << 20
 
-# metric → (pair id column a, pair id column b, score column)
-_VERIFY_METRICS = {
-    "jaccard": ("id_a", "id_b", "jaccard"),
-    "containment": ("src_id", "dst_id", "containment"),
+
+class _SetMetric(NamedTuple):
+    """Everything a set-similarity join needs to know about its metric;
+    read by both the candidate stage (:func:`prefix_join_sets`) and the
+    verify (:func:`verify_sets`). ``size_ok`` and ``overlap`` take the
+    threshold and the two sides' set-size columns; ``score`` takes
+    |A∩B|, |A|, |B|."""
+
+    col_a: str  # pair id columns (a = the prefix-filtered probe side)
+    col_b: str
+    score_col: str
+    # symmetric: pairs id_a < id_b and both sides prefix-filtered;
+    # directed: pairs src_id != dst_id and the dst side keeps its full
+    # postings (any superset of the source can contain it)
+    symmetric: bool
+    size_ok: Callable[[float, Column, Column], Column]
+    overlap: Callable[[float, Column, Column], Column]  # α: least |A∩B| to pass
+    score: Callable[[int, int, int], float]
+
+
+def _containment_overlap(t: float, sa: Column, sb: Column) -> Column:
+    return F.ceil(F.lit(t) * sa.cast("double"))
+
+
+_SET_METRICS = {
+    # J(A,B) = |A∩B| / |A∪B| ≥ t needs min size ≥ t·max size and
+    # |A∩B| ≥ ⌈t/(1+t)·(|A|+|B|)⌉
+    "jaccard": _SetMetric(
+        "id_a", "id_b", "jaccard", True,
+        size_ok=lambda t, sa, sb: (
+            F.least(sa, sb).cast("double") >= F.lit(t) * F.greatest(sa, sb)
+        ),
+        overlap=lambda t, sa, sb: F.ceil(
+            F.lit(t / (1.0 + t)) * (sa + sb).cast("double")
+        ),
+        score=lambda inter, na, nb: inter / (na + nb - inter),
+    ),
+    # C(src→dst) = |S∩D| / |S| ≥ t needs |S∩D| ≥ ⌈t·|S|⌉, so |D| ≥ that
+    # too; no upper bound on |D|
+    "containment": _SetMetric(
+        "src_id", "dst_id", "containment", False,
+        size_ok=lambda t, sa, sb: sb >= _containment_overlap(t, sa, sb),
+        overlap=_containment_overlap,
+        score=lambda inter, na, nb: inter / na,
+    ),
 }
 
 
@@ -473,7 +516,7 @@ def verify_sets(
 ) -> DataFrame:
     """Exact shingle-set similarity on candidate pairs via an Arrow
     kernel — the verify stage of every set-similarity operator here.
-    ``metric`` (``_VERIFY_METRICS``): ``"jaccard"`` scores pairs
+    ``metric`` (``_SET_METRICS``): ``"jaccard"`` scores pairs
     (id_a, id_b) by |A∩B| / |A∪B|; ``"containment"`` scores directed
     pairs (src_id, dst_id) by |S_src ∩ S_dst| / |S_src|. Output: the
     pair columns plus a double score column named after the metric.
@@ -501,22 +544,19 @@ def verify_sets(
     import numpy as np
     import pandas as pd
 
-    col_a, col_b, score_col = _VERIFY_METRICS[metric]
-    containment = metric == "containment"
+    m = _SET_METRICS[metric]
+    col_a, col_b, score_col = m.col_a, m.col_b, m.score_col
 
     def score(pdf, sets_a, sets_b):
-        # |A∩B| by a merge of presorted uniques (O(|A|+|B|)), then
-        # |A∩B|/|A| (containment, A = source) or |A∩B|/|A∪B|, then the
-        # threshold; None = id without a shingle set → pair drops
+        # |A∩B| by a merge of presorted uniques (O(|A|+|B|)), then the
+        # metric's score, then the threshold; None = id without a
+        # shingle set → pair drops
         sc = np.full(len(pdf), np.nan)  # NaN never passes the filter
         for i, (a, b) in enumerate(zip(sets_a, sets_b)):
             if a is None or b is None:
                 continue
             inter = np.intersect1d(a, b, assume_unique=True).size
-            sc[i] = (
-                inter / len(a) if containment
-                else inter / (len(a) + len(b) - inter)
-            )
+            sc[i] = m.score(inter, len(a), len(b))
         keep = sc >= threshold
         return pd.DataFrame({
             col_a: pdf[col_a].to_numpy()[keep],
@@ -587,289 +627,156 @@ def verify_sets(
     return cand.mapInPandas(jkernel, out_schema)
 
 
-def jaccard_join_prefix(
+def prefix_join_sets(
     docs: DataFrame,
+    metric: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_n: int = 5,
 ) -> DataFrame:
-    """EXACT set-similarity self-join at a Jaccard threshold via prefix
-    filtering (SSJoin/All-Pairs class — Chaudhuri et al. ICDE'06,
-    Bayardo et al. WWW'07): the no-false-negative complement to the
-    MinHash-LSH chain. LSH trades recall for speed (a near-dup pair can
-    miss every band); this join is guaranteed complete — the contract a
-    decontamination or legal-dedup pass needs.
+    """EXACT set-similarity self-join over char-n-gram shingle sets via
+    prefix filtering (SSJoin/All-Pairs class — Chaudhuri et al. ICDE'06,
+    Bayardo et al. WWW'07), for either metric of ``_SET_METRICS``:
 
-    Filter theorem: under ANY global total order on tokens, two sets
-    with J(A,B) ≥ t must share a token within their first
-    |x| − ⌈t·|x|⌉ + 1 tokens (J ≥ t ⟹ |A∩B| ≥ ⌈t·max(|A|,|B|)⌉, and
-    two sets overlapping in α elements collide within prefixes of
-    length |x| − α + 1 by pigeonhole). Ordering tokens by ascending
-    GLOBAL frequency makes the exploitable collisions rare tokens, so
-    the candidate equi-join's per-token buckets stay small — that is
-    the entire scale argument, and it is why the frequency pass (one
-    vocabulary-sized agg) is worth its shuffle. A length filter
-    (min size ≥ t·max size, necessary for J ≥ t) prunes further, and
-    the PPJoin positional filter (see the inline comment) prunes on
-    WHERE in the prefix the collision happened — measured at sf0.1:
-    candidates drop to 52% on the saturated n=5 tier and to 3.1% on
-    the long-tail n=14 tier (14,786 → 461 for 256 true pairs).
-    Candidates then go through the exact Arrow verify
-    (:func:`verify_sets`) — same shingle hashes, so the result equals
-    brute-force all-pairs verification (equivalence pinned by test).
+    - ``"jaccard"``: pairs (id_a < id_b) with |A∩B| / |A∪B| ≥ threshold
+      — the no-false-negative complement to the MinHash-LSH chain. LSH
+      trades recall for speed (a near-dup pair can miss every band);
+      this join is guaranteed complete, the contract a decontamination
+      or legal-dedup pass needs.
+    - ``"containment"``: directed pairs (src_id ≠ dst_id) with
+      |S_src ∩ S_dst| / |S_src| ≥ threshold. Jaccard misses subset
+      relationships by construction (a short doc quoted inside a long
+      one has tiny union-normalized similarity); containment is the
+      predicate quote/subset dedup and decontamination-by-inclusion
+      need (the overlap notion behind suffix-array substring dedup,
+      relaxed to shingle sets).
+
+    Filter theorem: a passing pair overlaps in ≥ ⌈t·|x|⌉ tokens of each
+    prefix-filtered side x (J ≥ t ⟹ |A∩B| ≥ t·max(|A|,|B|); C ≥ t ⟹
+    |S∩D| ≥ t·|S|), so under ANY global total order the two sets collide
+    within x's first |x| − ⌈t·|x|⌉ + 1 tokens (pigeonhole). Containment
+    bounds the overlap by the SOURCE only and the destination can be
+    any superset, so its dst side stays FULL postings (no dst prefix —
+    the structural cost vs the symmetric join). The metric's overlap
+    bound α (``overlap``) is ⌈t/(1+t)·(|A|+|B|)⌉ or ⌈t·|S_src|⌉.
+    Ordering tokens by ascending GLOBAL frequency makes the exploitable
+    collisions rare tokens, so the candidate equi-join's per-token
+    buckets stay small — that is the entire scale argument, and why the
+    frequency pass (one vocabulary-sized agg) is worth its shuffle. A
+    size filter (``size_ok``) prunes further, and the PPJoin positional
+    filter (Xiao et al. WWW'08) prunes on WHERE in the frequency-ordered
+    lists the collision happened: a collision at ranks (p_a, p_b)
+    bounds the overlap by 1 + min(|A|−p_a, |B|−p_b), which must reach
+    α — lossless as an OR over a pair's collisions (kept by the
+    distinct): a passing pair's FIRST common token always satisfies it.
+    Measured at sf0.1 (Jaccard): candidates drop to 52% on the
+    saturated n=5 tier and to 3.1% on the long-tail n=14 tier (14,786 →
+    461 for 256 true pairs). Candidates then go through the exact Arrow
+    verify (:func:`verify_sets`, same metric, same shingle hashes), so
+    the result equals brute-force all-pairs verification (pinned by
+    test for both metrics; the registry oracles brute-force every
+    shared-shingle pair, so hash equality proves the pruning lossless).
 
     No bucket cap, deliberately: capping would reintroduce false
-    negatives and void the exactness contract. A mass-duplicated
-    corpus (10k identical docs) therefore costs C(10k,2) pairs here —
-    run exact_dedup first; that is the honest precondition, not a
-    hidden truncation.
+    negatives and void the exactness contract. A mass-duplicated corpus
+    (10k identical docs) therefore costs C(10k,2) pairs here — run
+    exact_dedup first; that is the honest precondition, not a hidden
+    truncation.
 
-    Applicability boundary (measured, not hypothetical): prefix
-    filtering's candidate bound rests on a LONG-TAILED token-frequency
-    distribution — real text is Zipf and qualifies; a corpus whose
-    shingle vocabulary SATURATES defeats it, because even the "rarest"
-    prefix tokens sit in hundreds of docs and the prefix equi-join
-    degenerates toward all-pairs. The synthetic 31-word fixture at
-    sf0.1 is exactly that pathology: 5k docs share 2,041 distinct
-    5-gram shingles (median shingle in 291 docs → 217 s). ``shingle_n``
-    is the de-saturation knob — n=14 re-establishes the long tail on
-    the same corpus (312k distinct, median 2) and restores seconds-
-    scale joins; note it CHANGES the similarity definition (n-gram
-    Jaccard is parameterized by n), it doesn't approximate it.
+    Applicability boundary (measured, not hypothetical): the candidate
+    bound rests on a LONG-TAILED token-frequency distribution — real
+    text is Zipf and qualifies; a corpus whose shingle vocabulary
+    SATURATES defeats it, because even the "rarest" prefix tokens sit in
+    hundreds of docs and the prefix equi-join degenerates toward
+    all-pairs (containment's full postings side degenerates harder).
+    The synthetic 31-word fixture at sf0.1 is exactly that pathology:
+    5k docs share 2,041 distinct 5-gram shingles (median shingle in 291
+    docs → 217 s). ``shingle_n`` is the de-saturation knob — n=14
+    re-establishes the long tail on the same corpus (312k distinct,
+    median 2) and restores seconds-scale joins; it CHANGES the
+    similarity definition (n-gram sets are parameterized by n), it does
+    not approximate it.
 
-    Shuffles: shingle build (1 distinct), freq agg (vocab-sized,
-    NEVER broadcast-hinted — Heaps' law), per-doc prefix window,
-    candidate equi-join, verify joins. The shingle frame is referenced
-    by freq, prefix, and sizes under different keys, so it is lazily
-    localCheckpointed once inside the operator (exchange reuse cannot
-    dedup differently-keyed consumers — CLAUDE.md).
+    Shuffles: shingle build (1 distinct), freq agg (vocab-sized), per-doc
+    rank window, candidate equi-join, verify. The shingle frame is
+    referenced by freq, ranks, sizes and the verify under different
+    keys, and the ranks feed both sides of the candidate join through a
+    frontier that ends in a Filter or Window, not an exchange —
+    exchange reuse cannot dedup differently-keyed consumers (CLAUDE.md),
+    so both are lazily localCheckpointed inside the operator (Jaccard
+    stages its prefix-filtered ranks, containment its full ranks). The
+    verify reads the same shingle checkpoint instead of re-running the
+    corpus explode+hash+distinct (r12: arrays 0.9 s vs 3.3 s rebuilt at
+    73.5k candidates, sf0.1).
 
     The freq / sizes / candidate joins carry explicit ``merge`` hints:
     every one of those frames SCALES WITH THE CORPUS (vocabulary by
     Heaps' law, sizes one row per doc, prefix rows ~sz/5 per doc), so a
     broadcast plan is wrong at scale by construction — and Spark's
     static size estimation under-reads aggregates downstream of
-    checkpointed (LogicalRDD) sources, statically planning exactly
-    those broadcasts: measured at a 500k-doc probe corpus, the driver
-    died building them ("Not enough memory to build and broadcast")
-    while the same code at 50k ran fine. AQE cannot rescue a
-    statically-planned broadcast (there is no shuffle boundary to
-    re-observe). Sort-merge is the honest strategy for large-large.
-    """
-    # one shingle build + checkpoint shared by the candidate stage AND
-    # the verify (r12: the verify used to re-run the corpus
-    # explode+hash+distinct pass to rebuild the very frame the candidate
-    # stage had already checkpointed — arrays from the shared frame
-    # 0.9 s vs 3.3 s rebuilt at 73.5k candidates, sf0.1)
-    sh = hashed_shingles(docs, id_col, text_col, n=shingle_n).localCheckpoint(
-        eager=False
-    )
-    cand = prefix_filter_candidates(
-        docs, id_col, text_col, threshold, shingle_n, shingles=sh
-    )
-    return verify_sets(
-        cand, docs, "jaccard", id_col, text_col, threshold,
-        shingle_n=shingle_n, shingles=sh,
-    )
-
-
-def prefix_filter_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 5,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """The candidate stage of :func:`jaccard_join_prefix` — prefix +
-    length + positional (PPJoin) filters, NO verify. Split out so scale
-    probes can account candidates-generated vs true-pairs without
-    duplicating the plan (r9 verdict item 2); the join is documented on
-    :func:`jaccard_join_prefix`. ``shingles``: caller-precomputed
-    (and checkpointed) :func:`hashed_shingles` frame over the SAME docs
-    with the same n — skips the in-operator build.
+    checkpointed (LogicalRDD) sources, statically planning exactly those
+    broadcasts: measured at a 500k-doc probe corpus, the driver died
+    building them ("Not enough memory to build and broadcast") while the
+    same code at 50k ran fine. AQE cannot rescue a statically-planned
+    broadcast (there is no shuffle boundary to re-observe). Sort-merge
+    is the honest strategy for large-large.
     """
     from pyspark.sql import Window
 
     assert 0.0 < threshold <= 1.0
-    sh = (
-        shingles
-        if shingles is not None
-        else hashed_shingles(docs, id_col, text_col, n=shingle_n).localCheckpoint(
-            eager=False
-        )
-    )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    freq = sh.groupBy("__h").agg(F.count("*").alias("__f"))
-    w = Window.partitionBy(id_col).orderBy(F.asc("__f"), F.asc("__h"))
-    # ranked feeds BOTH sides of the candidate self-join below, and its
-    # shared frontier ends in a Filter (not an exchange) — without a cut
-    # the shingle build + freq agg + rank window run once per side (the
-    # scd2_apply recompute class; containment_join_prefix has carried
-    # the same cut since r11). Lazy checkpoint inside the operator.
-    ranked = (
-        sh.join(freq.hint("merge"), "__h")
-        .withColumn("__rn", F.row_number().over(w))
-        .join(sizes.hint("merge"), id_col)
-        .filter(
-            F.col("__rn")
-            <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
-        )
-    ).localCheckpoint(eager=False)
-    a = ranked.select(
-        F.col(id_col).alias("id_a"),
-        "__h",
-        F.col("__sz").alias("__sz_a"),
-        F.col("__rn").alias("__p_a"),
-    )
-    b = ranked.select(
-        F.col(id_col).alias("id_b"),
-        "__h",
-        F.col("__sz").alias("__sz_b"),
-        F.col("__rn").alias("__p_b"),
-    )
-    # positional filter (PPJoin, Xiao et al. WWW'08): a collision at
-    # positions (p_a, p_b) of the frequency-ordered token lists bounds
-    # the achievable overlap by 1 + min(remaining suffix lengths); J ≥ t
-    # needs overlap ≥ ⌈t/(1+t)·(sa+sb)⌉. Lossless as an OR over a
-    # pair's collisions (kept by the distinct): a truly similar pair's
-    # FIRST common token always satisfies the bound.
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("__sz_a") + F.col("__sz_b")).cast("double")
-    )
-    cand = (
-        a.join(b.hint("merge"), "__h")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (
-                F.least("__sz_a", "__sz_b").cast("double")
-                >= F.lit(threshold) * F.greatest("__sz_a", "__sz_b")
-            )
-            & (
-                1
-                + F.least(
-                    F.col("__sz_a") - F.col("__p_a"),
-                    F.col("__sz_b") - F.col("__p_b"),
-                )
-                >= alpha
-            )
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return cand
-
-
-def containment_join_prefix(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """EXACT directed set-CONTAINMENT self-join: all ordered pairs
-    (src, dst), src ≠ dst, with |S_src ∩ S_dst| / |S_src| ≥ threshold
-    over char-n-gram shingle sets — the asymmetric complement to
-    :func:`jaccard_join_prefix`. Jaccard misses subset relationships by
-    construction (a short doc quoted inside a long one has tiny union-
-    normalized similarity); containment is the predicate quote/subset
-    dedup and decontamination-by-inclusion actually need (the overlap
-    notion behind suffix-array substring dedup, relaxed to shingle
-    sets).
-
-    Prefix filter, containment form: overlap α = ⌈t·|S_src|⌉ is
-    demanded relative to the SOURCE only, so under a global token order
-    the source must expose its first |S_src| − α + 1 tokens (pigeonhole)
-    — but the destination can be ANY superset, so the index side stays
-    FULL postings (no dst prefix; that is the structural cost vs the
-    symmetric join). Size filter: |S_dst| ≥ α (an α-overlap needs α
-    tokens in dst); no upper bound on dst. Positional filter: a
-    collision at ranks (p_s, p_d) of the shared frequency order bounds
-    the remaining overlap by 1 + min(|S_src|−p_s, |S_dst|−p_d) ≥ α —
-    lossless as an OR over a pair's collisions (the first common token
-    satisfies it). Candidates then get the exact Arrow verify
-    (:func:`verify_sets`, containment metric), so the output equals
-    brute force: the registry oracle brute-forces ALL shared-shingle
-    pairs and hash-equality proves the pruning dropped nothing.
-
-    Scale shape mirrors jaccard_join_prefix: one shingle build (lazily
-    checkpointed — freq / prefix / postings / sizes all re-reference
-    it under different keys), a vocabulary-sized frequency agg, the
-    prefix ⋈ postings candidate equi-join, and the verify joins — all
-    corpus-scaled frames carry ``merge`` hints (the static-broadcast
-    OOM class). Same long-tail caveat as the Jaccard join: a saturated
-    shingle vocabulary (tiny fixture vocab at small n) defeats
-    frequency-ordered prefixes; ``shingle_n`` is the de-saturation
-    knob and CHANGES the similarity definition, not approximates it.
-    """
-    from pyspark.sql import Window
-
-    assert 0.0 < threshold <= 1.0
+    m = _SET_METRICS[metric]
+    # staged: sizes, freq, ranks and the verify's arrays all read it
+    # (reports/receipts/nockpt_sf0.1_prefix_join_sets.json, unstaged /
+    # staged, best of 5: jaccard 1.59×, containment 1.44×)
     sh = hashed_shingles(docs, id_col, text_col, n=shingle_n).localCheckpoint(
         eager=False
     )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
     freq = sh.groupBy("__h").agg(F.count("*").alias("__f"))
     w = Window.partitionBy(id_col).orderBy(F.asc("__f"), F.asc("__h"))
-    # referenced twice below (src prefix + dst full postings) and the
-    # shared frontier ends in a Window, not an exchange — without a cut
-    # the shingle build + freq agg + rank window recompute once per
-    # reference (the scd2_apply recompute class, CLAUDE.md); lazy
-    # checkpoint inside the operator is the honest fix (first caller
-    # action materializes it, nothing runs at build time)
     ranked = (
         sh.join(freq.hint("merge"), "__h")
         .withColumn("__rn", F.row_number().over(w))
         .join(sizes.hint("merge"), id_col)
-    ).localCheckpoint(eager=False)
-    # α = ceil(t·|src|): required overlap, source-relative
-    src = ranked.filter(
-        F.col("__rn")
-        <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
-    ).select(
-        F.col(id_col).alias("src_id"),
-        "__h",
-        F.col("__sz").alias("__sz_s"),
-        F.col("__rn").alias("__p_s"),
     )
-    dst = ranked.select(
-        F.col(id_col).alias("dst_id"),
-        "__h",
-        F.col("__sz").alias("__sz_d"),
-        F.col("__rn").alias("__p_d"),
+    prefix = (
+        F.col("__rn") <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
     )
-    alpha = F.ceil(F.lit(threshold) * F.col("__sz_s").cast("double"))
-    cand = (
-        src.join(dst.hint("merge"), "__h")
-        .filter(
-            (F.col("src_id") != F.col("dst_id"))
-            & (F.col("__sz_d") >= alpha)
-            & (
-                1
-                + F.least(
-                    F.col("__sz_s") - F.col("__p_s"),
-                    F.col("__sz_d") - F.col("__p_d"),
-                )
-                >= alpha
-            )
+    if m.symmetric:
+        ranked = ranked.filter(prefix)
+    # staged: both sides of the candidate join read the ranks (same
+    # receipt: jaccard 0.97× (flat), containment 1.08×)
+    ranked = ranked.localCheckpoint(eager=False)
+    probe = ranked if m.symmetric else ranked.filter(prefix)
+
+    def side(frame: DataFrame, pair_col: str, s: str) -> DataFrame:
+        return frame.select(
+            F.col(id_col).alias(pair_col),
+            "__h",
+            F.col("__sz").alias(f"__sz_{s}"),
+            F.col("__rn").alias(f"__p_{s}"),
         )
-        .select("src_id", "dst_id")
+
+    sa, sb = F.col("__sz_a"), F.col("__sz_b")
+    alpha = m.overlap(threshold, sa, sb)
+    pair_ok = (
+        F.col(m.col_a) < F.col(m.col_b) if m.symmetric
+        else F.col(m.col_a) != F.col(m.col_b)
+    )
+    cand = (
+        side(probe, m.col_a, "a")
+        .join(side(ranked, m.col_b, "b").hint("merge"), "__h")
+        .filter(
+            pair_ok
+            & m.size_ok(threshold, sa, sb)
+            & (1 + F.least(sa - F.col("__p_a"), sb - F.col("__p_b")) >= alpha)
+        )
+        .select(m.col_a, m.col_b)
         .distinct()
     )
-    # exact verify via the Arrow kernel (r10: replaced the relational
-    # cand ⋈ postings ⋈ postings verify — with full-postings candidates
-    # the src-side join fanned each candidate by |S_src| rows, ~58M
-    # intermediate rows for 73.5k candidates at sf0.1, ~10 s of the
-    # query's 14; the kernel ships each doc's sorted hash array once
-    # per side instead). inter/|S_src| is one long/long double division,
-    # IEEE-identical to the oracle's CAST(i AS DOUBLE)/sa.s.
-    # sh is the checkpointed corpus shingle frame built above — pass it
-    # through so the verify's array build reads the checkpoint instead
-    # of re-running the corpus explode+hash+distinct pass (r12)
     return verify_sets(
-        cand, docs, "containment", id_col, text_col, threshold,
+        cand, docs, metric, id_col, text_col, threshold,
         shingle_n=shingle_n, shingles=sh,
     )
 

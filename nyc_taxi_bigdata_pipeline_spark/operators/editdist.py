@@ -15,7 +15,7 @@ Candidate volume is data-dependent: a segment that is CONSTANT across
 the corpus (e.g. the ``Customer#`` prefix of TPC-H names, or zero-padded
 id regions) matches everything and degenerates that segment's bucket
 toward the full length-band cross product — the same saturation failure
-mode as low-n shingles in `jaccard_join_prefix` (see working notes).
+mode as low-n shingles in `dedup.prefix_join_sets` (see working notes).
 Selective corpora (hashes, natural words, mixed-format ids) keep
 candidates near-linear; the scale probe `scripts/bench_r6_editdist.py`
 measured both regimes (script deleted; numbers stand, RESULTS.md Round 6).

@@ -1,4 +1,4 @@
-"""Distributed synthetic trip generator.
+"""Distributed, oracle-portable synthetic trip generator.
 
 The pytest fixtures (tests/taxi_fixtures.py) build rows on the driver —
 fine at 2k rows, useless at benchmark scale. This generator produces the
@@ -7,8 +7,10 @@ same schema/dirty-row contract (FIXTURES.md §1) entirely JVM-side from
 parallel, no driver materialization — the pattern that generates test
 corpora at any scale on a real cluster.
 
-Determinism: every column derives from xxhash64(id, tag) — no rand(),
-whose per-partition seeding changes with partitioning.
+Determinism: every column derives from a portable md5→int64 hash of
+(tag, key, row id) — no rand(), whose per-partition seeding changes with
+partitioning — and integer-cents arithmetic, so a DuckDB SQL twin
+regenerates the exact rows for oracles.
 """
 
 from __future__ import annotations
@@ -21,108 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.datetime_parity import month_window
 
 
-def _u(tag: str, lo: float = 0.0, hi: float = 1.0) -> F.Column:
-    """Deterministic uniform [lo, hi) from the row id."""
-    h = F.pmod(F.xxhash64(F.col("id"), F.lit(tag)), F.lit(1 << 30)).cast("double")
-    return F.lit(lo) + (h / float(1 << 30)) * (hi - lo)
-
-
-def _pick(tag: str, values: list) -> F.Column:
-    idx = F.pmod(F.xxhash64(F.col("id"), F.lit(tag)), F.lit(len(values)))
-    expr = F.lit(values[0])
-    for i, v in enumerate(values[1:], start=1):
-        expr = F.when(idx == i, F.lit(v)).otherwise(expr)
-    return expr
-
-
-def make_trips_month_distributed(
-    spark: SparkSession,
-    year: int,
-    month: int,
-    n: int,
-    seed: int = 42,
-    dirty_fraction: float = 0.06,
-    partitions: int | None = None,
-) -> DataFrame:
-    """~n trips in (year, month) with the FIXTURES.md dirty-row quota,
-    built from JVM expressions over spark.range (scales linearly with
-    executors)."""
-    start, end = month_window(year, month)
-    df = spark.range(n, numPartitions=partitions or spark.sparkContext.defaultParallelism)
-    df = df.withColumn("id", F.xxhash64(F.col("id"), F.lit(f"{seed}-{year}-{month}")))
-
-    # dirty-class thresholds scale with dirty_fraction (classes keep the
-    # FIXTURES.md ratios: 1:1:0.5:1:1:1.5 across the six kinds)
-    k = dirty_fraction / 0.06
-    t = [round(x * k, 6) for x in (0.01, 0.02, 0.025, 0.035, 0.045, 0.06)]
-
-    span_s = F.unix_timestamp(F.lit(end).cast("timestamp")) - F.unix_timestamp(F.lit(start).cast("timestamp"))
-    pickup = F.timestamp_seconds(
-        F.unix_timestamp(F.lit(start).cast("timestamp")) + (_u("pickup") * span_s).cast("long")
-    )
-    duration_min = _u("dur", 1.0, 90.0)
-    dirty = _u("dirty")
-
-    # dirty classes (FIXTURES.md §1), mutually exclusive slices of [0, 6%)
-    pickup = F.when(
-        dirty < t[0], F.timestamp_seconds(F.unix_timestamp(F.lit(end).cast("timestamp")) + 3600)
-    ).otherwise(pickup)  # out-of-month spill
-    duration_min = (
-        F.when((dirty >= t[0]) & (dirty < t[1]), -duration_min)  # negative duration
-        .when((dirty >= t[1]) & (dirty < t[2]), F.lit(25.0 * 60))  # >24 h
-        .otherwise(duration_min)
-    )
-    dropoff = F.timestamp_seconds(
-        F.unix_timestamp(pickup) + (duration_min * 60).cast("long")
-    )
-
-    dist = F.round(F.exp(_u("dist", -0.5, 2.2)), 2)
-    fare = F.round(F.lit(3.0) + 2.5 * dist + 0.4 * duration_min, 2)
-    tip = F.round(F.when(_u("tipq") < 0.7, fare * _u("tipr", 0.15, 0.25)).otherwise(0.0), 2)
-    total = F.round(fare + tip + 1.5, 2)
-
-    null_crit = (dirty >= t[2]) & (dirty < t[3])
-    neg_vals = (dirty >= t[3]) & (dirty < t[4])
-    null_soft = (dirty >= t[4]) & (dirty < t[5])
-
-    out = df.select(
-        _pick("vendor", [1, 1, 2, 2, 6, 7]).cast("int").alias("VendorID"),
-        F.when(null_crit & (_u("nc") < 0.5), None).otherwise(pickup).alias("tpep_pickup_datetime"),
-        F.when(null_crit & (_u("nc") >= 0.5), None).otherwise(dropoff).alias("tpep_dropoff_datetime"),
-        F.when(null_soft & (_u("ns") < 0.3), None)
-        .otherwise(_pick("pax", [1, 1, 1, 2, 2, 3, 4, 5, 6]))
-        .cast("int")
-        .alias("passenger_count"),
-        F.when(neg_vals & (_u("nv") < 0.5), -dist).otherwise(dist).alias("trip_distance"),
-        F.when(null_soft & (_u("ns").between(0.3, 0.5)), None)
-        .otherwise(_pick("rate", [1, 1, 1, 2, 3, 4, 5, 6, 99]))
-        .cast("int")
-        .alias("RatecodeID"),
-        F.when(null_soft & (_u("ns").between(0.5, 0.7)), None)
-        .otherwise(_pick("saf", ["Y", "N", "N", "N"]))
-        .alias("store_and_fwd_flag"),
-        _pick("pu", [161, 236, 237, 132, 138] + list(range(1, 266))).cast("int").alias("PULocationID"),
-        (F.pmod(F.xxhash64(F.col("id"), F.lit("do")), F.lit(265)) + 1).cast("int").alias("DOLocationID"),
-        _pick("pay", [1, 1, 1, 2, 2, 3, 4, 0]).cast("int").alias("payment_type"),
-        fare.alias("fare_amount"),
-        _pick("extra", [0.0, 0.5, 1.0, 2.5]).alias("extra"),
-        F.lit(0.5).alias("mta_tax"),
-        tip.alias("tip_amount"),
-        _pick("tolls", [0.0, 0.0, 0.0, 6.55]).alias("tolls_amount"),
-        F.lit(1.0).alias("improvement_surcharge"),
-        F.when(neg_vals & (_u("nv") >= 0.5), -total).otherwise(total).alias("total_amount"),
-        F.when(null_soft & (_u("ns") >= 0.85), None)
-        .otherwise(_pick("cong", [0.0, 2.5]))
-        .alias("congestion_surcharge"),
-        F.when(null_soft & (_u("ns").between(0.7, 0.85)), None)
-        .otherwise(_pick("apt", [0.0, 1.25, 1.75]))
-        .alias("airport_fee"),
-    )
-    return out
-
-
-# --------------------------------------------- oracle-portable variant
-
 # Value tables shared by the Spark builder and the DuckDB SQL twin below.
 # Integer-cents money and pure-integer hashing keep every derived value
 # bit-identical across engines (functions/compat.py rules: no raw-double
@@ -133,8 +33,8 @@ _P_RATE = (1, 1, 1, 2, 3, 4, 5, 6, 99)
 _P_PAY = (1, 1, 1, 2, 2, 3, 4, 0)
 _PU_PLANTED = (161, 236, 237, 132, 138)
 
-# dirty-class thresholds out of 1e6 (same six FIXTURES.md classes and
-# 1 : 1 : 0.5 : 1 : 1 : 1.5 ratios as make_trips_month_distributed):
+# dirty-class thresholds out of 1e6 (the six FIXTURES.md classes in
+# 1 : 1 : 0.5 : 1 : 1 : 1.5 ratios, 6 % dirty in all):
 # [0, 10k) out-of-month · [10k, 20k) negative duration · [20k, 25k) >24 h
 # duration · [25k, 35k) null critical ts · [35k, 45k) negative values ·
 # [45k, 60k) soft nulls
@@ -148,9 +48,9 @@ def _month_span_seconds(year: int, month: int) -> int:
 
 def _hp_spark(tag: str, key: str) -> F.Column:
     """Portable seeded 64-bit row hash (md5-hex → int64) of the range id —
-    the bit-identical twin of :func:`_hp_duck`. Engine-private xxhash64
-    stays in make_trips_month_distributed; this variant pays the md5 cost
-    so a DuckDB oracle can regenerate the exact rows."""
+    the bit-identical twin of :func:`_hp_duck`. It pays an md5 per value
+    instead of an engine-private xxhash64 so a DuckDB oracle can
+    regenerate the exact rows."""
     return F.expr(
         "CAST(CONV(SUBSTRING(MD5(CONCAT("
         f"'{tag}#{key}#', CAST(id AS STRING))), 1, 15), 16, 10) AS BIGINT)"
@@ -187,11 +87,11 @@ def make_trips_month_portable(
     seed: int = 42,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Oracle-portable twin of :func:`make_trips_month_distributed`:
-    same 19-column schema (plus a ``rid`` row-index column callers may
-    plant duplicates with; ``ingest.normalize_types`` drops it), same
-    six dirty classes, but every value derives from the portable
-    md5→int64 hash and integer-cents arithmetic so
+    """~n trips in (year, month): the 19 raw trip columns (plus a
+    ``rid`` row-index column callers may plant duplicates with;
+    ``ingest.normalize_types`` drops it) with the six FIXTURES.md dirty
+    classes. Every value derives from the portable md5→int64 hash and
+    integer-cents arithmetic so
     :func:`portable_trips_duckdb_sql` regenerates the exact rows for a
     DuckDB oracle. Money columns are exact cents / 100.0 doubles; no
     transcendental functions (exp/round-on-double cross-engine hazards).

@@ -122,10 +122,6 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _us(t: dt.datetime) -> int:
-    return int(t.timestamp() * 1_000_000)
-
-
 def _from_us(us: int) -> dt.datetime:
     return dt.datetime.fromtimestamp(us / 1_000_000, dt.timezone.utc).replace(tzinfo=None)
 

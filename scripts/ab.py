@@ -9,6 +9,12 @@ Arms (``--arm``, repeatable; the first arm is the ratio's denominator):
   method, so patching ``pyspark.sql.dataframe.DataFrame`` is a no-op),
   but only for calls made from a file under ``benchqueries/``. Operator
   stagings keep running, so the ratio belongs to the builder's staging.
+- ``nockpt:SCOPE``: the same, for the calls whose caller ``file:line``
+  contains SCOPE, e.g. ``nockpt:operators/dedup.py`` (every staging in
+  that file) or ``nockpt:operators/dedup.py:745`` (one staging). The
+  line is the one holding ``.localCheckpoint(``, not the first line of
+  its chain; a SCOPE ending in a line number matches that line only
+  (``:74`` does not match ``:745``).
 - ``set:module.NAME=value``: sets a module constant (a Python literal)
   for the arm and restores it after, e.g.
   ``set:nyc_taxi_bigdata_pipeline_spark.operators.dedup.BROADCAST_ARRAYS_MAX_BYTES=0``.
@@ -36,6 +42,7 @@ import hashlib
 import importlib
 import json
 import os
+import re
 import sys
 import time
 from unittest import mock
@@ -64,17 +71,19 @@ PROBES = {
 
 @contextlib.contextmanager
 def arm(spark, spec: str, stats: dict):
-    """Apply one arm for the ``with`` body. ``nockpt`` counts the builder
-    stagings it skipped (``stats["skipped"]``) and the other stagings it
-    let run (``stats["kept"]``)."""
+    """Apply one arm for the ``with`` body. ``nockpt`` counts the
+    stagings in its scope that it skipped (``stats["skipped"]``) and the
+    other stagings it let run (``stats["kept"]``)."""
     if spec == "shipped":
         yield
-    elif spec == "nockpt":
+    elif spec == "nockpt" or spec.startswith("nockpt:"):
+        in_scope = re.compile(re.escape(spec[7:] or BUILDERS) + r"(?!\d)").search
         cls = type(spark.range(0))
         orig = cls.localCheckpoint
 
         def local_checkpoint(self, *args, **kwargs):
-            if BUILDERS in sys._getframe(1).f_code.co_filename:
+            caller = sys._getframe(1)
+            if in_scope(f"{caller.f_code.co_filename}:{caller.f_lineno}"):
                 stats["skipped"] = stats.get("skipped", 0) + 1
                 return self
             stats["kept"] = stats.get("kept", 0) + 1
@@ -91,7 +100,9 @@ def arm(spark, spec: str, stats: dict):
         with mock.patch.object(mod, name, ast.literal_eval(value)):
             yield
     else:
-        raise SystemExit(f"unknown arm {spec!r}: shipped, nockpt or set:module.NAME=value")
+        raise SystemExit(
+            f"unknown arm {spec!r}: shipped, nockpt[:SCOPE] or set:module.NAME=value"
+        )
 
 
 def checksum(rows) -> str:
@@ -177,7 +188,10 @@ def main() -> None:
     ap.add_argument("--queries", required=True, help="comma-separated registry names")
     ap.add_argument("--sf-dir", required=True, help="tables to time on (e.g. a salted tier)")
     ap.add_argument("--passes", type=int, default=2)
-    ap.add_argument("--arm", action="append", dest="arms", help="shipped | nockpt | set:module.NAME=value")
+    ap.add_argument(
+        "--arm", action="append", dest="arms",
+        help="shipped | nockpt[:SCOPE] | set:module.NAME=value",
+    )
     ap.add_argument("--out", help="receipt JSON path (default: stdout)")
     args = ap.parse_args()
     queries = [q for q in args.queries.split(",") if q]

@@ -1,10 +1,12 @@
 """ETL throughput baseline (ex01→ex03 parity).
 
-Generates N synthetic trips distributed (no driver materialization),
-runs the full monthly pipeline — clean+normalize, silver partition
-write, star-schema build with the idempotent natural-key fact load,
-quality gates — and reports wall time + rows/s for comparison with the
-reference's ~10–14 min per 3–6M-row month (BASELINE.md).
+Generates N synthetic trips JVM-side with
+``sources.synthetic.make_trips_month_portable`` (no driver
+materialization), runs the full monthly pipeline — clean+normalize,
+silver partition write, star-schema build with the idempotent
+natural-key fact load, quality gates — and reports wall time + rows/s
+for comparison with the reference's ~10–14 min per 3–6M-row month
+(BASELINE.md).
 
 Usage: python scripts/etl_baseline_run.py [--rows N] [--out-dir reports]
 """
@@ -23,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from nyc_taxi_bigdata_pipeline_spark import pipeline
 from nyc_taxi_bigdata_pipeline_spark.session import get_spark
 from nyc_taxi_bigdata_pipeline_spark.sources.reports import write_json_report
-from nyc_taxi_bigdata_pipeline_spark.sources.synthetic import make_trips_month_distributed
+from nyc_taxi_bigdata_pipeline_spark.sources.synthetic import make_trips_month_portable
 
 
 def main() -> None:
@@ -41,7 +43,7 @@ def main() -> None:
         from taxi_fixtures import make_zone_lookup
 
         zones = make_zone_lookup(spark)
-        raw = make_trips_month_distributed(spark, 2023, 1, args.rows)
+        raw = make_trips_month_portable(spark, 2023, 1, args.rows)
         # stage raw to parquet first so the measured run reads from disk
         raw_path = f"{work}/raw"
         raw.write.mode("overwrite").parquet(raw_path)

@@ -20,6 +20,18 @@ Timestamps, amounts, and categorical columns are kept verbatim: group
 cardinalities on derived keys (day, hour, segment) stay constant while
 group SIZES grow REPS× — the shape a bigger month actually has.
 
+Known gap: the support-cut text queries (``text_cooccurrence_pairs``,
+``text_association_rules``, ``text_tfidf_cosine``) return 0 rows on
+every salted tier, so their receipts are taken at sf0.1. The vowel
+rotation has period 5, so reps r and r+5 share a spelling and each
+vowel-bearing token appears in only REPS/5 of the REPS replicas of a
+document: its document frequency falls to at most 1/5 of its sf0.1
+value. The ``COUNT(*) * 2 >= nd`` support cut (text_ops.py) then
+passes nothing. Checked with DuckDB over the same token incidence:
+sf0.1 has 30 tokens at ≥ 50 % support (the most frequent in 78.46 % of
+5,000 documents, and every one of them has a vowel); the 10× tier has
+none (the most frequent in 15.69 % of 50,000).
+
 Usage: python scripts/make_scaled_testdata.py [--reps 10] [--out /tmp/sf1x10]
 """
 

@@ -7,9 +7,11 @@ artifacts the reference publishes (train_metrics.json,
 error_summary.json, predict_report.json) into reports/ for comparison
 against BASELINE.md.
 
+Months come from the JVM-side portable generator
+(``sources/synthetic.make_trips_month_portable``), so multi-million-row
+runs need no driver materialization.
+
 Usage: python scripts/ml_baseline_run.py [--rows-per-month N] [--max-iter N]
-       [--distributed]  (JVM-side generator — required for multi-million-row
-                         runs; the driver-side fixture is for small parity runs)
 """
 
 from __future__ import annotations
@@ -20,13 +22,12 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 
 from nyc_taxi_bigdata_pipeline_spark import ingest
 from nyc_taxi_bigdata_pipeline_spark.ml import errors, features, predict, train
 from nyc_taxi_bigdata_pipeline_spark.session import get_spark
 from nyc_taxi_bigdata_pipeline_spark.sources.reports import df_to_report, write_json_report
-from taxi_fixtures import make_trips_month
+from nyc_taxi_bigdata_pipeline_spark.sources.synthetic import make_trips_month_portable
 
 
 def main() -> None:
@@ -34,25 +35,14 @@ def main() -> None:
     ap.add_argument("--rows-per-month", type=int, default=30000)
     ap.add_argument("--max-iter", type=int, default=train.GBT_MAX_ITER)
     ap.add_argument("--out-dir", default="reports")
-    ap.add_argument("--distributed", action="store_true",
-                    help="generate fixture months JVM-side (sources/synthetic.py)")
     args = ap.parse_args()
 
     spark = get_spark("ml-baseline")
-    if args.distributed:
-        from nyc_taxi_bigdata_pipeline_spark.sources.synthetic import (
-            make_trips_month_distributed,
-        )
-
-        def gen(m):
-            return make_trips_month_distributed(spark, 2023, m, args.rows_per_month)
-    else:
-        def gen(m):
-            return make_trips_month(spark, 2023, m, n=args.rows_per_month)
-
     t_gen = time.perf_counter()
     months = {
-        m: features.build_feature_table(ingest.clean_month(gen(m), 2023, m))
+        m: features.build_feature_table(ingest.clean_month(
+            make_trips_month_portable(spark, 2023, m, args.rows_per_month), 2023, m
+        ))
         for m in (1, 2, 3, 4)
     }
     train_df = months[1].unionByName(months[2]).unionByName(months[3])
@@ -79,10 +69,8 @@ def main() -> None:
             "train_rows_per_sec": round(result.train_rows / result.train_seconds, 1),
             "fixture_gen_seconds": round(gen_s, 2),
             "note": (
-                "deterministic synthetic months ("
-                + ("sources/synthetic.py JVM generator" if args.distributed
-                   else "tests/taxi_fixtures.py")
-                + ", seed 42)"
+                "deterministic synthetic months "
+                "(sources/synthetic.make_trips_month_portable, seed 42)"
             ),
         },
         f"{args.out_dir}/train_metrics.json",

@@ -176,12 +176,12 @@ def test_containment_asymmetric_subset(spark):
     df = spark.createDataFrame(
         [(1, short_text), (2, long_text), (3, other)], "doc_id long, text string"
     )
-    out = dedup.containment_join_prefix(df, threshold=0.8, shingle_n=14).collect()
+    out = dedup.prefix_join_sets(df, "containment", threshold=0.8, shingle_n=14).collect()
     pairs = {(r.src_id, r.dst_id): r.containment for r in out}
     assert pairs[(1, 2)] == 1.0  # every 14-gram of the prefix is in the long doc
     assert (2, 1) not in pairs  # reverse direction well below 0.8
     assert not any(3 in p for p in pairs)  # disjoint vocab never collides
-    jac = dedup.jaccard_join_prefix(df, threshold=0.8, shingle_n=14).collect()
+    jac = dedup.prefix_join_sets(df, "jaccard", threshold=0.8, shingle_n=14).collect()
     assert jac == []  # the subset pair is invisible to symmetric Jaccard
 
 
@@ -1641,11 +1641,8 @@ def test_verify_sets_broadcast_matches_join_fallback(spark, monkeypatch, metric)
     kernel reads pair ids only) must equal the join shape it replaces
     under the byte cap, scores included, for both metrics — and both
     shapes must drop a pair whose id has no row in ``docs``."""
-    col_a, col_b, score_col = dedup._VERIFY_METRICS[metric]
-    self_join = {
-        "jaccard": dedup.jaccard_join_prefix,
-        "containment": dedup.containment_join_prefix,
-    }[metric]
+    m = dedup._SET_METRICS[metric]
+    col_a, col_b, score_col = m.col_a, m.col_b, m.score_col
     long_text = " ".join(f"tok{i:03d}" for i in range(80))
     short_text = " ".join(f"tok{i:03d}" for i in range(20))
     mid_text = " ".join(f"tok{i:03d}" for i in range(10, 55))
@@ -1659,7 +1656,7 @@ def test_verify_sets_broadcast_matches_join_fallback(spark, monkeypatch, metric)
             (r[col_a], r[col_b], round(r[score_col], 9)) for r in frame.collect()
         }
 
-    chain = verified(self_join(df, threshold=0.4, shingle_n=14))
+    chain = verified(dedup.prefix_join_sets(df, metric, threshold=0.4, shingle_n=14))
     # every ordered pair, plus pairs with id 99, which has no document
     pairs_all = spark.createDataFrame(
         [(a, b) for a in (1, 2, 3, 99) for b in (1, 2, 3, 99) if a != b],
@@ -2096,30 +2093,40 @@ def test_mg_null_tokens_dropped(spark):
 # ------------------------------------------------------- prefix-filter ssjoin
 
 
-def test_jaccard_join_prefix_matches_bruteforce(spark, docs_with_dups):
+@pytest.mark.parametrize("metric", ["jaccard", "containment"])
+def test_prefix_join_sets_matches_bruteforce(spark, docs_with_dups, metric):
     """The exact SSJoin must reproduce brute-force all-pairs verification
-    bit-for-bit (prefix + length filters are lossless by theorem)."""
+    bit-for-bit for both metrics (prefix + size + positional filters are
+    lossless by theorem). Jaccard's expected set comes from the
+    independent relational :func:`jaccard_verify` over every pair
+    id_a < id_b; containment's from :func:`verify_sets` over every
+    ordered pair."""
     from nyc_taxi_bigdata_pipeline_spark.operators import dedup
 
+    m = dedup._SET_METRICS[metric]
     ids = docs_with_dups.select("doc_id")
     allpairs = (
-        ids.withColumnRenamed("doc_id", "id_a")
-        .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
+        ids.withColumnRenamed("doc_id", m.col_a)
+        .crossJoin(ids.withColumnRenamed("doc_id", m.col_b))
+        .filter(
+            F.col(m.col_a) < F.col(m.col_b) if m.symmetric
+            else F.col(m.col_a) != F.col(m.col_b)
+        )
     )
+
+    def scored(frame):
+        return {
+            (r[m.col_a], r[m.col_b], round(r[m.score_col], 9))
+            for r in frame.collect()
+        }
+
     for thr in (0.5, 0.9):
-        expected = {
-            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-            for r in dedup.jaccard_verify(
-                allpairs, docs_with_dups, threshold=thr
-            ).collect()
-        }
-        got = {
-            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-            for r in dedup.jaccard_join_prefix(
-                docs_with_dups, threshold=thr
-            ).collect()
-        }
+        if metric == "jaccard":
+            brute = dedup.jaccard_verify(allpairs, docs_with_dups, threshold=thr)
+        else:
+            brute = dedup.verify_sets(allpairs, docs_with_dups, metric, threshold=thr)
+        expected = scored(brute)
+        got = scored(dedup.prefix_join_sets(docs_with_dups, metric, threshold=thr))
         assert got == expected
         assert expected, f"fixture must contain near-dup pairs at {thr}"
 

@@ -139,8 +139,9 @@ def test_fuzzy_join_no_theta_nested_loop(spark, sf_dir):
     assert "NestedLoop" not in plan and "Cartesian" not in plan
 
 
-def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir, monkeypatch):
-    """jaccard_join_prefix's freq/sizes/candidate joins must plan
+@pytest.mark.parametrize("metric", ["jaccard", "containment"])
+def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir, monkeypatch, metric):
+    """prefix_join_sets' freq/sizes/candidate joins must plan
     SortMergeJoin, never broadcast: every one of those frames scales
     with the corpus, and Spark's static estimator under-reads
     aggregates downstream of checkpointed sources — it statically
@@ -164,7 +165,7 @@ def test_ssjoin_corpus_joins_never_broadcast(spark, sf_dir, monkeypatch):
     # (arrays collected once, kernel reads pair ids).
     docs = spark.createDataFrame(docs.limit(50).collect(), docs.schema)
     monkeypatch.setattr(dedup, "BROADCAST_ARRAYS_MAX_BYTES", 0)
-    plan = physical_plan(dedup.jaccard_join_prefix(docs, threshold=0.8))
+    plan = physical_plan(dedup.prefix_join_sets(docs, metric, threshold=0.8))
     assert plan.count("SortMergeJoin") >= 3, plan[:2000]
 
 

@@ -13,7 +13,7 @@ import pytest
 from pyspark import SparkContext
 
 from nyc_taxi_bigdata_pipeline_spark.benchqueries import REGISTRY
-from nyc_taxi_bigdata_pipeline_spark.operators import dedup
+from nyc_taxi_bigdata_pipeline_spark.operators import dedup, editdist
 
 SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 
@@ -77,6 +77,28 @@ def test_ab_nockpt_keeps_operator_stagings(spark, ab):
     # the patch is gone once the arm ends: a direct call stages again
     assert "LogicalRDD" in _plan(spark.range(3).localCheckpoint())
     assert not spark.sparkContext._jsc.sc().isStopped()
+
+
+def test_ab_nockpt_scope_unstages_one_operator_staging(spark, ab):
+    """``nockpt:SCOPE`` skips only the stagings whose caller ``file:line``
+    contains SCOPE. fuzzy_join_levenshtein reaches one staging in
+    operators/editdist.py; the caller's line is the one holding
+    ``.localCheckpoint(``, not the first line of its chain, and a line
+    number matches whole (``:15`` does not match ``:153``)."""
+    q = "fuzzy_join_levenshtein"
+    shipped = ab.run_arm(spark, q, "shipped", ab.WARM_DIR)
+    scoped = ab.run_arm(spark, q, "nockpt:operators/editdist.py", ab.WARM_DIR)
+    assert scoped["skipped"] == 1
+    assert shipped["rows"] > 0 and shipped["checksum"] == scoped["checksum"]
+
+    with open(editdist.__file__) as f:
+        line = next(i for i, text in enumerate(f, 1) if ".localCheckpoint(" in text)
+    for scope_line, skipped in ((line, 1), (line - 1, 0), (line // 10, 0)):
+        stats: dict = {}
+        with ab.arm(spark, f"nockpt:operators/editdist.py:{scope_line}", stats):
+            REGISTRY[q].spark_fn(spark, ab.WARM_DIR)
+        ab._release_query_state(spark)
+        assert stats.get("skipped", 0) == skipped, scope_line
 
 
 def test_ab_set_arm_restores_constant(spark, ab):

@@ -95,35 +95,26 @@ def test_fetch_if_absent_idempotent(tmp_path):
     assert not list(dest.parent.glob("*.part"))  # no partial left behind
 
 
-def test_distributed_trip_generator(spark):
+def test_portable_trip_generator(spark):
     """The JVM-side generator must honor the FIXTURES.md contract and be
     deterministic under repartitioning (no rand())."""
     from nyc_taxi_bigdata_pipeline_spark import ingest
     from nyc_taxi_bigdata_pipeline_spark.quality import retention_check
+    from nyc_taxi_bigdata_pipeline_spark.schema import TRIPS_RAW_COLUMNS
     from nyc_taxi_bigdata_pipeline_spark.sources.synthetic import (
-        make_trips_month_distributed,
+        make_trips_month_portable,
     )
 
-    raw = make_trips_month_distributed(spark, 2023, 3, 20000)
-    assert raw.columns == list(
-        __import__(
-            "nyc_taxi_bigdata_pipeline_spark.schema", fromlist=["TRIPS_RAW_COLUMNS"]
-        ).TRIPS_RAW_COLUMNS
-    )
+    raw = make_trips_month_portable(spark, 2023, 3, 20000)
+    assert raw.columns == ["rid", *TRIPS_RAW_COLUMNS]
     cleaned = ingest.clean_month(raw, 2023, 3)
     n_raw, n_clean = raw.count(), cleaned.count()
     assert retention_check(n_raw, n_clean).status == "PASS"  # ≤10% dirty
     assert n_clean < n_raw  # dirty rows exist and are filtered
     # deterministic across partitioning
-    a = make_trips_month_distributed(spark, 2023, 3, 500, partitions=1).collect()
-    b = make_trips_month_distributed(spark, 2023, 3, 500, partitions=7).collect()
+    a = make_trips_month_portable(spark, 2023, 3, 500, partitions=1).collect()
+    b = make_trips_month_portable(spark, 2023, 3, 500, partitions=7).collect()
     assert sorted(map(tuple, a), key=repr) == sorted(map(tuple, b), key=repr)
-    # dirty_fraction dials the clean rate
-    pristine = make_trips_month_distributed(spark, 2023, 3, 5000, dirty_fraction=0.0)
-    assert ingest.clean_month(pristine, 2023, 3).count() == 5000
-    filthy = make_trips_month_distributed(spark, 2023, 3, 5000, dirty_fraction=0.5)
-    filthy_clean = ingest.clean_month(filthy, 2023, 3).count()
-    assert filthy_clean < 5000 * 0.75
 
 
 def test_hadoop_fs_probe(spark, tmp_path):
