@@ -2,22 +2,23 @@
 
 M1-M8: StringIndexer → OneHotEncoder → VectorAssembler →
 GBTRegressor(maxDepth=6, maxIter=50, seed=42), evaluated with
-RMSE/MAE/R². The reference's per-column indexer/encoder pairs are one
-multi-column StringIndexer and one multi-column OneHotEncoder here: the
-same ``<col>_idx``/``<col>_ohe`` columns and labels, but one label-count
-pass at fit time instead of one per column, and a 4-stage model for the
-registry to save instead of 14. The encoder stack sits behind
-``build_pipeline`` so a hash/target encoder can replace OHE at 100-TB
-cardinalities (SURVEY §7.4).
+RMSE/MAE/R² in one aggregate pass. The reference's per-column
+indexer/encoder pairs are one multi-column StringIndexer and one
+multi-column OneHotEncoder here: the same ``<col>_idx``/``<col>_ohe``
+columns and labels, but one label-count pass at fit time instead of one
+per column, and a 4-stage model for the registry to save instead of 14.
+The encoder stack sits behind ``build_pipeline`` so a hash/target
+encoder can replace OHE at 100-TB cardinalities (SURVEY §7.4).
 """
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass
 
+import pyspark.sql.functions as F
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
 from pyspark.ml.regression import GBTRegressor
 from pyspark.sql import DataFrame
@@ -70,18 +71,15 @@ class TrainResult:
 
 
 def evaluate(model: PipelineModel, test_df: DataFrame, label: str = ML_LABEL) -> dict[str, float]:
-    """M8: rmse/mae/r2 evaluator passes (trainer.py:128-152)."""
-    preds = model.transform(test_df).cache()
-    try:
-        out = {}
-        for metric in ("rmse", "mae", "r2"):
-            ev = RegressionEvaluator(
-                labelCol=label, predictionCol="prediction", metricName=metric
-            )
-            out[metric] = ev.evaluate(preds)
-        return out
-    finally:
-        preds.unpersist()
+    """M8: rmse/mae/r2 (trainer.py:128-152) from one scoring pass, with
+    ``RegressionEvaluator``'s formulas: rmse = √(SSE/n), mae = SAE/n,
+    r2 = 1 − SSE/((n−1)·var_samp(label))."""
+    err = F.col(label).cast("double") - F.col("prediction")
+    n, sse, sae, var = model.transform(test_df).agg(
+        F.count("*"), F.sum(err * err), F.sum(F.abs(err)),
+        F.var_samp(F.col(label).cast("double")),
+    ).first()
+    return {"rmse": math.sqrt(sse / n), "mae": sae / n, "r2": 1 - sse / ((n - 1) * var)}
 
 
 def train_and_evaluate(

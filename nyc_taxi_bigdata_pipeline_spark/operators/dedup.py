@@ -701,14 +701,14 @@ def prefix_join_sets(
     Shuffles: shingle build (1 distinct), freq agg (vocab-sized), per-doc
     rank window, candidate equi-join, verify. The shingle frame is
     referenced by freq, ranks, sizes and the verify under different
-    keys, and the ranks feed both sides of the candidate join through a
-    frontier that ends in a Filter or Window, not an exchange —
-    exchange reuse cannot dedup differently-keyed consumers (CLAUDE.md),
-    so both are lazily localCheckpointed inside the operator (Jaccard
-    stages its prefix-filtered ranks, containment its full ranks). The
-    verify reads the same shingle checkpoint instead of re-running the
+    keys — exchange reuse cannot dedup differently-keyed consumers
+    (CLAUDE.md) — so it is lazily localCheckpointed inside the operator,
+    and the verify reads that checkpoint instead of re-running the
     corpus explode+hash+distinct (r12: arrays 0.9 s vs 3.3 s rebuilt at
-    73.5k candidates, sf0.1).
+    73.5k candidates, sf0.1). The ranks, which feed both sides of the
+    candidate join, are not staged: unstaging them read 0.96× (Jaccard)
+    and 1.00× (containment) staged time on the salted 10× tier
+    (reports/receipts/nockpt_10x_prefix_join_sets_ranks.json, best of 5).
 
     The freq / sizes / candidate joins carry explicit ``merge`` hints:
     every one of those frames SCALES WITH THE CORPUS (vocabulary by
@@ -745,9 +745,6 @@ def prefix_join_sets(
     )
     if m.symmetric:
         ranked = ranked.filter(prefix)
-    # staged: both sides of the candidate join read the ranks (same
-    # receipt: jaccard 0.97× (flat), containment 1.08×)
-    ranked = ranked.localCheckpoint(eager=False)
     probe = ranked if m.symmetric else ranked.filter(prefix)
 
     def side(frame: DataFrame, pair_col: str, s: str) -> DataFrame:

@@ -6,6 +6,9 @@ Design (SURVEY §7.3): without a transactional store, idempotency =
 (b) left-anti join against the existing table on that key, then
 (c) append only the survivors.
 
+``insert_if_absent`` is that sink for a parquet table; the gold zone and
+the streaming upsert only ever append through it.
+
 At 100 TB: the anti join shuffles both sides on the key — acceptable for
 dim tables (tiny) and for fact loads scoped to one month partition
 (the existing side is pruned to the same partition before the join).
@@ -16,7 +19,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+
+from ..sources.fs import hadoop_path_exists
 
 
 def dedupe_on_key(df: DataFrame, key: Sequence[str]) -> DataFrame:
@@ -45,6 +50,29 @@ def anti_dup_append(
         c = batch[k].eqNullSafe(existing[k])
         cond = c if cond is None else (cond & c)
     return batch.join(existing.select(*key), on=cond, how="left_anti")
+
+
+def insert_if_absent(
+    incoming: DataFrame,
+    path: str,
+    key: Sequence[str],
+    prune: Column | None = None,
+) -> None:
+    """Append to the parquet table at ``path`` the rows of ``incoming``
+    whose key it lacks (existing key wins), cast to the table's schema;
+    an absent table is written whole. ``prune`` filters the existing
+    side and must keep every row an incoming key can match. An existing
+    but unreadable table raises rather than taking the absent path."""
+    spark = incoming.sparkSession
+    if not hadoop_path_exists(spark, path):
+        anti_dup_append(incoming, None, key).write.parquet(path)
+        return
+    existing = spark.read.parquet(path)
+    pruned = existing if prune is None else existing.filter(prune)
+    fresh = anti_dup_append(incoming, pruned, key)
+    fresh.select(
+        *[F.col(f.name).cast(f.dataType) for f in existing.schema.fields]
+    ).write.mode("append").parquet(path)
 
 
 def apply_cdc(

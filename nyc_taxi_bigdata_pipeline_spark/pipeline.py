@@ -4,6 +4,9 @@ quality gates → (ML when eligible), with backfill as a driver-side loop.
 The Airflow DAG's task graph (full_pipeline_dag.py:82-594) collapses
 into one function per month; SLAs/retries belong to whatever scheduler
 invokes this, the data logic lives here.
+
+The gold zone is append-only: new fact rows and dim keys go through
+``operators/upsert.insert_if_absent``; constant dims are written once.
 """
 
 from __future__ import annotations
@@ -16,10 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import ingest, quality, warehouse
 from .functions.datetime_parity import month_window, sliding_months
+from .operators.upsert import insert_if_absent
 from .sources.fs import hadoop_path_exists
 from .ml.features import build_feature_table
 from .ml.registry import ModelRegistry
 from .ml.train import TrainResult, train_and_evaluate
+
+CONSTANT_DIMS = ("dim_payment_type", "dim_ratecode", "dim_vendor", "dim_time")
 
 
 @dataclass
@@ -58,61 +64,36 @@ def run_month(
     res.checks.append(quality.min_rowcount_check(counts["rows_out"], "silver", min_rows))
 
     clean = ingest.read_silver(spark, silver_path, [(year, month)])
-    fact_incoming = warehouse.build_fact(clean)
-
-    fact_path = str(Path(gold_path) / "fact_trip")
-    # S4 Hadoop FS probe (not os.path): works on HDFS/S3A, not just the
-    # driver's local disk
-    existing = None
-    if hadoop_path_exists(spark, fact_path):
-        # clean_month keeps only in-month pickups and pickup_date is part
-        # of the natural key, so no other month's row can match
-        start, end = month_window(year, month)
-        existing = spark.read.parquet(fact_path).filter(
-            (F.col("pickup_date") >= F.lit(start).cast("date"))
-            & (F.col("pickup_date") < F.lit(end).cast("date"))
-        )
-    new_rows = warehouse.load_fact_idempotent(fact_incoming, existing)
-    new_rows.write.mode("append").parquet(fact_path)
+    gold = Path(gold_path)
+    fact_path = str(gold / "fact_trip")
+    # clean_month keeps only in-month pickups and pickup_date is part of
+    # the natural key, so no other month's row can match
+    start, end = month_window(year, month)
+    warehouse.load_fact_idempotent(
+        warehouse.build_fact(clean), fact_path,
+        (F.col("pickup_date") >= F.lit(start).cast("date"))
+        & (F.col("pickup_date") < F.lit(end).cast("date")),
+    )
 
     fact = spark.read.parquet(fact_path)
     res.counts["fact_rows"] = fact.count()
     res.checks.append(quality.min_rowcount_check(res.counts["fact_rows"], "fact", min_rows))
 
-    # dims are rebuilt from THIS month's clean data, then merged
-    # insert-if-absent with the existing gold dim — keys observed only in
-    # earlier months ('Unknown' location ids, prior dates) must survive
-    # the rebuild or prior facts vanish from inner-join analytics.
-    # Mirrors dw_load_incremental.sql's insert-if-absent and stays
-    # O(month + dim), never a scan of the full fact history.
-    dims = warehouse.seed_enum_dims(spark)
-    dims["dim_location"] = _merge_existing_dim(
-        spark, warehouse.build_dim_location(zone_lookup, clean),
-        str(Path(gold_path) / "dim_location"), "location_id",
+    # seeded once, as dw_load_reference.sql does: an append of nothing
+    # would still add an empty file every month (S4 Hadoop FS probe)
+    absent = [n for n in CONSTANT_DIMS if not hadoop_path_exists(spark, str(gold / n))]
+    if absent:
+        seeds = {**warehouse.seed_enum_dims(spark), "dim_time": warehouse.build_dim_time(spark)}
+        for name in absent:
+            seeds[name].write.parquet(str(gold / name))
+    # dw_load_incremental.sql: keys only earlier months saw ('Unknown'
+    # location ids, prior dates) stay for their facts' inner joins
+    insert_if_absent(
+        warehouse.build_dim_location(zone_lookup, clean),
+        str(gold / "dim_location"), ["location_id"],
     )
-    dims["dim_date"] = _merge_existing_dim(
-        spark, warehouse.build_dim_date(clean),
-        str(Path(gold_path) / "dim_date"), "date_id",
-    )
-    dims["dim_time"] = warehouse.build_dim_time(spark)
-    for name, df in dims.items():
-        df.write.mode("overwrite").parquet(str(Path(gold_path) / name))
+    insert_if_absent(warehouse.build_dim_date(clean), str(gold / "dim_date"), ["date_id"])
     return res
-
-
-def _merge_existing_dim(
-    spark: SparkSession, new_dim: DataFrame, path: str, key: str
-) -> DataFrame:
-    """Insert-if-absent dim merge: carry forward existing dim rows whose
-    key the new build didn't observe. The eager local checkpoint
-    materializes the merge (dims are bounded by design — zone count /
-    calendar days) and cuts its lineage, which breaks the
-    read-from-path → overwrite-same-path cycle."""
-    if not hadoop_path_exists(spark, path):
-        return new_dim
-    old = spark.read.parquet(path)
-    carried = old.join(new_dim.select(key), [key], "left_anti")
-    return new_dim.unionByName(carried).localCheckpoint(eager=True)
 
 
 def backfill(
@@ -122,18 +103,17 @@ def backfill(
     silver_path: str,
     gold_path: str,
     min_rows: int = quality.MIN_ROWCOUNT,
-    stop_on_fail: bool = True,
 ) -> list[MonthRunResult]:
     """Q7 backfill contract: months processed strictly in order, one at a
-    time (max_active_runs=1 semantics), halting on a FAILed gate unless
-    told otherwise (full_pipeline_dag.py:82-94)."""
+    time (max_active_runs=1 semantics), halting on a FAILed gate
+    (full_pipeline_dag.py:82-94)."""
     results: list[MonthRunResult] = []
     for year, month, raw in sorted(month_frames, key=lambda t: (t[0], t[1])):
         res = run_month(
             spark, raw, zone_lookup, silver_path, gold_path, year, month, min_rows
         )
         results.append(res)
-        if stop_on_fail and not res.ok:
+        if not res.ok:
             break
     return results
 

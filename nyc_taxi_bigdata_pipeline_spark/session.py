@@ -68,12 +68,10 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def driver_heap_mb(requested_gb: str | None, meminfo: str | None, cgroup_max: str | None) -> int:
-    """Driver heap in MB: ``requested_gb`` (default 32) capped at 60 % of
-    the smaller of ``/proc/meminfo``'s MemTotal and the cgroup v2
-    ``memory.max`` limit, given as those files' text (None when
-    unreadable; a ``max`` limit means none)."""
-    heap_mb = float(requested_gb or DEFAULT_HEAP_GB) * 1024
+def host_memory_mb(meminfo: str | None, cgroup_max: str | None) -> float | None:
+    """The smaller of ``/proc/meminfo``'s MemTotal and the cgroup v2
+    ``memory.max`` limit in MB, given as those files' text (None when
+    unreadable; a ``max`` limit means none); None when neither is known."""
     limits = [
         int(line.split()[1]) * 1024
         for line in (meminfo or "").splitlines()
@@ -81,12 +79,18 @@ def driver_heap_mb(requested_gb: str | None, meminfo: str | None, cgroup_max: st
     ]
     if cgroup_max and cgroup_max.strip() != "max":
         limits.append(int(cgroup_max))
-    if limits:
-        heap_mb = min(heap_mb, HOST_HEAP_FRACTION * min(limits) / 2**20)
-    return int(heap_mb)
+    return min(limits) / 2**20 if limits else None
 
 
-def _read_text(path: str) -> str | None:
+def driver_heap_mb(requested_gb: str | None, meminfo: str | None, cgroup_max: str | None) -> int:
+    """Driver heap in MB: ``requested_gb`` (default 32) capped at 60 % of
+    ``host_memory_mb``."""
+    heap_mb = float(requested_gb or DEFAULT_HEAP_GB) * 1024
+    host_mb = host_memory_mb(meminfo, cgroup_max)
+    return int(heap_mb if host_mb is None else min(heap_mb, HOST_HEAP_FRACTION * host_mb))
+
+
+def read_text(path: str) -> str | None:
     try:
         with open(path) as f:
             return f.read()
@@ -115,8 +119,8 @@ def get_spark(
     cpus = default_parallelism()
     heap_mb = driver_heap_mb(
         os.environ.get("SPARK_GRAFT_MEM_GB"),
-        _read_text("/proc/meminfo"),
-        _read_text("/sys/fs/cgroup/memory.max"),
+        read_text("/proc/meminfo"),
+        read_text("/sys/fs/cgroup/memory.max"),
     )
     # the preload daemon module (BUILD_CONFS) must be importable by the
     # worker daemon, whose PYTHONPATH comes from the JVM's environment —

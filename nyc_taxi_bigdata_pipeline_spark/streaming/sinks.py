@@ -6,8 +6,8 @@
   the watermark horizon (bounded state), the streaming analogue of the
   warehouse's anti-dup insert.
 - ``foreach_batch_upsert``: idempotent micro-batch append into a
-  parquet gold table using the same left-anti natural-key strategy as
-  the batch warehouse (operators/upsert.py) — exactly-once-per-key
+  parquet gold table through the batch warehouse's own sink
+  (``operators/upsert.insert_if_absent``) — exactly-once-per-key
   semantics on top of at-least-once delivery.
 """
 
@@ -20,8 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import broadcast
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.upsert import anti_dup_append
-from ..sources.fs import hadoop_path_exists
+from ..operators.upsert import insert_if_absent
 
 
 def enrich_stream(events: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
@@ -50,22 +49,13 @@ def foreach_batch_upsert(
     checkpoint: str,
 ) -> StreamingQuery:
     """Write a stream into a parquet gold table idempotently: every
-    micro-batch is left-anti-joined against the current table on the
-    natural key before appending — re-delivered batches (failure/retry)
-    insert nothing the second time. Only an absent table counts as the
-    first batch: a read error on an existing table fails the batch
-    rather than appending it without the anti-dup join."""
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        existing = None
-        if hadoop_path_exists(spark, gold_path):
-            existing = spark.read.parquet(gold_path)
-        fresh = anti_dup_append(batch, existing, natural_key)
-        fresh.write.mode("append").parquet(gold_path)
-
+    micro-batch goes through ``insert_if_absent`` on the natural key, so
+    re-delivered batches (failure/retry) insert nothing the second time
+    and a read error on an existing table fails the batch."""
     return (
-        stream.writeStream.foreachBatch(upsert)
+        stream.writeStream.foreachBatch(
+            lambda batch, _: insert_if_absent(batch, gold_path, natural_key)
+        )
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

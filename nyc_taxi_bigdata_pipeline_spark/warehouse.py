@@ -1,10 +1,11 @@
 """Silver→gold star schema (ex03 parity, ``dw_creation.sql`` +
 ``dw_load_incremental.sql`` re-expressed Spark-native).
 
-The Postgres DW becomes Spark gold tables: enum dims seeded from
-reference VALUES lists, discovered dims via union-distinct + anti-dup
-append, ``dim_date``/``dim_time`` derived, and ``fact_trip`` built with
-date/time keys and the composite-natural-key idempotent load.
+The Postgres DW becomes append-only Spark gold tables: enum dims and
+the generated ``dim_time`` seeded once, ``dim_location`` (union-distinct
+of observed ids) and ``dim_date`` appended insert-if-absent each month,
+and ``fact_trip`` built with date/time keys and appended through the
+composite-natural-key idempotent load.
 
 All dims are broadcast-sized (7–265 rows, dim_date ≤ a few thousand,
 dim_time ≤ 1440) — every fact→dim join in analytics broadcasts.
@@ -14,10 +15,10 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from .functions.datetime_parity import dow_pg, time_key
-from .operators.upsert import anti_dup_append, union_distinct_keys
+from .operators.upsert import insert_if_absent, union_distinct_keys
 from .schema import (
     FACT_NATURAL_KEY,
     PAYMENT_TYPES,
@@ -135,15 +136,11 @@ def build_fact(trips_clean: DataFrame) -> DataFrame:
     )
 
 
-def load_fact_idempotent(incoming_fact: DataFrame, existing_fact: DataFrame | None) -> DataFrame:
+def load_fact_idempotent(incoming_fact: DataFrame, fact_path: str, prune: Column | None = None) -> None:
     """J6: ON CONFLICT DO NOTHING on the composite natural key
-    (indexes.sql:30-37). Returns only the NEW rows to append.
-
-    ``existing_fact`` may be pruned to the loaded month: the natural
-    key holds ``pickup_date``, so rows of other months never match.
-    ``pipeline.run_month`` passes the fact filtered to the month's
-    ``pickup_date`` range, which lets parquet min/max statistics skip
-    other months' files and keeps the anti join O(month), not
-    O(history).
-    """
-    return anti_dup_append(incoming_fact, existing_fact, FACT_NATURAL_KEY)
+    (indexes.sql:30-37): append to ``fact_path`` only the rows whose
+    key it lacks. ``pipeline.run_month`` prunes the existing fact to
+    the month's ``pickup_date`` range (the key holds ``pickup_date``),
+    so parquet statistics skip other months' files and the anti join
+    stays O(month), not O(history)."""
+    insert_if_absent(incoming_fact, fact_path, FACT_NATURAL_KEY, prune)

@@ -9,12 +9,18 @@ results (column-name sort, row sort, value canonicalization) and compares
 
 from __future__ import annotations
 
+import atexit
 import datetime as _dt
 import math
+import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 
 import duckdb
 import pandas as pd
+
+from nyc_taxi_bigdata_pipeline_spark.session import driver_heap_mb, host_memory_mb, read_text
 
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -22,8 +28,32 @@ TESTDATA_TABLES = (
 )
 
 
+def duck_memory_limit_mb(
+    requested_gb: str | None, meminfo: str | None, cgroup_max: str | None
+) -> int | None:
+    """DuckDB's memory limit next to the Spark driver in this process:
+    half of what the driver heap leaves of the host, so DuckDB, the heap,
+    the JVM's off-heap memory and Python stay under physical RAM
+    (DuckDB's own default, 80 % of RAM, does not see the JVM). Same
+    inputs as ``session.driver_heap_mb``; None when the host is unknown."""
+    host_mb = host_memory_mb(meminfo, cgroup_max)
+    if host_mb is None:
+        return None
+    heap_mb = driver_heap_mb(requested_gb, meminfo, cgroup_max)
+    return int((host_mb - heap_mb) / 2)
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    config = {"temp_directory": tempfile.mkdtemp(prefix="duck-oracle-")}
+    atexit.register(shutil.rmtree, config["temp_directory"], True)
+    limit_mb = duck_memory_limit_mb(
+        os.environ.get("SPARK_GRAFT_MEM_GB"),
+        read_text("/proc/meminfo"),
+        read_text("/sys/fs/cgroup/memory.max"),
+    )
+    if limit_mb is not None:
+        config["memory_limit"] = f"{limit_mb}MB"
+    con = duckdb.connect(config=config)
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -144,30 +144,36 @@ def test_ingest_month_observed_counts_with_no_rows_out(spark, raw_month, tmp_pat
     assert ingest_within(raw_month, 2024, 6) == {"rows_in": raw_month.count(), "rows_out": 0}
 
 
-def test_fact_load_with_duplicated_raw(spark, raw_month):
+def test_fact_load_with_duplicated_raw(spark, raw_month, tmp_path):
     """At-least-once upstream delivery: doubling the raw feed must not
     double the fact table (NK dedup inside the batch)."""
     clean = ingest.clean_month(raw_month, 2023, 1)
     doubled = clean.unionByName(clean)
-    once = warehouse.load_fact_idempotent(warehouse.build_fact(clean), None).count()
-    doubled_load = warehouse.load_fact_idempotent(warehouse.build_fact(doubled), None).count()
-    assert doubled_load == once
+    once, twice = str(tmp_path / "once"), str(tmp_path / "doubled")
+    warehouse.load_fact_idempotent(warehouse.build_fact(clean), once)
+    warehouse.load_fact_idempotent(warehouse.build_fact(doubled), twice)
+    assert spark.read.parquet(twice).count() == spark.read.parquet(once).count()
 
 
-def test_fact_idempotent_load(spark, raw_month):
+def test_fact_idempotent_load(spark, raw_month, tmp_path):
     clean = ingest.clean_month(raw_month, 2023, 1)
     fact = warehouse.build_fact(clean)
     assert fact.columns[0] == "trip_id"
-    first = warehouse.load_fact_idempotent(fact, None)
-    n_first = first.count()
+    path = str(tmp_path / "fact_trip")
+
+    def rows() -> int:
+        return spark.read.parquet(path).count()
+
+    warehouse.load_fact_idempotent(fact, path)
+    n_first = rows()
     # natural-key dedup inside the batch
     assert n_first == fact.dropDuplicates(list(warehouse.FACT_NATURAL_KEY)).count()
     # loading the same month against itself → zero new rows
-    again = warehouse.load_fact_idempotent(fact, first)
-    assert again.count() == 0
+    warehouse.load_fact_idempotent(fact, path)
+    assert rows() == n_first
     # partial overlap: half the existing + new month → only new month rows in
     feb = warehouse.build_fact(
         ingest.clean_month(make_trips_month(spark, 2023, 2, n=500), 2023, 2)
     )
-    mixed = warehouse.load_fact_idempotent(fact.union(feb), first)
-    assert mixed.count() == feb.dropDuplicates(list(warehouse.FACT_NATURAL_KEY)).count()
+    warehouse.load_fact_idempotent(fact.union(feb), path)
+    assert rows() - n_first == feb.dropDuplicates(list(warehouse.FACT_NATURAL_KEY)).count()

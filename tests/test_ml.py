@@ -49,6 +49,24 @@ def test_train_and_evaluate(trained):
     assert trained.train_rows > 0 and trained.test_rows > 0
 
 
+def test_evaluate_matches_regression_evaluator(trained, feature_frames):
+    """The one-pass metrics equal RegressionEvaluator's three passes."""
+    import math
+
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    from nyc_taxi_bigdata_pipeline_spark.schema import ML_LABEL
+
+    _, te = feature_frames
+    preds = trained.model.transform(te)
+    got = train.evaluate(trained.model, te)
+    for metric in ("rmse", "mae", "r2"):
+        want = RegressionEvaluator(
+            labelCol=ML_LABEL, predictionCol="prediction", metricName=metric
+        ).evaluate(preds)
+        assert math.isclose(got[metric], want, rel_tol=1e-9), metric
+
+
 def test_multi_column_encoders_match_per_column_stack(feature_frames):
     """build_pipeline's one multi-column StringIndexer + OneHotEncoder
     must give the labels and model metrics of the reference's per-column

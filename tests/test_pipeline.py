@@ -46,47 +46,109 @@ def test_run_month_and_backfill(spark, tmp_path):
 
 
 def test_dims_keep_prior_month_keys(spark, tmp_path):
-    """Rebuilding dims on month N must not drop 'Unknown' location ids
-    (or dates) that only month N-1 observed — otherwise prior facts
-    vanish from inner-join analytics. Re-running month N-1 afterwards
-    (its fact load sees only its own month of the fact) adds no fact
-    rows, and every merge keeps the first build's exact dim schema."""
+    """Dims are append-only, existing key wins: rebuilding them on month
+    N must not drop 'Unknown' location ids (or dates) that only month
+    N-1 observed — otherwise prior facts vanish from inner-join
+    analytics. Re-running month N-1 afterwards (its fact load sees only
+    its own month of the fact) adds no fact rows, no run writes a
+    constant dim twice, every dim key stays unique, and every append
+    keeps the first writer's exact dim schema — also when that writer
+    was pyarrow (int32 keys, as the benchmark stages its gold zone)."""
+    import datetime as dt
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    silver = str(tmp_path / "silver")
-    gold = str(tmp_path / "gold")
+    from nyc_taxi_bigdata_pipeline_spark.schema import PAYMENT_TYPES, RATECODES, VENDORS
+
     zones = make_zone_lookup(spark)
     jan = make_trips_month(spark, 2023, 1, n=800).withColumn(
         "PULocationID", F.lit(9999)  # id absent from the zone CSV
     )
+    feb_raw = make_trips_month(spark, 2023, 2, n=800)
     keys = {"dim_location": "location_id", "dim_date": "date_id"}
 
-    def dims():
+    def run(gold, raw, month):
+        return pipeline.run_month(
+            spark, raw, zones, str(tmp_path / "silver"), str(gold), 2023, month, min_rows=100
+        )
+
+    def dims(gold):
         out = {}
         for name, key in keys.items():
-            df = spark.read.parquet(str(tmp_path / "gold" / name))
-            out[name] = (df.schema, {r[0] for r in df.select(key).collect()})
+            df = spark.read.parquet(str(gold / name))
+            got = [r[0] for r in df.select(key).collect()]
+            assert len(got) == len(set(got)), name
+            out[name] = (df.schema, set(got))
         return out
 
-    pipeline.run_month(spark, jan, zones, silver, gold, 2023, 1, min_rows=100)
-    after_jan = dims()
-    feb = pipeline.run_month(
-        spark, make_trips_month(spark, 2023, 2, n=800), zones, silver, gold, 2023, 2,
-        min_rows=100,
-    )
-    after_feb = dims()
-    dim_loc = spark.read.parquet(str(tmp_path / "gold" / "dim_location"))
+    def constant_files(gold):
+        return {
+            name: sorted((f.name, f.stat().st_size) for f in (gold / name).iterdir())
+            for name in pipeline.CONSTANT_DIMS
+        }
+
+    gold = tmp_path / "gold"
+    run(gold, jan, 1)
+    after_jan, constants = dims(gold), constant_files(gold)
+    feb = run(gold, feb_raw, 2)
+    after_feb = dims(gold)
+    dim_loc = spark.read.parquet(str(gold / "dim_location"))
     assert dim_loc.filter(F.col("location_id") == 9999).count() == 1
-    dim_date = spark.read.parquet(str(tmp_path / "gold" / "dim_date"))
+    dim_date = spark.read.parquet(str(gold / "dim_date"))
     assert dim_date.filter(F.month("date_id") == 1).count() > 0
 
-    jan_again = pipeline.run_month(spark, jan, zones, silver, gold, 2023, 1, min_rows=100)
+    jan_again = run(gold, jan, 1)
     assert jan_again.counts["fact_rows"] == feb.counts["fact_rows"]
-    after_jan_again = dims()
+    after_jan_again = dims(gold)
+    assert constant_files(gold) == constants
     for name in keys:
         schema, first_keys = after_jan[name]
         assert after_feb[name][0] == after_jan_again[name][0] == schema
         assert first_keys <= after_feb[name][1] <= after_jan_again[name][1]
+
+    # a gold zone whose dims pyarrow wrote first
+    def enum(rows, key, name):
+        ids, names = zip(*rows)
+        return pa.table({key: pa.array(ids, pa.int32()), name: list(names)})
+
+    z = zones.collect()
+    minutes = np.arange(1440, dtype=np.int32)
+    seeded = {
+        "dim_payment_type": enum(PAYMENT_TYPES, "payment_type_id", "payment_description"),
+        "dim_ratecode": enum(RATECODES, "ratecode_id", "ratecode_description"),
+        "dim_vendor": enum(VENDORS, "vendor_id", "vendor_name"),
+        "dim_time": pa.table({
+            "time_id": [f"{m // 60:02d}:{m % 60:02d}" for m in minutes],
+            "hour": minutes // 60, "minute": minutes % 60,
+        }),
+        "dim_location": pa.table({
+            "location_id": pa.array([r[0] for r in z], pa.int32()),
+            "borough": [r[1] for r in z], "zone": [r[2] for r in z],
+            "service_zone": [r[3] for r in z],
+        }),
+        "dim_date": pa.table({
+            "date_id": pa.array([dt.date(2022, 12, 31)], pa.date32()),
+            **{c: pa.array([v], pa.int32())
+               for c, v in (("year", 2022), ("month", 12), ("day", 31), ("day_of_week", 6))},
+        }),
+    }
+    gold = tmp_path / "gold_pyarrow"
+    for name, table in seeded.items():
+        (gold / name).mkdir(parents=True)
+        pq.write_table(table, gold / name / "part-0.parquet")
+    constants = constant_files(gold)
+    run(gold, jan, 1)
+    assert constant_files(gold) == constants
+    got = dims(gold)
+    assert {9999, 1} <= got["dim_location"][1]
+    assert dt.date(2022, 12, 31) in got["dim_date"][1] and len(got["dim_date"][1]) > 1
+    for name in keys:
+        want = [(f.name, f.type) for f in seeded[name].schema]
+        for part in (gold / name).glob("*.parquet"):
+            assert [(f.name, f.type) for f in pq.read_schema(part)] == want, part
 
 
 @pytest.mark.slow

@@ -24,3 +24,13 @@ def test_cgroup_limit_below_memtotal_wins():
 def test_no_host_info_keeps_requested_or_default():
     assert driver_heap_mb(None, None, None) == 32 * 1024
     assert driver_heap_mb("3", "", "max") == 3 * 1024
+
+
+def test_duck_oracle_limit_fits_beside_the_driver_heap():
+    from .oracle_harness import duck_memory_limit_mb
+
+    # 15 GB host, default heap 9 GB: DuckDB takes half of the 6 GB left
+    assert duck_memory_limit_mb(None, MEMINFO_15G, None) == int(0.4 * 15 * 1024 / 2)
+    four_gb = str(4 * 2**30) + "\n"
+    assert duck_memory_limit_mb("1", MEMINFO_15G, four_gb) == (4 - 1) * 1024 // 2
+    assert duck_memory_limit_mb(None, None, None) is None

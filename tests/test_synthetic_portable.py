@@ -9,6 +9,7 @@ import duckdb
 import pyspark.sql.functions as F
 
 from nyc_taxi_bigdata_pipeline_spark import ingest, warehouse
+from nyc_taxi_bigdata_pipeline_spark.operators.upsert import dedupe_on_key
 from nyc_taxi_bigdata_pipeline_spark.schema import FACT_NATURAL_KEY
 from nyc_taxi_bigdata_pipeline_spark.sources.synthetic import (
     make_trips_month_portable,
@@ -96,6 +97,6 @@ def test_taxi_pipeline_dedup_bites(spark):
     base_n = warehouse.build_fact(ingest.clean_month(raw, 2023, 1)).count()
     clean = ingest.clean_month(planted, 2023, 1)
     pre_dedup = warehouse.build_fact(clean).count()
-    deduped = warehouse.load_fact_idempotent(warehouse.build_fact(clean), None).count()
+    deduped = dedupe_on_key(warehouse.build_fact(clean), FACT_NATURAL_KEY).count()
     assert pre_dedup > base_n  # planting survived cleaning
     assert deduped == base_n
