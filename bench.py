@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nyc_taxi_bigdata_pipeline_spark.benchqueries import REGISTRY
-from nyc_taxi_bigdata_pipeline_spark.session import get_spark
+from nyc_taxi_bigdata_pipeline_spark.session import default_parallelism, get_spark
 
 # The r10-era 30-query headline set, frozen so cross-round band checks
 # (legacy30 / calib_par ≈ 47, pinned r11) survive headline growth: the
@@ -152,6 +152,21 @@ def _release_query_state(spark) -> None:
         pass  # release is hygiene, never a bench failure
 
 
+def _host_facts(spark) -> dict:
+    """The host facts perfbench's reports give: the cores the session
+    was sized for, its default parallelism and its driver heap in GB
+    (Spark's own parse of ``spark.driver.memory``)."""
+    sc = spark.sparkContext
+    heap_mb = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsMb(
+        sc.getConf().get("spark.driver.memory", "1g")
+    )
+    return {
+        "cpus": default_parallelism(),
+        "default_parallelism": sc.defaultParallelism,
+        "driver_heap_gb": round(heap_mb / 1024, 2),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -233,6 +248,7 @@ def main() -> None:
         "calib_par_sec": round(calib_par, 4),
         "sf": sf,
     }
+    payload.update(_host_facts(spark))
     if all(n in timings for n in LEGACY30):
         legacy30 = sum(timings[n] for n in LEGACY30)
         payload["legacy30_sec"] = round(legacy30, 4)

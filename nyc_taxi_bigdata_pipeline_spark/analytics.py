@@ -5,6 +5,14 @@ The reference's Streamlit dashboard runs 5 SQL shapes against Postgres
 is a parameterized DataFrame function over the star schema, with the
 same filter surface (date range BETWEEN, payment/borough/zone IN-lists —
 P9/P10). Catalyst replaces the Postgres planner; all dims broadcast.
+
+The per-day and per-hour series sort inside one partition
+(``coalesce(1).sortWithinPartitions``) rather than with a global
+``orderBy``: their result is one row per day or hour by construction,
+so one partition holds it at any scale, while a global sort
+range-partitions its input (a sampling job plus a sort shuffle) to
+order at most a few hundred rows. The partial aggregate and its shuffle
+stay parallel; only the final merge runs in one task.
 """
 
 from __future__ import annotations
@@ -73,9 +81,12 @@ def date_bounds(fact: DataFrame) -> DataFrame:
 def daily_trips(fact: DataFrame, dims: dict[str, DataFrame], flt: TripFilters | None = None) -> DataFrame:
     """A3 trips per day (app.py:287-300)."""
     df = _enriched(fact, dims, flt or TripFilters())
-    return df.groupBy("pickup_date").agg(
-        F.count("*").alias("trips"), F.sum("total_amount").alias("revenue")
-    ).orderBy("pickup_date")
+    return (
+        df.groupBy("pickup_date")
+        .agg(F.count("*").alias("trips"), F.sum("total_amount").alias("revenue"))
+        .coalesce(1)
+        .sortWithinPartitions("pickup_date")
+    )
 
 
 def hourly_trips(fact: DataFrame, dims: dict[str, DataFrame], flt: TripFilters | None = None) -> DataFrame:
@@ -84,7 +95,11 @@ def hourly_trips(fact: DataFrame, dims: dict[str, DataFrame], flt: TripFilters |
     short-circuit, SURVEY §2.4)."""
     df = _enriched(fact, dims, flt or TripFilters())
     hr = F.substring("pickup_time", 1, 2).cast("int").alias("hour")
-    return df.groupBy(hr).agg(F.count("*").alias("trips")).orderBy("hour")
+    return (
+        df.groupBy(hr).agg(F.count("*").alias("trips"))
+        .coalesce(1)
+        .sortWithinPartitions("hour")
+    )
 
 
 def payment_breakdown(

@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
 from pyspark.ml.regression import GBTRegressor
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from ..schema import ML_CATEGORICAL, ML_LABEL, ML_NUMERIC
 
@@ -87,18 +87,23 @@ def train_and_evaluate(
     test_df: DataFrame,
     pipeline: Pipeline | None = None,
 ) -> TrainResult:
-    """M5+M9: cache both splits, fit, evaluate (trainer.py:109,186-212)."""
+    """M5+M9: cache the train split, fit, evaluate (trainer.py:109,186-212).
+
+    The train split is cached and counted up front: the fit reads it
+    several times, and the GBT's reads are RDD actions, which fire no
+    observation.
+    The test split is read once, by ``evaluate``'s aggregate, so it is
+    neither cached nor counted on its own; its rows are observed on
+    that aggregate's job."""
     pipeline = pipeline or build_pipeline()
     train_df = train_df.cache()
-    test_df = test_df.cache()
     try:
         train_rows = train_df.count()
-        test_rows = test_df.count()
         t0 = time.perf_counter()
         model = pipeline.fit(train_df)
         train_seconds = time.perf_counter() - t0
-        metrics = evaluate(model, test_df)
-        return TrainResult(model, metrics, train_rows, test_rows, train_seconds)
+        seen = Observation()
+        metrics = evaluate(model, test_df.observe(seen, F.count(F.lit(1)).alias("n")))
+        return TrainResult(model, metrics, train_rows, seen.get["n"], train_seconds)
     finally:
         train_df.unpersist()
-        test_df.unpersist()

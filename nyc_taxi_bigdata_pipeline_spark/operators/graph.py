@@ -31,7 +31,7 @@ e/nodes are unpersisted on exit — no cache leak, no unbounded lineage.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 SCALE = 10**12  # rank mass per node; 25 nodes × 1e12 × max-weight ≪ 2^63
 
@@ -161,6 +161,16 @@ def pagerank_fixed_point(
         nodes.unpersist()
 
 
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` eagerly localCheckpointed, with its row count observed on
+    the checkpoint job itself. The count needs that job: were the
+    checkpoint a no-op (``scripts/ab.py``'s ``nockpt`` arm scoped to
+    this line), the observation would never fire."""
+    seen = Observation()
+    cp = df.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return cp, seen.get["n"]
+
+
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -185,9 +195,10 @@ def bfs_distances(
     back to shuffle equi-joins with identical results) — the edge
     table is then never shuffled, and the only per-level exchange is
     the min-dist aggregate over the frontier fan-out. Frontier sizes
-    come free from the per-level count that doubles as the
-    empty-frontier exit probe; visited size is the running sum
-    (frontiers are disjoint by construction of the anti join).
+    come free from an ``Observation`` on each frontier's checkpoint job
+    (no separate count job per level) and double as the empty-frontier
+    exit probe; visited size is the running sum (frontiers are disjoint
+    by construction of the anti join).
 
     Iterative-loop hygiene (the PageRank depth-OOM lesson): each new
     frontier is eagerly localCheckpointed, so plan depth and recompute
@@ -199,11 +210,10 @@ def bfs_distances(
     MIN(dist) per node (benchqueries/graph_ops.graph_bfs_hops pins the
     equivalence against DuckDB's WITH RECURSIVE).
     """
-    frontier = sources.toDF("node").distinct().withColumn(
-        "dist", F.lit(0).cast("int")
-    ).localCheckpoint(eager=True)
+    frontier, n_frontier = _checkpoint_counted(
+        sources.toDF("node").distinct().withColumn("dist", F.lit(0).cast("int"))
+    )
     visited = frontier
-    n_frontier = frontier.count()
     n_visited = n_frontier
     e = edges.select(
         F.col(src).alias("node"), F.col(dst).alias("__nxt")
@@ -217,15 +227,13 @@ def bfs_distances(
         v_in = visited.select("node")
         if n_visited <= BROADCAST_NODES_MAX:
             v_in = F.broadcast(v_in)
-        nxt = (
+        nxt, n_frontier = _checkpoint_counted(
             f_in.join(e, "node")
             .select(F.col("__nxt").alias("node"), (F.col("dist") + 1).alias("dist"))
             .join(v_in, "node", "left_anti")
             .groupBy("node")
             .agg(F.min("dist").cast("int").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        n_frontier = nxt.count()
         if n_frontier == 0:
             break
         visited = visited.unionByName(nxt)

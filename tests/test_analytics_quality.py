@@ -49,9 +49,12 @@ def test_daily_and_hourly(spark, star):
     daily = analytics.daily_trips(fact, dims).collect()
     assert sum(r["trips"] for r in daily) == fact.count()
     assert all(r["pickup_date"].month == 1 for r in daily)
+    days = [r["pickup_date"] for r in daily]
+    assert days == sorted(set(days))
     hourly = analytics.hourly_trips(fact, dims).collect()
     assert sum(r["trips"] for r in hourly) == fact.count()
-    assert {r["hour"] for r in hourly} <= set(range(24))
+    hours = [r["hour"] for r in hourly]
+    assert hours == sorted(set(hours)) and set(hours) <= set(range(24))
 
 
 def test_payment_breakdown_and_top_zones(spark, star):

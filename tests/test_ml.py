@@ -42,11 +42,13 @@ def trained(feature_frames):
     return train.train_and_evaluate(tr, te, train.build_pipeline(max_iter=10))
 
 
-def test_train_and_evaluate(trained):
+def test_train_and_evaluate(trained, feature_frames):
     m = trained.metrics
     assert m["rmse"] < 10 and m["mae"] < 15 and m["r2"] > 0  # reference gates
     assert m["mae"] <= m["rmse"] + 1e-9  # consistency (test_ml_quality.py:205-221)
-    assert trained.train_rows > 0 and trained.test_rows > 0
+    tr, te = feature_frames
+    # test_rows is observed on evaluate's aggregate, not counted apart
+    assert (trained.train_rows, trained.test_rows) == (tr.count(), te.count())
 
 
 def test_evaluate_matches_regression_evaluator(trained, feature_frames):

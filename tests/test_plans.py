@@ -665,3 +665,72 @@ def test_grouped_quantile_operator_window_specs_observed(spark, monkeypatch):
     assert specs, "leaf rank pass never ran — fixture no longer forces it"
     for cols in specs:
         assert len(cols) >= 2, f"window partitioned by {cols}"
+
+
+# ------------------------------------------------------------- dashboard
+
+
+@pytest.fixture(scope="module")
+def dashboard_gold(spark, tmp_path_factory):
+    """One month's star schema in run_month's layout."""
+    from nyc_taxi_bigdata_pipeline_spark import pipeline
+
+    from .taxi_fixtures import make_trips_month, make_zone_lookup
+
+    d = tmp_path_factory.mktemp("dashboard")
+    gold = str(d / "gold")
+    pipeline.run_month(
+        spark, make_trips_month(spark, 2023, 1, n=800), make_zone_lookup(spark),
+        str(d / "silver"), gold, 2023, 1, min_rows=100,
+    )
+    return gold
+
+
+def _series_reference(fact, shape: str):
+    """The series shape as the reference writes it: a global orderBy."""
+    import pyspark.sql.functions as F
+
+    if shape == "daily_trips":
+        return fact.groupBy("pickup_date").agg(
+            F.count("*").alias("trips"), F.sum("total_amount").alias("revenue")
+        ).orderBy("pickup_date")
+    hr = F.substring("pickup_time", 1, 2).cast("int").alias("hour")
+    return fact.groupBy(hr).agg(F.count("*").alias("trips")).orderBy("hour")
+
+
+def _series_rows(rows) -> list[tuple]:
+    # a double sum's last bits follow the order partial sums merge in
+    return [tuple(round(v, 6) if isinstance(v, float) else v for v in r) for r in rows]
+
+
+@pytest.mark.parametrize("path", ["analytics", "sql"])
+@pytest.mark.parametrize("shape", ["daily_trips", "hourly_trips"])
+def test_dashboard_series_sort_in_one_partition(spark, dashboard_gold, path, shape):
+    """daily_trips and hourly_trips return one row per day or hour, so
+    they sort inside one partition: the executed plan holds no
+    range-partitioning exchange (a global sort's sampling job and sort
+    shuffle), and SQL hourly_trips reads no dim_time. Over a fact spread
+    across 4 partitions the rows and their order equal a global
+    orderBy's."""
+    import pyspark.sql.functions as F
+
+    from nyc_taxi_bigdata_pipeline_spark import analytics, sql_interface
+
+    sql_interface.register_star(spark, dashboard_gold)
+    fact = spark.read.parquet(f"{dashboard_gold}/fact_trip").repartition(4)
+    if path == "analytics":
+        dims = {d: spark.read.parquet(f"{dashboard_gold}/{d}")
+                for d in ("dim_location", "dim_payment_type")}
+        df = getattr(analytics, shape)(fact, dims)
+        ref = _series_reference(fact, shape)
+    else:
+        fact.createOrReplaceTempView("fact_trip")
+        df = sql_interface.dashboard_query(spark, shape, "2023-01-05", "2023-01-25")
+        ref = _series_reference(
+            fact.filter(F.col("pickup_date").between("2023-01-05", "2023-01-25")), shape
+        )
+    rows = df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan, plan
+    assert "dim_time" not in plan, plan
+    assert _series_rows(rows) == _series_rows(ref.collect())

@@ -1,8 +1,9 @@
-"""Driver-heap sizing from the host's memory (no JVM needed)."""
+"""Driver-heap sizing from the host's memory (no JVM needed), and the
+host facts ``bench.py`` reports from a live session."""
 
 from __future__ import annotations
 
-from nyc_taxi_bigdata_pipeline_spark.session import driver_heap_mb
+from nyc_taxi_bigdata_pipeline_spark.session import default_parallelism, driver_heap_mb
 
 MEMINFO_15G = "MemTotal:       15728640 kB\nMemFree:        14000000 kB\n"
 
@@ -34,3 +35,13 @@ def test_duck_oracle_limit_fits_beside_the_driver_heap():
     four_gb = str(4 * 2**30) + "\n"
     assert duck_memory_limit_mb("1", MEMINFO_15G, four_gb) == (4 - 1) * 1024 // 2
     assert duck_memory_limit_mb(None, None, None) is None
+
+
+def test_bench_host_facts_read_the_session(spark):
+    import bench
+
+    facts = bench._host_facts(spark)
+    assert facts["cpus"] == default_parallelism()
+    assert facts["default_parallelism"] == spark.sparkContext.defaultParallelism
+    heap_mb = int(spark.sparkContext.getConf().get("spark.driver.memory").rstrip("m"))
+    assert facts["driver_heap_gb"] == round(heap_mb / 1024, 2)

@@ -110,9 +110,18 @@ def test_register_star_and_dashboard_sql(spark, tmp_path):
         assert df.count() > 0
     kpis = sql_interface.dashboard_query(spark, "kpis", "2023-01-01", "2023-01-31").first()
     assert kpis["total_trips"] == total
-    # join-parity: hourly via dim_time == analytics hour() shortcut
+    # join-parity: the hour taken from the time key == the reference's
+    # dim_time join, rows and order
     hourly = sql_interface.dashboard_query(spark, "hourly_trips", "2023-01-01", "2023-01-31")
+    joined = spark.sql("""
+        SELECT t.hour, COUNT(*) AS trips
+        FROM fact_trip f JOIN dim_time t ON f.pickup_time = t.time_id
+        WHERE f.pickup_date BETWEEN '2023-01-01' AND '2023-01-31'
+        GROUP BY t.hour ORDER BY t.hour""")
+    assert hourly.collect() == joined.collect()
     assert hourly.agg(F.sum("trips")).first()[0] == total
+    # any Hadoop path, not only a local directory
+    assert sql_interface.register_star(spark, "file://" + gold) == list(sql_interface.STAR_TABLES)
 
 
 # ------------------------------------------------------------- backfill
